@@ -28,13 +28,11 @@ final case class Cell(id: Long, face: Int, level: Int,
   def edge(k: Int): Vec3 = edgeRaw(k).normalize
 
   /** Closed containment incl. boundary (cell.go:462-491). */
-  def containsPoint(p: Vec3): Boolean = {
-    STUV.faceXYZToUV(face, p) match {
-      case None => false
-      case Some((u, v)) =>
-        val m = (1.125 + MachineEps) * MachineEps
-        u >= uLo - m && u <= uHi + m && v >= vLo - m && v <= vHi + m
-    }
+  def containsPoint(p: Vec3): Boolean = STUV.onFacePositiveSide(face, p) && {
+    val u = STUV.validFaceXYZtoU(face, p.x, p.y, p.z)
+    val v = STUV.validFaceXYZtoV(face, p.x, p.y, p.z)
+    val m = (1.125 + MachineEps) * MachineEps
+    u >= uLo - m && u <= uHi + m && v >= vLo - m && v <= vHi + m
   }
 
   def center: Vec3 = CellId.toPoint(id)

@@ -281,48 +281,27 @@ final class Loop private (val vertices: Array[Vec3]) extends S2Region {
       vertex(m + 1), o.vertex(1), reverseOther)
   }
 
-  /** Whether the loop boundary passes through the cell: any loop edge
-    * crosses a cell edge, or a loop vertex lies inside the (closed) cell.
-    */
-  private def boundaryIntersectsCell(cell: Cell): Boolean = {
-    if (isEmptyOrFull) return false
-    // Candidate pruning via the edge index for large loops: only edges
-    // whose leaves overlap the cell's rect bound can touch the cell.
-    val cand: Array[Int] = builtIndex match {
-      case Some(idx) => idx.candidateEdgesInRect(cell.rectBound)
-      case None => Array.tabulate(vertices.length)(identity)
-    }
-    var i = 0
-    while (i < cand.length) {
-      if (cell.containsPoint(vertex(cand(i)))) return true
-      i += 1
-    }
-    val cv = Array.tabulate(4)(cell.vertex)
-    i = 0
-    while (i < cand.length) {
-      val e = cand(i)
-      val crosser = new EdgeCrosser(vertex(e), vertex(e + 1))
-      var k = 0
-      while (k < 4) {
-        if (crosser.edgeOrVertexCrossingTo(cv(k), cv((k + 1) & 3))) return true
-        k += 1
-      }
-      i += 1
-    }
-    false
-  }
-
-  def containsCell(cell: Cell): Boolean = {
-    if (!bound.containsPoint(cell.center)) return false
-    !boundaryIntersectsCell(cell) && containsPoint(cell.vertex(0))
-  }
+  def containsCell(cell: Cell): Boolean =
+    bound.containsPoint(cell.center) &&
+      !new LoopCellRelator(this).boundaryIntersects(cell, cell.rectBound) &&
+      containsPoint(cell.vertex(0))
 
   def intersectsCell(cell: Cell): Boolean = {
     if (isEmpty) return false
     if (isFull) return true
-    if (!bound.intersects(cell.rectBound)) return false
-    boundaryIntersectsCell(cell) || containsPoint(cell.vertex(0))
+    val cellBound = cell.rectBound
+    if (!bound.intersects(cellBound)) return false
+    new LoopCellRelator(this).boundaryIntersects(cell, cellBound) ||
+      containsPoint(cell.vertex(0))
   }
+
+  /** One pass: the rect reject, one boundary test, one containsPoint of
+    * cell vertex 0 (containsCell and intersectsCell each repeat the
+    * boundary test).
+    */
+  override def cellRelation(cell: Cell): Int = cellRelator().relation(cell)
+
+  override def cellRelator(): CellRelator = new LoopCellRelator(this)
 
   def capBound: Cap = {
     // Bounding cap derived from the rect bound's center/corners.
@@ -475,6 +454,72 @@ object Loop {
       (x * p.x + y * p.y + z * p.z).normalize
     }
     new Loop(verts)
+  }
+}
+
+/** Loop-versus-cell tests for one caller (Loop.cellRelator). It keeps one
+  * EdgeCrosser per loop edge, built on first use and reused for every
+  * later cell, so a coverer run builds each crosser once instead of once
+  * per edge per cell. Not thread-safe: a Loop is broadcast to concurrent
+  * tasks, so this state lives here and never in the Loop.
+  */
+private[core] final class LoopCellRelator(loop: Loop) extends CellRelator {
+  import RegionRelation._
+
+  private val crossers = new Array[EdgeCrosser](loop.numVertices)
+
+  def relation(cell: Cell): Int = {
+    if (loop.isEmpty) return Disjoint
+    if (!loop.isFull) {
+      val cellBound = cell.rectBound
+      if (!loop.bound.intersects(cellBound)) return Disjoint
+      if (boundaryIntersects(cell, cellBound)) return Intersects
+    }
+    // No boundary in the cell: it lies wholly inside or wholly outside.
+    val inside = loop.containsPoint(cell.vertex(0))
+    if (inside && loop.bound.containsPoint(cell.center)) Contains
+    else if (inside || loop.isFull) Intersects
+    else Disjoint
+  }
+
+  /** Whether the loop boundary passes through the cell: a loop vertex lies
+    * inside the (closed) cell, or a loop edge crosses a cell edge. Large
+    * loops test only the edges their edge index files under leaves that
+    * overlap `cellBound`, the cell's rect bound.
+    */
+  def boundaryIntersects(cell: Cell, cellBound: => SphereRect): Boolean = {
+    if (loop.isEmptyOrFull) return false
+    val cand: Array[Int] = loop.edgeIndexOption match {
+      case Some(idx) => idx.candidateEdgesInRect(cellBound)
+      case None => null // every edge
+    }
+    val m = if (cand == null) loop.numVertices else cand.length
+    var i = 0
+    while (i < m) {
+      if (cell.containsPoint(loop.vertex(if (cand == null) i else cand(i)))) return true
+      i += 1
+    }
+    val v0 = cell.vertex(0)
+    val v1 = cell.vertex(1)
+    val v2 = cell.vertex(2)
+    val v3 = cell.vertex(3)
+    i = 0
+    while (i < m) {
+      val cr = crosser(if (cand == null) i else cand(i))
+      if (cr.edgeOrVertexCrossingTo(v0, v1) || cr.edgeOrVertexCrossingTo(v1, v2) ||
+        cr.edgeOrVertexCrossingTo(v2, v3) || cr.edgeOrVertexCrossingTo(v3, v0)) return true
+      i += 1
+    }
+    false
+  }
+
+  private def crosser(e: Int): EdgeCrosser = {
+    var cr = crossers(e)
+    if (cr == null) {
+      cr = new EdgeCrosser(loop.vertex(e), loop.vertex(e + 1))
+      crossers(e) = cr
+    }
+    cr
   }
 }
 

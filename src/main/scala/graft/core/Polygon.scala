@@ -182,13 +182,17 @@ final class Polygon(val loops: Array[Loop]) extends S2Region {
     // The polygon contains the cell iff no loop boundary passes through it
     // (each loop either wholly contains the cell or is disjoint from it)
     // and one cell corner is inside the polygon.
-    loops.forall(l => l.containsCell(cell) || !l.intersectsCell(cell)) &&
+    loops.forall(_.cellRelation(cell) != RegionRelation.Intersects) &&
       containsPoint(cell.vertex(0))
   }
 
   def intersectsCell(cell: Cell): Boolean = {
     loops.exists(_.intersectsCell(cell)) || containsPoint(cell.vertex(0))
   }
+
+  override def cellRelation(cell: Cell): Int = cellRelator().relation(cell)
+
+  override def cellRelator(): CellRelator = new PolygonCellRelator(this)
 
   def cellUnionBound: Array[Long] = capBound.cellUnionBound
 }
@@ -206,4 +210,31 @@ object Polygon {
 
   val empty: Polygon = new Polygon(Array.empty)
   val full: Polygon = new Polygon(Array(Loop.full))
+}
+
+/** Polygon-versus-cell relation for one caller (Polygon.cellRelator): one
+  * relation per loop, each through its own LoopCellRelator. A loop
+  * boundary through the cell decides Intersects at once; otherwise every
+  * loop holds the cell wholly inside or outside, and the polygon's
+  * containment of cell vertex 0 decides the rest.
+  */
+private final class PolygonCellRelator(polygon: Polygon) extends CellRelator {
+  import RegionRelation._
+
+  private val loopRelators = polygon.loops.map(l => new LoopCellRelator(l))
+
+  def relation(cell: Cell): Int = {
+    var anyLoop = false
+    var i = 0
+    while (i < loopRelators.length) {
+      val r = loopRelators(i).relation(cell)
+      if (r == Intersects) return Intersects
+      if (r == Contains) anyLoop = true
+      i += 1
+    }
+    if (polygon.containsPoint(cell.vertex(0))) {
+      if (polygon.bound.containsPoint(cell.center)) Contains else Intersects
+    } else if (anyLoop) Intersects
+    else Disjoint
+  }
 }

@@ -11,6 +11,35 @@ trait S2Region extends Serializable {
   def containsPoint(p: Vec3): Boolean
   /** Small cell covering seed, <= 6 cells (region.go:52-58). */
   def cellUnionBound: Array[Long]
+
+  /** Disjoint, Intersects or Contains (RegionRelation): exactly the pair
+    * (intersectsCell, containsCell), with Disjoint whenever intersectsCell
+    * is false. Regions whose two predicates share work override this to
+    * answer both at once.
+    */
+  def cellRelation(cell: Cell): Int =
+    if (!intersectsCell(cell)) RegionRelation.Disjoint
+    else if (containsCell(cell)) RegionRelation.Contains
+    else RegionRelation.Intersects
+
+  /** Evaluator of cellRelation for one caller's run of cells. It may keep
+    * scratch state that depends only on the region (Loop keeps its edge
+    * crossers), so it must not be shared between threads; the region
+    * itself stays immutable and safe to broadcast.
+    */
+  def cellRelator(): CellRelator = cell => cellRelation(cell)
+}
+
+/** Per-caller cellRelation evaluator (S2Region.cellRelator). */
+trait CellRelator {
+  def relation(cell: Cell): Int
+}
+
+/** Region-versus-cell relation codes returned by S2Region.cellRelation. */
+object RegionRelation {
+  final val Disjoint = 0
+  final val Intersects = 1
+  final val Contains = 2
 }
 
 /** ChordAngle helpers: squared chord length in [0,4] as plain Double

@@ -10,31 +10,48 @@ import scala.collection.mutable.ArrayBuffer
   * formula (regioncoverer.go:226) and the binary-heap pop order are ported
   * exactly (including Go container/heap's sift semantics) so covering
   * contents reproduce run-to-run and across parallelism levels.
+  *
+  * Relation contract: the coverer asks a region about a cell only through
+  * S2Region.cellRelation (via one cellRelator per call), once per distinct
+  * cell id per call, and that answer must equal the pair (intersectsCell,
+  * containsCell). This departs from the reference, which calls
+  * IntersectsCell and then ContainsCell on every candidate
+  * (regioncoverer.go:226-245); the coverings are identical. `coverings`
+  * runs the covering pass and the interior pass through one memo, since
+  * both start from the same fastCovering cells.
   */
 final case class RegionCoverer(minLevel: Int = 0, maxLevel: Int = CellId.MaxLevel,
                                levelMod: Int = 1, maxCells: Int = 8) {
 
-  def covering(region: S2Region): CellUnion = {
-    val cu = cellUnion(region)
-    cu.denormalize(clamp(minLevel, 0, CellId.MaxLevel), clamp(levelMod, 1, 3))
+  def covering(region: S2Region): CellUnion = denormalize(cellUnion(region))
+
+  def interiorCovering(region: S2Region): CellUnion = denormalize(interiorCellUnion(region))
+
+  /** (covering(region), interiorCovering(region)), computed together. */
+  def coverings(region: S2Region): (CellUnion, CellUnion) = {
+    val memo = new RelationMemo(region)
+    val start = initialCells(region)
+    (denormalize(run(memo, start, interior = false)),
+      denormalize(run(memo, start, interior = true)))
   }
 
-  def interiorCovering(region: S2Region): CellUnion = {
-    val cu = interiorCellUnion(region)
-    cu.denormalize(clamp(minLevel, 0, CellId.MaxLevel), clamp(levelMod, 1, 3))
-  }
+  def cellUnion(region: S2Region): CellUnion =
+    run(new RelationMemo(region), initialCells(region), interior = false)
 
-  def cellUnion(region: S2Region): CellUnion = {
-    val c = newCoverer(interior = false)
-    c.coveringInternal(region)
+  def interiorCellUnion(region: S2Region): CellUnion =
+    run(new RelationMemo(region), initialCells(region), interior = true)
+
+  private def run(memo: RelationMemo, start: Array[Long], interior: Boolean): CellUnion = {
+    val c = newCoverer(interior)
+    c.coveringInternal(memo, start)
     CellUnion.normalized(c.result.toArray)
   }
 
-  def interiorCellUnion(region: S2Region): CellUnion = {
-    val c = newCoverer(interior = true)
-    c.coveringInternal(region)
-    CellUnion.normalized(c.result.toArray)
-  }
+  private def initialCells(region: S2Region): Array[Long] =
+    newCoverer(interior = false).initialCells(region)
+
+  private def denormalize(cu: CellUnion): CellUnion =
+    cu.denormalize(clamp(minLevel, 0, CellId.MaxLevel), clamp(levelMod, 1, 3))
 
   /** Fast loose covering from the region's CellUnionBound
     * (regioncoverer.go:397-402).
@@ -142,21 +159,43 @@ private final class CandidateHeap {
   }
 }
 
+/** A region's cell relations for one coverer call, evaluated once per
+  * cell id through one cellRelator and remembered for the rest of the
+  * call; dropped with it, so it holds at most the cells one region's
+  * coverings visit.
+  */
+private final class RelationMemo(region: S2Region) {
+  private val relator = region.cellRelator()
+  private val known = new scala.collection.mutable.LongMap[Int]()
+
+  def apply(cell: Cell): Int = {
+    val r = known.getOrElse(cell.id, -1)
+    if (r >= 0) r
+    else {
+      val fresh = relator.relation(cell)
+      known.update(cell.id, fresh)
+      fresh
+    }
+  }
+}
+
 private final class Coverer(minLevel: Int, maxLevel: Int, levelMod: Int,
                             maxCells: Int, interiorCovering: Boolean) {
-  var region: S2Region = _
+  private var relation: RelationMemo = _
   val result = new ArrayBuffer[Long]()
   private val pq = new CandidateHeap
 
   private def newCandidate(cell: Cell): Candidate = {
-    if (!region.intersectsCell(cell)) return null
+    val rel = relation(cell)
+    if (rel == RegionRelation.Disjoint) return null
     val cand = new Candidate(cell)
     val level = cell.level
     if (level >= minLevel) {
+      val contained = rel == RegionRelation.Contains
       if (interiorCovering) {
-        if (region.containsCell(cell)) cand.terminal = true
+        if (contained) cand.terminal = true
         else if (level + levelMod > maxLevel) return null
-      } else if (level + levelMod > maxLevel || region.containsCell(cell)) {
+      } else if (level + levelMod > maxLevel || contained) {
         cand.terminal = true
       }
     }
@@ -171,7 +210,7 @@ private final class Coverer(minLevel: Int, maxLevel: Int, levelMod: Int,
     while (ci != last) {
       val childCell = Cell.fromId(ci)
       if (numLevels > 0) {
-        if (region.intersectsCell(childCell))
+        if (relation(childCell) != RegionRelation.Disjoint)
           numTerminals += expandChildren(cand, childCell, numLevels)
       } else {
         val child = newCandidate(childCell)
@@ -226,16 +265,18 @@ private final class Coverer(minLevel: Int, maxLevel: Int, levelMod: Int,
     out.toArray
   }
 
-  private def initialCandidates(): Unit = {
+  /** The fast covering at levels levelMod allows: where both the covering
+    * pass and the interior pass start.
+    */
+  def initialCells(region: S2Region): Array[Long] = {
     val temp = RegionCoverer(maxLevel = maxLevel, levelMod = 1,
       maxCells = math.min(4, maxCells))
-    val cells = adjustCellLevels(temp.fastCovering(region).ids)
-    cells.foreach(ci => addCandidate(newCandidate(Cell.fromId(ci))))
+    adjustCellLevels(temp.fastCovering(region).ids)
   }
 
-  def coveringInternal(reg: S2Region): Unit = {
-    region = reg
-    initialCandidates()
+  def coveringInternal(memo: RelationMemo, start: Array[Long]): Unit = {
+    relation = memo
+    start.foreach(ci => addCandidate(newCandidate(Cell.fromId(ci))))
     while (pq.nonEmpty && (!interiorCovering || result.length < maxCells)) {
       val cand = pq.pop()
       if (interiorCovering || cand.cell.level < minLevel || cand.numChildren == 1 ||

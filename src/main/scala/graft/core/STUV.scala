@@ -85,17 +85,18 @@ object STUV {
   /** (face, p) -> (u,v) if p is on the positive side of face, else None
     * (stuv.go:278-308).
     */
-  def faceXYZToUV(face: Int, p: Vec3): Option[(Double, Double)] = {
-    val ok = face match {
-      case 0 => p.x > 0
-      case 1 => p.y > 0
-      case 2 => p.z > 0
-      case 3 => p.x < 0
-      case 4 => p.y < 0
-      case _ => p.z < 0
-    }
-    if (!ok) None
+  def faceXYZToUV(face: Int, p: Vec3): Option[(Double, Double)] =
+    if (!onFacePositiveSide(face, p)) None
     else Some((validFaceXYZtoU(face, p.x, p.y, p.z), validFaceXYZtoV(face, p.x, p.y, p.z)))
+
+  /** Whether p projects onto face, i.e. faceXYZToUV(face, p) is defined. */
+  def onFacePositiveSide(face: Int, p: Vec3): Boolean = face match {
+    case 0 => p.x > 0
+    case 1 => p.y > 0
+    case 2 => p.z > 0
+    case 3 => p.x < 0
+    case 4 => p.y < 0
+    case _ => p.z < 0
   }
 
   /** Right-handed normal for an edge at constant u on the face (stuv.go:369-384). */

@@ -94,12 +94,22 @@ object BloomStatics {
 
 /** Mutable aggregation state: the bit array itself. */
 final class BloomBuffer(val mBits: Long, val k: Int) {
+  BloomBuffer.requireSize(mBits)
   val words = new Array[Long](((mBits + 63L) >>> 6).toInt)
   def add(s: UTF8String): Unit = BloomStatics.set(words, mBits, k, s)
   def orWith(o: BloomBuffer): Unit = {
     var i = 0
     while (i < words.length) { words(i) |= o.words(i); i += 1 }
   }
+}
+
+object BloomBuffer {
+  /** Largest filter whose word count fits an Int (2^37 - 64 bits). */
+  final val MaxBits: Long = Int.MaxValue.toLong << 6
+
+  def requireSize(mBits: Long): Unit =
+    require(mBits <= MaxBits,
+      s"bloom filter of $mBits bits needs more than Int.MaxValue 64-bit words; use mBits <= $MaxBits")
 }
 
 /** bloom_agg(str, mBits, k): BINARY bloom-filter bytes over the group's
@@ -112,6 +122,7 @@ case class BloomAggregate(child: Expression, mBits: Long, k: Int,
     extends TypedImperativeAggregate[BloomBuffer]
     with ImplicitCastInputTypes with UnaryLike[Expression] {
   require(mBits >= 64, "bloom_agg needs mBits >= 64")
+  BloomBuffer.requireSize(mBits)
   require(k >= 1 && k <= 32, "bloom_agg needs 1 <= k <= 32")
 
   override def inputTypes: Seq[DataType] = Seq(StringType)

@@ -110,6 +110,13 @@ object SpatialJoin {
 
   private val defaultCoverer = RegionCoverer(maxCells = 32)
 
+  /** (id, covering, interiorCovering) of one region, in one coverer call. */
+  private def covered(coverer: RegionCoverer, id: Long,
+                      region: S2Region): (Long, CellUnion, CellUnion) = {
+    val (c, ic) = coverer.coverings(region)
+    (id, c, ic)
+  }
+
   /** Inner PIP join against single-loop polygons: adds `poly_id`, one row
     * per (point, containing polygon).
     */
@@ -121,7 +128,7 @@ object SpatialJoin {
                        maxCells: Int = 32): Seq[(Long, CellUnion, CellUnion)] = {
     val coverer = RegionCoverer(maxCells = maxCells)
     polygons.map { case (id, loop) =>
-      (id, coverer.covering(loop), coverer.interiorCovering(loop))
+      covered(coverer, id, loop)
     }
   }
 
@@ -144,7 +151,7 @@ object SpatialJoin {
       .map { case (id, bytes) =>
         val coverer = RegionCoverer(maxCells = maxCells)
         val loop = Codec.decodeLoop(bytes)
-        (id, coverer.covering(loop), coverer.interiorCovering(loop))
+        covered(coverer, id, loop)
       }
       .collect().toSeq.sortBy(_._1)
   }
@@ -205,7 +212,7 @@ object SpatialJoin {
                       maxCells: Int = 32): DataFrame = {
     val coverer = RegionCoverer(maxCells = maxCells)
     val entries = polygons.map { case (id, poly) =>
-      (id, coverer.covering(poly), coverer.interiorCovering(poly))
+      covered(coverer, id, poly)
     }
     val polyMap = polygons.toMap
     coveringJoin(spark, points, entries,
@@ -225,7 +232,7 @@ object SpatialJoin {
       id -> RectRegion.fromDegrees(latLo, lngLo, latHi, lngHi)
     }
     val entries = regions.map { case (id, r) =>
-      (id, coverer.covering(r), coverer.interiorCovering(r))
+      covered(coverer, id, r)
     }
     val rectMap = regions.toMap
     coveringJoin(spark, points, entries,
@@ -245,7 +252,7 @@ object SpatialJoin {
     val entries = queries.map { case (id, qlat, qlng, rm) =>
       val cap = Cap.fromCenterRadians(
         LatLng.toPointDegrees(qlat, qlng), Earth.angleFromMeters(rm))
-      (id, coverer.covering(cap), coverer.interiorCovering(cap))
+      covered(coverer, id, cap)
     }
     val qMeta = queries.map(q => q._1 -> ((q._2, q._3, q._4))).toMap
     coveringJoin(spark, points, entries,

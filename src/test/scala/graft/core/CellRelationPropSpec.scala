@@ -1,0 +1,190 @@
+package graft.core
+
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.Prop.propBoolean
+import org.scalacheck.util.Pretty
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Property checks for the fused region-cell relation and the one-call
+  * coverings, at a fixed seed:
+  *
+  *  - S2Region.cellRelation (fresh, and through one reused cellRelator as
+  *    the coverer drives it) equals the pair (intersectsCell, containsCell)
+  *    for Loops (including loops large enough to carry an edge index),
+  *    Polygons with holes, Caps and RectRegions, on cells at levels 0-30
+  *    at the poles, the antimeridian, face boundaries and loop vertices.
+  *  - RegionCoverer.coverings equals the two separate passes driven only by
+  *    intersectsCell/containsCell, cell for cell.
+  */
+class CellRelationPropSpec extends AnyFunSuite {
+  import RegionRelation._
+
+  private val params = Test.Parameters.default
+    .withInitialSeed(20261017L).withMinSuccessfulTests(150).withWorkers(1)
+
+  private def check(prop: Prop): Unit = {
+    val result = Test.check(params, prop)
+    assert(result.passed, Pretty.pretty(result, Pretty.Params(2)))
+  }
+
+  /** (lat, lng) degrees of the sphere's hard places, plus anywhere. */
+  private val hardPlace: Gen[(Double, Double)] = Gen.oneOf(
+    Gen.const((90.0, 0.0)), Gen.const((-90.0, 0.0)),
+    Gen.choose(-89.0, 89.0).map(lat => (lat, 180.0)),
+    Gen.choose(-89.0, 89.0).map(lat => (lat, -179.9999)),
+    // face 0/1 edge, the corner shared by faces 0, 1 and 2, the face 1/2 edge
+    Gen.choose(-30.0, 30.0).map(lat => (lat, 45.0)),
+    Gen.const((35.26438968275466, 45.0)),
+    Gen.choose(60.0, 120.0).map(lng => (45.0, lng)),
+    for (lat <- Gen.choose(-90.0, 90.0); lng <- Gen.choose(-180.0, 180.0)) yield (lat, lng))
+
+  private val center: Gen[Vec3] = for {
+    (lat, lng) <- hardPlace
+    jitter <- Gen.choose(-1e-3, 1e-3)
+  } yield LatLng.toPointDegrees(math.max(-90.0, math.min(90.0, lat + jitter)), lng + jitter)
+
+  /** Star-shaped loop (radius jittered per vertex), CCW around c, from
+    * 1e-6 rad to 0.5 rad; vertex counts on both sides of
+    * LoopEdgeIndex.MaxBruteForceVertices.
+    */
+  private def loopAt(c: Vec3, radius: Double, n: Int, jitter: Seq[Double]): Loop = {
+    val base = Loop.regularLoop(c, radius, n).vertices
+    Loop.fromPoints(base.zip(jitter).map { case (v, f) => (c * (1 - f) + v * f).normalize })
+  }
+
+  private val loopGen: Gen[Loop] = for {
+    c <- center
+    radius <- Gen.oneOf(Gen.choose(1e-6, 1e-4), Gen.choose(1e-4, 0.05), Gen.choose(0.05, 0.5))
+    n <- Gen.oneOf(Gen.choose(3, 16), Gen.const(40), Gen.const(LoopEdgeIndex.MaxBruteForceVertices + 45))
+    jitter <- Gen.listOfN(n, Gen.choose(0.6, 1.0))
+  } yield loopAt(c, radius, n, jitter)
+
+  /** Shell with one or two holes; the holes nest inside the shell's inner
+    * radius, so the polygon is valid.
+    */
+  private val polygonGen: Gen[Polygon] = for {
+    c <- center
+    radius <- Gen.oneOf(Gen.choose(1e-5, 1e-3), Gen.choose(1e-3, 0.3))
+    n <- Gen.oneOf(Gen.choose(6, 16), Gen.const(48))
+    holes <- Gen.choose(1, 2)
+  } yield {
+    val shell = Loop.regularLoop(c, radius, n)
+    val holeLoops = (0 until holes).map { h =>
+      val hc = if (holes == 1) c else Loop.regularLoop(c, radius * 0.4, 4).vertices(2 * h)
+      Loop.regularLoop(hc, radius * 0.2, 8 + 29 * h)
+    }
+    Polygon.fromLoops(shell +: holeLoops)
+  }
+
+  private val capGen: Gen[Cap] = for {
+    c <- center
+    radius <- Gen.oneOf(Gen.choose(1e-7, 1e-3), Gen.choose(1e-3, 1.0), Gen.choose(1.0, 3.1))
+  } yield Cap.fromCenterRadians(c, radius)
+
+  private val rectGen: Gen[RectRegion] = for {
+    (lat, lng) <- hardPlace
+    dLat <- Gen.choose(1e-6, 20.0)
+    dLng <- Gen.choose(1e-6, 40.0)
+  } yield {
+    val d = LatLng.DegToRad
+    val lo = math.max(-90.0, lat - dLat) * d
+    val hi = math.min(90.0, lat + dLat) * d
+    // Endpoints past +-180 wrap, so some rects straddle the antimeridian.
+    def wrap(x: Double) = math.IEEEremainder(x * d, 2 * math.Pi)
+    RectRegion(SphereRect(R1Interval(lo, hi), S1Interval.fromEndpoints(wrap(lng - dLng), wrap(lng + dLng))))
+  }
+
+  private val regionGen: Gen[S2Region] =
+    Gen.oneOf(loopGen, loopGen, polygonGen, capGen, rectGen)
+
+  /** Points that matter for a region: its vertices (or bound corners),
+    * its center and points on its edges.
+    */
+  private def anchors(r: S2Region): Seq[Vec3] = r match {
+    case l: Loop => l.vertices.toSeq ++
+      l.vertices.indices.map(i => (l.vertex(i) + l.vertex(i + 1)).normalize)
+    case p: Polygon => p.loops.toSeq.flatMap(l => anchors(l))
+    case c: Cap => Seq(c.center) ++ Loop.regularLoop(c.center, c.radiusRadians, 8).vertices
+    case rr: RectRegion =>
+      val b = rr.rect
+      for (la <- Seq(b.lat.lo, b.lat.hi, b.lat.center); ln <- Seq(b.lng.lo, b.lng.hi, b.lng.center))
+        yield LatLng.toPoint(la, ln)
+    case other => Seq(other.capBound.center)
+  }
+
+  /** Cells at levels 0-30 containing anchors, plus their edge neighbours
+    * (which cross face boundaries near cube corners).
+    */
+  private def cellsFor(r: S2Region): Gen[Seq[Cell]] = {
+    val pts = anchors(r).toIndexedSeq
+    Gen.listOfN(24, for {
+      i <- Gen.choose(0, pts.size - 1)
+      level <- Gen.choose(0, CellId.MaxLevel)
+      nbr <- Gen.choose(-1, 3)
+    } yield {
+      val p = pts(i)
+      val id = CellId.parent(CellId.fromPoint(p.x, p.y, p.z), level)
+      Cell.fromId(if (nbr < 0) id else CellId.edgeNeighbors(id)(nbr))
+    })
+  }
+
+  private def expected(r: S2Region, cell: Cell): Int =
+    if (!r.intersectsCell(cell)) Disjoint
+    else if (r.containsCell(cell)) Contains
+    else Intersects
+
+  test("cellRelation equals (intersectsCell, containsCell) at the sphere's hard places") {
+    val cases = for (r <- regionGen; cells <- cellsFor(r)) yield (r, cells)
+    check(Prop.forAllNoShrink(cases) { case (r, cells) =>
+      val relator = r.cellRelator()
+      val bad = cells.filter { cell =>
+        val want = expected(r, cell)
+        r.cellRelation(cell) != want || relator.relation(cell) != want
+      }
+      bad.isEmpty :| s"$r: relation differs on ${bad.map(c => CellId.toToken(c.id))}"
+    })
+  }
+
+  test("every relation kind occurs, and the edge-index path runs") {
+    val rng = new scala.util.Random(5)
+    val loop = Loop.regularLoop(LatLng.toPointDegrees(89.9, 0), 0.01, 80)
+    assert(loop.edgeIndexOption.isDefined)
+    val seen = (0 to CellId.MaxLevel).map { level =>
+      val v = loop.vertex(rng.nextInt(80))
+      Cell.fromId(CellId.parent(CellId.fromPoint(v.x, v.y, v.z), level))
+    } ++ Seq(Cell.fromId(CellId.fromLatLngDegrees(89.9, 0)), Cell.fromId(CellId.fromFace(0)))
+    val kinds = seen.map(loop.cellRelation).toSet
+    assert(kinds === Set(Disjoint, Intersects, Contains))
+    assert(Loop.full.cellRelation(Cell.fromId(CellId.fromFace(3))) === Contains)
+    assert(Loop.empty.cellRelation(Cell.fromId(CellId.fromFace(3))) === Disjoint)
+  }
+
+  /** Oracle: forwards only the two predicates, so coverings through it
+    * follow the reference's call pattern.
+    */
+  private final class PredicatesOnly(r: S2Region) extends S2Region {
+    def capBound: Cap = r.capBound
+    def rectBound: SphereRect = r.rectBound
+    def containsCell(cell: Cell): Boolean = r.containsCell(cell)
+    def intersectsCell(cell: Cell): Boolean = r.intersectsCell(cell)
+    def containsPoint(p: Vec3): Boolean = r.containsPoint(p)
+    def cellUnionBound: Array[Long] = r.cellUnionBound
+  }
+
+  test("coverings equals the two-pass covering and interior covering, cell for cell") {
+    val cases = for {
+      r <- regionGen
+      maxCells <- Gen.oneOf(4, 8, 32)
+      levelMod <- Gen.oneOf(1, 2, 3)
+      minLevel <- Gen.choose(1, 5)
+      maxLevel <- Gen.choose(minLevel, CellId.MaxLevel)
+    } yield (r, RegionCoverer(minLevel, maxLevel, levelMod, maxCells))
+    check(Prop.forAllNoShrink(cases) { case (r, rc) =>
+      val (cov, interior) = rc.coverings(r)
+      val oracle = new PredicatesOnly(r)
+      val same = (cov.ids sameElements rc.covering(oracle).ids) &&
+        (interior.ids sameElements rc.interiorCovering(oracle).ids)
+      same :| s"$rc on $r"
+    })
+  }
+}

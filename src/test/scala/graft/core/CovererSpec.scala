@@ -116,6 +116,45 @@ class CovererSpec extends AnyFunSuite {
     assert(a.ids sameElements b.ids)
   }
 
+  /** Forwards to a region and counts what the coverer asks of it. */
+  private final class CountingRegion(r: S2Region) extends S2Region {
+    val relationsById = scala.collection.mutable.HashMap[Long, Int]()
+    var predicateCalls = 0
+    def capBound: Cap = r.capBound
+    def rectBound: SphereRect = r.rectBound
+    def containsCell(cell: Cell): Boolean = { predicateCalls += 1; r.containsCell(cell) }
+    def intersectsCell(cell: Cell): Boolean = { predicateCalls += 1; r.intersectsCell(cell) }
+    def containsPoint(p: Vec3): Boolean = r.containsPoint(p)
+    def cellUnionBound: Array[Long] = r.cellUnionBound
+    override def cellRelation(cell: Cell): Int = {
+      relationsById(cell.id) = relationsById.getOrElse(cell.id, 0) + 1
+      r.cellRelation(cell)
+    }
+  }
+
+  test("work-count pin: coverings relates each distinct cell at most once across both passes") {
+    val rng = new Random(9)
+    val rc = RegionCoverer(maxCells = 8)
+    var shared = 0
+    var separate = 0
+    for (_ <- 0 until 300) {
+      // 16-gons of radius 2-15 km, the shape of the shuffle-join dimension
+      val center = LatLng.toPointDegrees(rng.nextDouble() * 120 - 60, rng.nextDouble() * 360 - 180)
+      val loop = Loop.regularLoop(center,
+        Earth.angleFromMeters(2000 + rng.nextDouble() * 13000), 16)
+      val counted = new CountingRegion(loop)
+      val (cov, interior) = rc.coverings(counted)
+      assert(counted.relationsById.values.forall(_ == 1), "a cell was related twice")
+      assert(counted.predicateCalls === 0, "the coverer must ask only cellRelation")
+      shared += counted.relationsById.size
+      val twoPass = new CountingRegion(loop)
+      assert(cov === rc.covering(twoPass))
+      assert(interior === rc.interiorCovering(twoPass))
+      separate += twoPass.relationsById.values.sum
+    }
+    assert(shared < separate, s"shared memo $shared vs two passes $separate")
+  }
+
   test("cell union normalize: siblings collapse (cellunion_test.go semantics)") {
     val id = CellId.parent(CellId.fromLatLngDegrees(10, 20), 10)
     val kids = CellId.children(id)

@@ -158,6 +158,7 @@ class PlanAuditSpec extends AnyFunSuite {
     assert("HashAggregate".r.findAllIn(p).size >= 2,
       s"histogram must aggregate (partial+final) before the window:\n$p")
     assert(p.contains("Window"))
+    assert(p.contains("BroadcastHashJoin"), s"the label join must be a broadcast join:\n$p")
     assert(p.indexOf("Window") > p.indexOf("BroadcastHashJoin"),
       s"the corpus join must sit ABOVE the window/histogram subtree " +
         s"(window consumes the aggregated domain, not corpus rows):\n$p")
