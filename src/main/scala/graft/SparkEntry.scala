@@ -579,7 +579,7 @@ object SparkEntry {
     // PIP against polygons WITH HOLES: annulus per city (shell 200 km,
     // hole 80 km) via parity containment.
     "q_pip_annulus" -> ((s, dir) => {
-      SpatialJoin.pipJoinPolygons(s, pages(s, dir), cityAnnuli)
+      SpatialJoin.pipJoin(s, pages(s, dir), cityAnnuli)
         .select(col("url"), col("poly_id"))
     }),
 

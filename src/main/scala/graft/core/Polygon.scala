@@ -55,12 +55,15 @@ final class Polygon(val loops: Array[Loop]) extends S2Region {
 
   def numLoops: Int = loops.length
 
-  /** XOR of per-loop containment (polygon.go:706-729 semantics). */
+  /** XOR of per-loop containment (polygon.go:706-729 semantics). Each
+    * loop answers through Loop.containsPoint: its bound reject, then its
+    * edge index above LoopEdgeIndex.MaxBruteForceVertices.
+    */
   def containsPoint(p: Vec3): Boolean = {
     var inside = false
     var i = 0
     while (i < loops.length) {
-      if (loops(i).bruteForceContainsPoint(p)) inside = !inside
+      if (loops(i).containsPoint(p)) inside = !inside
       i += 1
     }
     inside
@@ -170,6 +173,7 @@ final class Polygon(val loops: Array[Loop]) extends S2Region {
 
   def capBound: Cap = {
     if (loops.isEmpty) return Cap.empty
+    if (loops.length == 1) return loops(0).capBound
     var c = Cap.fromPoint(LatLng.toPoint(bound.lat.center, bound.lng.center))
     loops.foreach(_.vertices.foreach(v => c = c.addPoint(v)))
     c
@@ -192,7 +196,11 @@ final class Polygon(val loops: Array[Loop]) extends S2Region {
 
   override def cellRelation(cell: Cell): Int = cellRelator().relation(cell)
 
-  override def cellRelator(): CellRelator = new PolygonCellRelator(this)
+  /** A one-loop polygon relates cells exactly as its loop does (the same
+    * shortcut contains/intersects take), so it uses the loop's relator.
+    */
+  override def cellRelator(): CellRelator =
+    if (loops.length == 1) loops(0).cellRelator() else new PolygonCellRelator(this)
 
   def cellUnionBound: Array[Long] = capBound.cellUnionBound
 }

@@ -245,15 +245,29 @@ object Codec {
     else encodePolygonLossless(p)
   }
 
-  private def encodePolygonLossless(p: Polygon): Array[Byte] = {
-    val total = 1 + 1 + 1 + 4 + p.loops.map(loopEncodedSize).sum + 33
+  /** The lossless (v1) polygon layout, whatever encodePolygon's size
+    * dispatch would pick.
+    */
+  def encodePolygonLossless(p: Polygon): Array[Byte] =
+    encodeLoopsLossless(p.loops, p.hasHoles, p.bound)
+
+  /** A loop in the lossless polygon layout, as a one-loop polygon that
+    * decodePolygon reads back. No Polygon is built around the loop:
+    * construction would rewrite the caller's loop depth.
+    */
+  def encodeLoopAsPolygon(l: Loop): Array[Byte] =
+    encodeLoopsLossless(Array(l), hasHoles = false, l.bound)
+
+  private def encodeLoopsLossless(loops: Array[Loop], hasHoles: Boolean,
+                                  bound: SphereRect): Array[Byte] = {
+    val total = 1 + 1 + 1 + 4 + loops.map(loopEncodedSize).sum + 33
     val b = buf(total)
     b.put(Version)
     b.put(1.toByte) // legacy C++ value, must be true
-    b.put(if (p.hasHoles) 1.toByte else 0.toByte)
-    b.putInt(p.loops.length)
-    p.loops.foreach(l => encodeLoopInto(b, l))
-    encodeRectInto(b, p.bound)
+    b.put(if (hasHoles) 1.toByte else 0.toByte)
+    b.putInt(loops.length)
+    loops.foreach(l => encodeLoopInto(b, l))
+    encodeRectInto(b, bound)
     b.array()
   }
 

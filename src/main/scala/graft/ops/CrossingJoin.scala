@@ -21,7 +21,6 @@ object CrossingJoin {
   def polylinePolygonJoin(spark: SparkSession,
                           polylines: Seq[(Long, Polyline)],
                           polygons: Seq[(Long, Loop)],
-                          maxCells: Int = 16,
                           includeContained: Boolean = true): DataFrame = {
     import spark.implicits._
     val lines = polylines.map { case (id, pl) =>

@@ -52,13 +52,4 @@ object IndexCache {
       idx.iterator() // force the one-time build
       idx
     }
-
-  /** Index over a broadcast loop set. */
-  def forLoops(bc: Broadcast[Seq[(Long, Loop)]]): ShapeIndex =
-    getOrBuild(bc.id) {
-      val idx = new ShapeIndex()
-      bc.value.foreach { case (_, l) => idx.add(LoopShape(l)) }
-      idx.iterator()
-      idx
-    }
 }

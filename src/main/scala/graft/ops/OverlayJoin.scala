@@ -71,7 +71,8 @@ object OverlayJoin {
     * both sides are DataFrames of (id, geom) with wire-encoded polygons
     * (Codec.encodePolygon). Coverings are computed row-side from the
     * geometry, candidates pair on covering cells, and the refine decodes
-    * through a content-keyed executor cache — geometry only travels on
+    * through SpatialJoin.cachedGeometry, the content-keyed executor cache
+    * shared with the PIP shuffle join — geometry only travels on
     * the candidate pairs that survive cell pruning, never on covering
     * rows.
     */
@@ -94,8 +95,8 @@ object OverlayJoin {
       .select("a_id", "b_id").distinct()
 
     val relUdf = udf((aGeom: Array[Byte], bGeom: Array[Byte]) => {
-      val a = OverlayJoin.cachedPolygon(aGeom)
-      val b = OverlayJoin.cachedPolygon(bGeom)
+      val a = SpatialJoin.cachedGeometry(aGeom)
+      val b = SpatialJoin.cachedGeometry(bGeom)
       if (!a.intersects(b)) null
       else (a.contains(b), b.contains(a))
     })
@@ -106,23 +107,5 @@ object OverlayJoin {
       .filter(col("rel").isNotNull)
       .select(col("a_id"), col("b_id"),
         col("rel._1").as("a_contains_b"), col("rel._2").as("b_contains_a"))
-  }
-
-  // Executor-local decode cache keyed by geometry bytes (same pattern as
-  // ShuffleSpatialJoin.cachedLoop).
-  private val polyCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[java.nio.ByteBuffer, Polygon](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[java.nio.ByteBuffer, Polygon]): Boolean =
-        size() > 1024
-    })
-  def cachedPolygon(geom: Array[Byte]): Polygon = {
-    val key = java.nio.ByteBuffer.wrap(geom)
-    var p = polyCache.get(key)
-    if (p == null) {
-      p = Codec.decodePolygon(geom)
-      polyCache.put(key, p)
-    }
-    p
   }
 }

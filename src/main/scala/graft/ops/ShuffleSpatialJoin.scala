@@ -12,15 +12,18 @@ import graft.core._
   * test into an equi-join at a fixed cell level.
   *
   *  - Polygon side: covering cells denormalized to join level k, one row
-  *    per (cell_lk, polyId, isInterior, geometry bytes) — a DataFrame
-  *    that shuffles like any dimension table; geometry travels as the
-  *    lossless Codec binary column and is decoded at most once per
-  *    (task, polygon) through a per-partition cache.
+  *    per (cell_lk, polyId, isInterior) — a DataFrame that shuffles like
+  *    any dimension table. Geometry travels once per polygon in the join
+  *    wire form (SpatialJoin.encodeGeometry) and is decoded once per
+  *    executor JVM through SpatialJoin.cachedGeometry.
   *  - Point side: withColumn(cell_lk = s2_parent(s2_cellid(lat,lng), k)).
   *  - Equi-join on cell_lk (sort-merge or shuffled hash, Catalyst/AQE
   *    picks; hot cells are AQE-splittable because the join key is the
   *    coarse cell). Interior matches skip the refine; boundary matches
   *    run the exact parity PIP after decoding.
+  *
+  * Regions follow SpatialJoin's region contract: (id, S2Region) pairs,
+  * Loops or Polygons (holes included), refined with containsPoint.
   *
   * Level choice: coarser k = fewer polygon rows but more false-positive
   * point-polygon pairs; finer k = bigger dimension table. chooseLevel
@@ -58,7 +61,7 @@ object ShuffleSpatialJoin {
     * polygon sets). Geometry travels once per polygon in the separate
     * geometryTable and joins back only for boundary candidates.
     */
-  def polygonDimTable(spark: SparkSession, polygons: Seq[(Long, Loop)],
+  def polygonDimTable(spark: SparkSession, polygons: Seq[(Long, S2Region)],
                       level: Int, maxCells: Int = 32,
                       precomputed: Option[Seq[(Long, CellUnion, CellUnion)]] = None): DataFrame = {
     import spark.implicits._
@@ -99,15 +102,15 @@ object ShuffleSpatialJoin {
   }
 
   /** One wire-encoded geometry row per polygon. */
-  def geometryTable(spark: SparkSession, polygons: Seq[(Long, Loop)]): DataFrame = {
+  def geometryTable(spark: SparkSession, polygons: Seq[(Long, S2Region)]): DataFrame = {
     import spark.implicits._
-    polygons.map { case (id, l) => (id, Codec.encodeLoop(l)) }
+    polygons.map { case (id, region) => (id, SpatialJoin.encodeGeometry(region)) }
       .toDF("poly_id", "geom")
   }
 
   /** The shuffle-path join itself. Returns points + poly_id. */
   def pipJoinLarge(spark: SparkSession, points: DataFrame,
-                   polygons: Seq[(Long, Loop)],
+                   polygons: Seq[(Long, S2Region)],
                    latCol: String = "lat", lngCol: String = "lng",
                    maxDimRows: Long = 2000000L,
                    precomputed: Option[Seq[(Long, CellUnion, CellUnion)]] = None): DataFrame = {
@@ -124,8 +127,7 @@ object ShuffleSpatialJoin {
     // Exact refine with a per-JVM decode cache (geometry decoded once per
     // executor per polygon, not per row).
     val refine = udf((geom: Array[Byte], lat: Double, lng: Double) =>
-      ShuffleSpatialJoin.cachedLoop(geom)
-        .containsPoint(LatLng.toPointDegrees(lat, lng)))
+      SpatialJoin.cachedGeometry(geom).containsPoint(LatLng.toPointDegrees(lat, lng)))
 
     // The dim side is by definition too large to broadcast (that case is
     // SpatialJoin.pipJoin); pin the sort-merge plan so tiny test inputs
@@ -141,26 +143,5 @@ object ShuffleSpatialJoin {
       .filter(refine(col("geom"), col(latCol), col(lngCol)))
       .drop("cell_lk", "is_interior", "geom")
     interiorHits.unionByName(boundaryHits)
-  }
-
-  // Executor-local decode cache keyed by the geometry BYTES, not the
-  // polygon id: two joins in one executor JVM may reuse ids with different
-  // geometry, and an id-keyed cache would silently return the first job's
-  // polygon. ByteBuffer keys compare content; the LRU bound keeps
-  // long-lived executors from accumulating stale geometries.
-  private val loopCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[java.nio.ByteBuffer, Loop](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[java.nio.ByteBuffer, Loop]): Boolean =
-        size() > 1024
-    })
-  def cachedLoop(geom: Array[Byte]): Loop = {
-    val key = java.nio.ByteBuffer.wrap(geom)
-    var l = loopCache.get(key)
-    if (l == null) {
-      l = Codec.decodeLoop(geom)
-      loopCache.put(key, l)
-    }
-    l
   }
 }

@@ -6,6 +6,15 @@ import graft.core._
 
 /** Distributed point-in-polygon / rect / radius / kNN joins.
   *
+  * Region contract of the PIP joins (pipJoin, pipJoinAuto and
+  * ShuffleSpatialJoin.pipJoinLarge): regions arrive as (id, S2Region)
+  * pairs, each is covered once with RegionCoverer.coverings, and a
+  * boundary candidate is refined with the region's own containsPoint, so
+  * Loops and Polygons with holes share one path. pipJoin takes any
+  * S2Region. pipJoinAuto, the shuffle path and the distributed coverer
+  * size or ship geometry in one wire form (encodeGeometry), so they take
+  * Loops and Polygons only.
+  *
   * Architecture (SURVEY.md §3.1, replacing the reference's in-memory
   * ShapeIndex with Spark-native access paths):
   *
@@ -108,50 +117,45 @@ object SpatialJoin {
     points.withColumn(outCol, explode(matcher))
   }
 
-  private val defaultCoverer = RegionCoverer(maxCells = 32)
-
-  /** (id, covering, interiorCovering) of one region, in one coverer call. */
-  private def covered(coverer: RegionCoverer, id: Long,
-                      region: S2Region): (Long, CellUnion, CellUnion) = {
-    val (c, ic) = coverer.coverings(region)
-    (id, c, ic)
+  /** Exact refine of the region joins: the region's own containsPoint. */
+  private def containsRefine(
+      regions: Seq[(Long, S2Region)]): (Long, Double, Double) => Boolean = {
+    val byId = regions.toMap
+    (rid, lat, lng) => byId(rid).containsPoint(LatLng.toPointDegrees(lat, lng))
   }
 
-  /** Inner PIP join against single-loop polygons: adds `poly_id`, one row
-    * per (point, containing polygon).
-    */
-  /** Covering + interior covering per polygon — computed once and shared
+  /** Covering + interior covering per region — computed once and shared
     * between the size estimate and whichever join path runs (covering is
     * the dominant driver-side cost at real dimension-table sizes).
     */
-  def polygonCoverings(polygons: Seq[(Long, Loop)],
+  def polygonCoverings(polygons: Seq[(Long, S2Region)],
                        maxCells: Int = 32): Seq[(Long, CellUnion, CellUnion)] = {
     val coverer = RegionCoverer(maxCells = maxCells)
-    polygons.map { case (id, loop) =>
-      covered(coverer, id, loop)
+    polygons.map { case (id, region) =>
+      val (c, ic) = coverer.coverings(region)
+      (id, c, ic)
     }
   }
 
   /** Coverings computed ON THE EXECUTORS: at real dimension-table sizes
     * (10^4+ polygons) the serial per-polygon RegionCoverer work dominates
-    * the driver. Geometry ships out via the wire codec; only the
-    * (id, covering, interiorCovering) triples come back (bounded:
-    * <= 3*maxCells cells per polygon). Per-polygon results are
-    * independent and deterministic, so the output is identical to the
-    * driver-side polygonCoverings at any parallelism; ids are re-sorted
-    * to keep downstream iteration order stable.
+    * the driver. Geometry ships out in the join wire form
+    * (encodeGeometry); only the (id, covering, interiorCovering) triples
+    * come back (bounded: <= 3*maxCells cells per polygon). A one-loop
+    * polygon covers exactly as its loop does, so the output is identical
+    * to the driver-side polygonCoverings at any parallelism; ids are
+    * re-sorted to keep downstream iteration order stable.
     */
   def polygonCoveringsDistributed(spark: SparkSession,
-                                  polygons: Seq[(Long, Loop)],
+                                  polygons: Seq[(Long, S2Region)],
                                   maxCells: Int = 32): Seq[(Long, CellUnion, CellUnion)] = {
-    val enc = polygons.map { case (id, l) => (id, Codec.encodeLoop(l)) }
+    val enc = polygons.map { case (id, region) => (id, encodeGeometry(region)) }
     val slices = math.max(spark.sparkContext.defaultParallelism,
       math.min(256, enc.size / 64 + 1))
     spark.sparkContext.parallelize(enc, slices)
       .map { case (id, bytes) =>
-        val coverer = RegionCoverer(maxCells = maxCells)
-        val loop = Codec.decodeLoop(bytes)
-        covered(coverer, id, loop)
+        val (c, ic) = RegionCoverer(maxCells = maxCells).coverings(Codec.decodePolygon(bytes))
+        (id, c, ic)
       }
       .collect().toSeq.sortBy(_._1)
   }
@@ -160,13 +164,13 @@ object SpatialJoin {
     * interior cells (16 B of packed entry + key share each) plus the wire
     * size of every geometry (broadcast once per polygon for the refine).
     */
-  def estimateBroadcastBytes(polygons: Seq[(Long, Loop)],
+  def estimateBroadcastBytes(polygons: Seq[(Long, S2Region)],
                              coverings: Seq[(Long, CellUnion, CellUnion)]): Long =
-    polygons.iterator.zip(coverings.iterator).map { case ((_, loop), (_, c, ic)) =>
-      16L * (c.size + ic.size) + 24L * loop.numVertices + 64L
+    polygons.iterator.zip(coverings.iterator).map { case ((_, region), (_, c, ic)) =>
+      16L * (c.size + ic.size) + 24L * numVertices(region) + 64L
     }.sum
 
-  def estimateBroadcastBytes(polygons: Seq[(Long, Loop)]): Long =
+  def estimateBroadcastBytes(polygons: Seq[(Long, S2Region)]): Long =
     estimateBroadcastBytes(polygons, polygonCoverings(polygons))
 
   /** The north rule's join chooser: broadcast covering-probe join when
@@ -177,48 +181,28 @@ object SpatialJoin {
     * and reused by the chosen path.
     */
   def pipJoinAuto(spark: SparkSession, points: DataFrame,
-                  polygons: Seq[(Long, Loop)],
+                  polygons: Seq[(Long, S2Region)],
                   latCol: String = "lat", lngCol: String = "lng",
                   maxCells: Int = 32,
                   broadcastBudgetBytes: Long = 10L * 1024 * 1024): DataFrame = {
     val coverings = polygonCoverings(polygons, maxCells)
     if (estimateBroadcastBytes(polygons, coverings) <= broadcastBudgetBytes)
-      pipJoinPrecovered(spark, points, polygons, coverings, latCol, lngCol)
+      coveringJoin(spark, points, coverings, containsRefine(polygons),
+        "poly_id", latCol, lngCol)
     else
       ShuffleSpatialJoin.pipJoinLarge(spark, points, polygons, latCol, lngCol,
         precomputed = Some(coverings))
   }
 
-  def pipJoin(spark: SparkSession, points: DataFrame, polygons: Seq[(Long, Loop)],
+  /** Inner PIP join: adds `poly_id`, one row per (point, containing
+    * region). Loops and Polygons with holes take the same path; the
+    * boundary refine is the region's containsPoint.
+    */
+  def pipJoin(spark: SparkSession, points: DataFrame, polygons: Seq[(Long, S2Region)],
               latCol: String = "lat", lngCol: String = "lng",
               maxCells: Int = 32): DataFrame =
-    pipJoinPrecovered(spark, points, polygons,
-      polygonCoverings(polygons, maxCells), latCol, lngCol)
-
-  private def pipJoinPrecovered(spark: SparkSession, points: DataFrame,
-                                polygons: Seq[(Long, Loop)],
-                                coverings: Seq[(Long, CellUnion, CellUnion)],
-                                latCol: String, lngCol: String): DataFrame = {
-    val loopMap = polygons.toMap
-    coveringJoin(spark, points, coverings,
-      (rid, lat, lng) => loopMap(rid).containsPoint(LatLng.toPointDegrees(lat, lng)),
-      "poly_id", latCol, lngCol)
-  }
-
-  /** PIP join against multi-loop polygons (holes included): parity refine. */
-  def pipJoinPolygons(spark: SparkSession, points: DataFrame,
-                      polygons: Seq[(Long, Polygon)],
-                      latCol: String = "lat", lngCol: String = "lng",
-                      maxCells: Int = 32): DataFrame = {
-    val coverer = RegionCoverer(maxCells = maxCells)
-    val entries = polygons.map { case (id, poly) =>
-      covered(coverer, id, poly)
-    }
-    val polyMap = polygons.toMap
-    coveringJoin(spark, points, entries,
-      (rid, lat, lng) => polyMap(rid).containsPoint(LatLng.toPointDegrees(lat, lng)),
-      "poly_id", latCol, lngCol)
-  }
+    coveringJoin(spark, points, polygonCoverings(polygons, maxCells),
+      containsRefine(polygons), "poly_id", latCol, lngCol)
 
   /** Lat/lng-rectangle join: adds `rect_id`. Rects as (id, latLo, lngLo,
     * latHi, lngHi) degrees.
@@ -227,15 +211,11 @@ object SpatialJoin {
                rects: Seq[(Long, Double, Double, Double, Double)],
                latCol: String = "lat", lngCol: String = "lng",
                maxCells: Int = 32): DataFrame = {
-    val coverer = RegionCoverer(maxCells = maxCells)
     val regions = rects.map { case (id, latLo, lngLo, latHi, lngHi) =>
       id -> RectRegion.fromDegrees(latLo, lngLo, latHi, lngHi)
     }
-    val entries = regions.map { case (id, r) =>
-      covered(coverer, id, r)
-    }
     val rectMap = regions.toMap
-    coveringJoin(spark, points, entries,
+    coveringJoin(spark, points, polygonCoverings(regions, maxCells),
       (rid, lat, lng) => rectMap(rid).rect.containsLatLng(
         lat * LatLng.DegToRad, lng * LatLng.DegToRad),
       "rect_id", latCol, lngCol)
@@ -248,20 +228,71 @@ object SpatialJoin {
                  queries: Seq[(Long, Double, Double, Double)],
                  latCol: String = "lat", lngCol: String = "lng",
                  maxCells: Int = 16): DataFrame = {
-    val coverer = RegionCoverer(maxCells = maxCells)
-    val entries = queries.map { case (id, qlat, qlng, rm) =>
-      val cap = Cap.fromCenterRadians(
+    val caps = queries.map { case (id, qlat, qlng, rm) =>
+      id -> Cap.fromCenterRadians(
         LatLng.toPointDegrees(qlat, qlng), Earth.angleFromMeters(rm))
-      covered(coverer, id, cap)
     }
     val qMeta = queries.map(q => q._1 -> ((q._2, q._3, q._4))).toMap
-    coveringJoin(spark, points, entries,
+    coveringJoin(spark, points, polygonCoverings(caps, maxCells),
       (rid, lat, lng) => {
         val (qlat, qlng, rm) = qMeta(rid)
         LatLng.distance(lat * LatLng.DegToRad, lng * LatLng.DegToRad,
           qlat * LatLng.DegToRad, qlng * LatLng.DegToRad) <= Earth.angleFromMeters(rm)
       },
       "query_id", latCol, lngCol)
+  }
+
+  // ------------------------------------------------------------------
+  // Join wire form: how the shuffle path and the distributed coverer ship
+  // a region, and how executors decode it.
+
+  private def requireWireForm(region: S2Region): Unit =
+    require(region.isInstanceOf[Loop] || region.isInstanceOf[Polygon],
+      s"join geometry must be a Loop or a Polygon, got ${region.getClass.getSimpleName}")
+
+  private def numVertices(region: S2Region): Int = {
+    requireWireForm(region)
+    region match {
+      case l: Loop => l.numVertices
+      case p: Polygon => p.loops.map(_.numVertices).sum
+    }
+  }
+
+  /** A join region in the lossless polygon layout, which
+    * Codec.decodePolygon reads: a Polygon as itself, a Loop as a one-loop
+    * polygon. Regions other than Loop and Polygon fail a require.
+    */
+  private[graft] def encodeGeometry(region: S2Region): Array[Byte] = {
+    requireWireForm(region)
+    region match {
+      case l: Loop => Codec.encodeLoopAsPolygon(l)
+      case p: Polygon => Codec.encodePolygonLossless(p)
+    }
+  }
+
+  // Executor-local decode cache keyed by the geometry BYTES, not the
+  // region id: two joins in one executor JVM may reuse ids with different
+  // geometry, and an id-keyed cache would silently return the first job's
+  // polygon. ByteBuffer keys compare content; the LRU bound keeps
+  // long-lived executors from accumulating stale geometries.
+  private val geometryCache = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[java.nio.ByteBuffer, Polygon](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[java.nio.ByteBuffer, Polygon]): Boolean =
+        size() > 1024
+    })
+
+  /** Codec.decodePolygon through the executor-local cache: each geometry
+    * is decoded once per JVM while it stays among the 1024 most recent.
+    */
+  private[graft] def cachedGeometry(geom: Array[Byte]): Polygon = {
+    val key = java.nio.ByteBuffer.wrap(geom)
+    var p = geometryCache.get(key)
+    if (p == null) {
+      p = Codec.decodePolygon(geom)
+      geometryCache.put(key, p)
+    }
+    p
   }
 
   /** kNN join (driver-side query list): thin wrapper over knnJoinDF. */

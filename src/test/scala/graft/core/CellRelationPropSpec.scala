@@ -15,6 +15,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *    at the poles, the antimeridian, face boundaries and loop vertices.
   *  - RegionCoverer.coverings equals the two separate passes driven only by
   *    intersectsCell/containsCell, cell for cell.
+  *  - The join layer's one region type: Polygon.containsPoint equals the
+  *    XOR of the loops' brute-force containment, a one-loop Polygon covers
+  *    exactly as its Loop, and a Loop sent through the join wire form
+  *    decodes to a region with the same containsPoint — at loop vertices,
+  *    edge midpoints, the poles and the antimeridian, with loops on both
+  *    sides of the edge-index threshold.
   */
 class CellRelationPropSpec extends AnyFunSuite {
   import RegionRelation._
@@ -186,5 +192,56 @@ class CellRelationPropSpec extends AnyFunSuite {
         (interior.ids sameElements rc.interiorCovering(oracle).ids)
       same :| s"$rc on $r"
     })
+  }
+
+  /** A loop's own points (vertices, edge midpoints) plus points at the
+    * poles, on the antimeridian and anywhere.
+    */
+  private def pointsFor(r: S2Region): Gen[Seq[Vec3]] =
+    Gen.listOfN(16, hardPlace).map(_.map { case (lat, lng) =>
+      LatLng.toPointDegrees(lat, lng) } ++ anchors(r))
+
+  private val onePolygonGen: Gen[Polygon] =
+    Gen.oneOf(polygonGen, loopGen.map(l => Polygon.fromLoops(Seq(l))))
+
+  test("Polygon.containsPoint equals the XOR of the loops' brute-force containment") {
+    val cases = for (p <- onePolygonGen; pts <- pointsFor(p)) yield (p, pts)
+    check(Prop.forAllNoShrink(cases) { case (p, pts) =>
+      val bad = pts.filter { v =>
+        p.containsPoint(v) != (p.loops.count(_.bruteForceContainsPoint(v)) % 2 == 1)
+      }
+      bad.isEmpty :| s"$p: containsPoint differs at $bad"
+    })
+  }
+
+  test("a one-loop Polygon covers exactly as its Loop, cell for cell") {
+    val cases = for {
+      l <- loopGen
+      maxCells <- Gen.oneOf(4, 8, 32)
+      levelMod <- Gen.oneOf(1, 2, 3)
+      minLevel <- Gen.choose(0, 5)
+    } yield (l, RegionCoverer(minLevel, CellId.MaxLevel, levelMod, maxCells))
+    check(Prop.forAllNoShrink(cases) { case (l, rc) =>
+      val (cov, interior) = rc.coverings(l)
+      val (pCov, pInterior) = rc.coverings(Polygon.fromLoops(Seq(l)))
+      ((cov.ids sameElements pCov.ids) && (interior.ids sameElements pInterior.ids)) :|
+        s"$rc on $l"
+    })
+  }
+
+  test("a Loop through the join wire form keeps its containsPoint and depth") {
+    import graft.ops.SpatialJoin.encodeGeometry
+    val cases = for (l <- loopGen; pts <- pointsFor(l)) yield (l, pts)
+    check(Prop.forAllNoShrink(cases) { case (l, pts) =>
+      val decoded = Codec.decodePolygon(encodeGeometry(l))
+      val bad = pts.filter(v => decoded.containsPoint(v) != l.containsPoint(v))
+      (decoded.numLoops == 1 && bad.isEmpty) :| s"$l: containsPoint differs at $bad"
+    })
+    // a hole keeps its nesting depth: encoding builds no Polygon around it
+    val hole = Polygon.fromLoopStrings(Seq("0:0, 0:10, 10:5", "2:4, 2:6, 5:5")).loops(1)
+    assert(hole.depth == 1)
+    Codec.decodePolygon(encodeGeometry(hole))
+    assert(hole.depth == 1)
+    intercept[IllegalArgumentException](encodeGeometry(Cap.fromCenterRadians(Vec3(0, 0, 1), 0.1)))
   }
 }

@@ -16,44 +16,46 @@ class ShuffleJoinSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** The same join inputs as Loops and as Polygons with holes. */
+  private val regionSets: Seq[(String, Seq[(Long, graft.core.S2Region)])] = Seq(
+    "city loops" -> graft.SparkEntry.cityPolygons,
+    "city annuli" -> graft.SparkEntry.cityAnnuli)
+
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.select("url", "poly_id").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet
+
   test("shuffle path equals broadcast path row-for-row") {
     val pages = graft.sources.PagesSource.withLatLng(
       spark.read.parquet(
         graft.sources.PagesSource.pagesParquet(spark, "/root/testdata/sf0.001")))
-    val polys = graft.SparkEntry.cityPolygons
-
-    val broadcastRows = SpatialJoin.pipJoin(spark, pages, polys)
-      .select("url", "poly_id").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    val shuffleRows = ShuffleSpatialJoin.pipJoinLarge(spark, pages, polys)
-      .select("url", "poly_id").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-
-    assert(broadcastRows.nonEmpty)
-    assert(shuffleRows === broadcastRows)
+    for ((name, polys) <- regionSets) {
+      val broadcastRows = rows(SpatialJoin.pipJoin(spark, pages, polys))
+      val shuffleRows = rows(ShuffleSpatialJoin.pipJoinLarge(spark, pages, polys))
+      assert(broadcastRows.nonEmpty, name)
+      assert(shuffleRows === broadcastRows, name)
+    }
   }
 
   test("pipJoinAuto chooses by covering cardinality and stays row-identical") {
     val pages = graft.sources.PagesSource.withLatLng(
       spark.read.parquet(
         graft.sources.PagesSource.pagesParquet(spark, "/root/testdata/sf0.001")))
-    val polys = graft.SparkEntry.cityPolygons
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("url", "poly_id").collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSet
     def hasBroadcastProbe(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.executedPlan.toString.contains("covering_probe")
 
-    val est = SpatialJoin.estimateBroadcastBytes(polys)
-    assert(est > 0)
-    // generous budget: broadcast path
-    val auto1 = SpatialJoin.pipJoinAuto(spark, pages, polys)
-    assert(hasBroadcastProbe(auto1), "small dim set must broadcast")
-    // starved budget: shuffle path, identical rows
-    val auto2 = SpatialJoin.pipJoinAuto(spark, pages, polys,
-      broadcastBudgetBytes = est - 1)
-    assert(!hasBroadcastProbe(auto2), "over-budget dim set must not broadcast")
-    assert(rows(auto1) === rows(auto2))
+    for ((name, polys) <- regionSets) {
+      val est = SpatialJoin.estimateBroadcastBytes(polys)
+      assert(est > 0, name)
+      // generous budget: broadcast path
+      val auto1 = SpatialJoin.pipJoinAuto(spark, pages, polys)
+      assert(hasBroadcastProbe(auto1), s"$name: small dim set must broadcast")
+      // starved budget: shuffle path, identical rows
+      val auto2 = SpatialJoin.pipJoinAuto(spark, pages, polys,
+        broadcastBudgetBytes = est - 1)
+      assert(!hasBroadcastProbe(auto2), s"$name: over-budget dim set must not broadcast")
+      assert(rows(auto1) === rows(auto2), name)
+    }
   }
 
   test("shuffle path plans the candidate join as sort-merge, not broadcast") {
@@ -108,9 +110,7 @@ class ShuffleJoinSpec extends AnyFunSuite {
     val polysB = Seq((0L, polysA(1)._2), (1L, polysA(0)._2))
 
     def run(polys: Seq[(Long, graft.core.Loop)]) =
-      ShuffleSpatialJoin.pipJoinLarge(spark, pages, polys)
-        .select("url", "poly_id").collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSet
+      rows(ShuffleSpatialJoin.pipJoinLarge(spark, pages, polys))
 
     val a = run(polysA)
     val b = run(polysB)
