@@ -1,8 +1,9 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.gate.{Evidence, Gate}
 
-/** Driver benchmark: runs the SparkEntry queries at SPARK_GRAFT_SF_DIR
+/** Driver benchmark: runs the gated queries at SPARK_GRAFT_SF_DIR
   * and prints ONE JSON line. The headline metric mirrors BASELINE.json:
   * cells encoded + PIP-joined rows/sec (pages through geocode -> cell
   * encode -> covering join -> exact refine), measured after warmup with
@@ -17,7 +18,7 @@ object Bench {
     * scan+encode+join work the metric names.)
     */
   def ensurePagesFixture(spark: SparkSession, rows: Long): String = {
-    val path = s"/root/repo/work/pages_n$rows.parquet"
+    val path = s"${Local.workDir}/pages_n$rows.parquet"
     if (!new java.io.File(path).exists()) {
       graft.sources.PagesSource.generate(spark, rows)
         .write.mode("overwrite").parquet(path)
@@ -48,7 +49,7 @@ object Bench {
     import org.apache.spark.sql.functions._
     val pages = graft.sources.PagesSource.withLatLng(spark.read.parquet(path))
     val t0 = System.nanoTime()
-    graft.ops.SpatialJoin.pipJoin(spark, pages, SparkEntry.cityPolygons)
+    graft.ops.SpatialJoin.pipJoin(spark, pages, graft.gate.GeoGate.cityPolygons)
       .select(count(graft.functions.S2.cellId(col("lat"), col("lng")))).collect()
     (System.nanoTime() - t0) / 1e9
   }
@@ -58,68 +59,34 @@ object Bench {
       java.nio.file.Paths.get("/proc/loadavg")).split(" ")(0).toDouble
     catch { case _: Exception => -1.0 }
 
-  /** Fixed CPU-bound calibration: `threads` Java threads each run the same
-    * deterministic xorshift64* loop; the wall time measures how much
-    * parallel CPU the host is ACTUALLY giving this JVM right now. On a
-    * quiet host this is a constant; under neighbor load it inflates
-    * roughly in proportion to the contention, so each benchmark sample
-    * can carry its own noise normalizer (this sandbox shares a host whose
-    * load average swings 2-15 with nothing running locally, and single
-    * measurements of identical code swing 3-4x with it).
+  /** A `local[cores]` session whose file splits are finer than the
+    * 128 MB default: the 10M-row (~1 GB) headline parquet otherwise
+    * coalesces into far fewer splits than cores and caps scan parallelism.
     */
-  def calibrationSecs(threads: Int, stepsPerThread: Long = 60000000L): Double = {
-    val sink = new java.util.concurrent.atomic.AtomicLong()
-    val t0 = System.nanoTime()
-    val ts = (0 until threads).map { t =>
-      val th = new Thread(() => {
-        var x = 0x9E3779B97F4A7C15L + t
-        var i = 0L
-        while (i < stepsPerThread) {
-          x ^= x >>> 12; x ^= x << 25; x ^= x >>> 27
-          i += 1
-        }
-        sink.addAndGet(x * 0x2545F4914F6CDD1DL)
-      })
-      th.start(); th
-    }
-    ts.foreach(_.join())
-    if (sink.get == 42L) println("") // defeat dead-code elimination
-    (System.nanoTime() - t0) / 1e9
+  def session(cores: Int): SparkSession = {
+    val spark = Local.session(cores)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", s"${16 * 1024 * 1024}")
+    spark
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to every visible core: a silent low-core default made two
-    // round-5 sweeps run local[4] unnoticed (the artifact's `cpus` field
-    // is what caught it).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Split the headline fixture finer than the 128 MB default merges
-      // it: the 10M-row (~1 GB) parquet otherwise coalesces into far
-      // fewer splits than cores and caps scan parallelism.
-      .config("spark.sql.files.maxPartitionBytes", s"${16 * 1024 * 1024}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Local.cpus
+    val spark = session(cpus)
 
     // Pre-materialize the pages fixture so generation cost is not timed.
     graft.sources.PagesSource.pagesParquet(spark, sfDir)
     val pagesPath = ensurePagesFixture(spark, 10000000L)
     val nRows = headlineRowCount(spark, pagesPath)
-    val nThreads = cpus.toInt
 
     // Headline protocol (round 4, after three rounds of weather-polluted
     // artifacts): instead of 5 contiguous iterations — which a single
     // correlated neighbor-load spike poisons wholesale — the headline
     // iterations are INTERLEAVED across the query sweep (one before each
     // sweep chunk, one after), spreading them over the full ~2-minute run.
-    // Each sample carries its own 1-minute loadavg and a fixed CPU-bound
-    // calibration wall so the artifact documents its measurement weather
-    // per-sample rather than pretending the min is the truth.
+    // Each sample carries its own 1-minute loadavg so the artifact
+    // documents its measurement weather per-sample rather than
+    // pretending the min is the truth.
     def dropResidue(): Unit = {
       // Cached blocks, finished-stage shuffle files and old-gen garbage
       // from earlier phases pollute later timings (r3 measured a 17%
@@ -130,52 +97,33 @@ object Bench {
     }
 
     headlineOnce(spark, pagesPath) // warmup: plans compiled, codegen JIT'd
-    // (wall, calPre, calPost, loadavg): the calibration loop runs BOTH
-    // before and after the timed iteration — a neighbor spike landing
-    // inside the sample but outside a single pre-calibration would
-    // otherwise go unmeasured; the pair brackets the sample.
-    val samples = scala.collection.mutable.ArrayBuffer[(Double, Double, Double, Double)]()
+    // (wall, loadavg) per headline sample
+    val samples = scala.collection.mutable.ArrayBuffer[(Double, Double)]()
     def takeSample(): Unit = {
       dropResidue()
       val load = loadavg1m()
-      val calPre = calibrationSecs(nThreads)
-      val wall = headlineOnce(spark, pagesPath)
-      val calPost = calibrationSecs(nThreads)
-      samples += ((wall, calPre, calPost, load))
+      samples += ((headlineOnce(spark, pagesPath), load))
     }
 
-    val sweep = SparkEntry.queries.toSeq.sortBy(_._1)
+    val sweep = Gate.all.sortBy(_.name)
     val chunkSize = math.max(1, math.ceil(sweep.size / 5.0).toInt)
     val chunks = sweep.grouped(chunkSize).toSeq
     val results = scala.collection.mutable.ArrayBuffer[(String, Double, Boolean, Double)]()
     chunks.foreach { chunk =>
       takeSample()
-      chunk.foreach { case (name, fn) =>
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => } // warm
+      chunk.foreach { q =>
+        try { q.build(spark, sfDir).count() } catch { case _: Throwable => } // warm
         val load = loadavg1m()
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
+        val ok = try { q.build(spark, sfDir).count(); true }
           catch { case _: Throwable => false }
-        results += ((name, (System.nanoTime() - t0) / 1e9, ok, load))
+        results += ((q.name, (System.nanoTime() - t0) / 1e9, ok, load))
       }
     }
     takeSample()
 
     val walls = samples.map(_._1)
     val rpsBest = nRows / walls.min
-    // Load-adjusted estimate: scale each sample's throughput by how much
-    // slower its bracketing calibrations ran than the run's quietest
-    // calibration (linear contention model — the same fixed work taking
-    // 2x longer means the host gave us ~half the CPU). This is an
-    // ESTIMATE carried alongside the raw samples, never a replacement.
-    val calOf = (t: (Double, Double, Double, Double)) => (t._2 + t._3) / 2
-    val calMin = samples.map(calOf).min
-    // median, not max: max would select exactly the sample whose
-    // calibration was most inflated relative to its wall (a spike inside
-    // the calibration bracket but outside the timed run) — an optimistic
-    // bias the raw-sample honesty effort exists to avoid
-    val adjAll = samples.map { t => (nRows / t._1) * (calOf(t) / calMin) }.sorted
-    val rpsAdjBest = adjAll(adjAll.size / 2)
 
     // Skew rehearsal (the north rule's hot-cell claim): the shuffle-path
     // PIP join on a fixture with 55% of rows in ONE level-14 cell vs the
@@ -185,7 +133,7 @@ object Bench {
     var skewEngaged = false
     val skewJson = try {
       val skewPath = {
-        val p = s"/root/repo/work/pages_skew_n$nRows.parquet"
+        val p = s"${Local.workDir}/pages_skew_n$nRows.parquet"
         if (!new java.io.File(p).exists())
           graft.sources.PagesSource.generateSkewed(spark, nRows)
             .write.mode("overwrite").parquet(p)
@@ -200,7 +148,7 @@ object Bench {
       try {
       def shuffleJoin(path: String) = graft.ops.ShuffleSpatialJoin.pipJoinLarge(
         spark, graft.sources.PagesSource.withLatLng(spark.read.parquet(path)),
-        SparkEntry.cityPolygons)
+        graft.gate.GeoGate.cityPolygons)
       def runOnce(path: String): (Double, org.apache.spark.sql.DataFrame) = {
         dropResidue()
         val df = shuffleJoin(path)
@@ -259,29 +207,25 @@ object Bench {
       .mkString("{", ",", "}")
     val errs = results.filter(!_._3).map("\"" + _._1 + "\"").mkString("[", ",", "]")
     val total = results.filter(_._3).map(_._2).sum
-    // Evidence queries run crash/resume, streaming micro-batches, physical
-    // write layouts or oracle-aux re-emission — machinery whose cost is the
-    // price of keeping those behaviors under the hard correctness gate, not
-    // engine time. Tagging them lets the engine-subset sweep be compared
-    // across rounds mechanically (VERDICT r4 "Next" #2).
-    val evidenceQueries = Set("q_stream_neardup", "q_stream_evict",
-      "q_checkpoint", "q_checkpoint_clustered", "q_clustered", "q_tile_covering")
-    val totalEngine = results.filter(r => r._3 && !evidenceQueries(r._1)).map(_._2).sum
-    val evidenceJson = evidenceQueries.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val sampleJson = samples.map { case (w, cPre, cPost, l) =>
-      s"""{"wall_sec":$w,"rows_per_sec":${nRows / w},"cal_pre_sec":$cPre,"cal_post_sec":$cPost,"loadavg":$l}"""
+    // The engine subtotal leaves out Evidence queries, so the sweep can be
+    // compared across rounds mechanically (VERDICT r4 "Next" #2).
+    val evidenceQueries = sweep.filter(_.kind == Evidence).map(_.name)
+    val totalEngine = results.filter(r => r._3 && !evidenceQueries.contains(r._1)).map(_._2).sum
+    val evidenceJson = evidenceQueries.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val sampleJson = samples.map { case (w, l) =>
+      s"""{"wall_sec":$w,"rows_per_sec":${nRows / w},"loadavg":$l}"""
     }.mkString("[", ",", "]")
-    val fullJson = s"""{"metric":"cells encoded + PIP-joined rows/sec","value":$rpsBest,"unit":"rows/sec","value_load_adjusted":$rpsAdjBest,"adjustment_model":"median over samples of rows_per_sec * mean(cal_pre,cal_post)/min(cal): linear contention estimate from a fixed ${nThreads}-thread CPU-bound calibration loop bracketing each sample; median avoids selecting the most-inflated calibration ratio; raw samples are authoritative","headline_samples":$sampleJson,"headline_protocol":"6 iterations interleaved across the query sweep (cache cleared before each), not one contiguous window","total_query_sec":$total,"total_engine_sec":$totalEngine,"evidence_queries":$evidenceJson,"headline_rows":$nRows,"cpus":$cpus,"loadavg":${loadavg1m()},"queries":$qs,"query_loadavg":$qload,"errors":$errs,"sf":"$sfDir"$skewJson}"""
+    val fullJson = s"""{"metric":"cells encoded + PIP-joined rows/sec","value":$rpsBest,"unit":"rows/sec","headline_samples":$sampleJson,"headline_protocol":"6 iterations interleaved across the query sweep (cache cleared before each), not one contiguous window","total_query_sec":$total,"total_engine_sec":$totalEngine,"evidence_queries":$evidenceJson,"headline_rows":$nRows,"cpus":$cpus,"loadavg":${loadavg1m()},"queries":$qs,"query_loadavg":$qload,"errors":$errs,"sf":"$sfDir"$skewJson}"""
     // The full artifact line outgrew the driver's tail-capture window in
     // r4 (parsed=null for the 4th round: the window starts mid-line and
     // the headline fields at the front are cut off). Persist the full
     // artifact to a file, print it, then print a COMPACT headline line
     // LAST so the tail always contains one complete parseable JSON line.
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/work/bench_full.json"), fullJson + "\n")
+      java.nio.file.Paths.get(Local.workDir, "bench_full.json"), fullJson + "\n")
     catch { case _: Exception => }
     println(fullJson)
-    println(s"""{"metric":"cells encoded + PIP-joined rows/sec","value":$rpsBest,"unit":"rows/sec","value_load_adjusted":$rpsAdjBest,"total_query_sec":$total,"total_engine_sec":$totalEngine,"headline_rows":$nRows,"cpus":$cpus,"loadavg":${loadavg1m()},"skew_ratio":$skewRatio,"skew_split_engaged":$skewEngaged,"errors":$errs,"sf":"$sfDir","full_artifact":"work/bench_full.json"}""")
+    println(s"""{"metric":"cells encoded + PIP-joined rows/sec","value":$rpsBest,"unit":"rows/sec","total_query_sec":$total,"total_engine_sec":$totalEngine,"headline_rows":$nRows,"cpus":$cpus,"loadavg":${loadavg1m()},"skew_ratio":$skewRatio,"skew_split_engaged":$skewEngaged,"errors":$errs,"sf":"$sfDir","full_artifact":"work/bench_full.json"}""")
     spark.stop()
   }
 }
@@ -291,19 +235,8 @@ object Bench {
   * Runs local[8] then local[32] in fresh sessions and writes BENCH_local.md.
   */
 object ScalingBench {
-  def runAt(cores: Int, sfDir: String, benchRows: Long): (Double, Long) = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scaling-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      // split inputs ~4x finer than cores so scan parallelism is never
-      // capped by file-merge coalescing (default 128MB merges the 60MB
-      // fixture files into fewer splits than cores)
-      .config("spark.sql.files.maxPartitionBytes", s"${16 * 1024 * 1024}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def runAt(cores: Int, benchRows: Long): (Double, Long) = {
+    val spark = Bench.session(cores)
     val out = Bench.headlineRowsPerSecAt(spark, benchRows)
     spark.stop()
     // clear the stopped session so the next builder creates a fresh one
@@ -324,7 +257,7 @@ object ScalingBench {
     val benchRows = if (args.nonEmpty) args(0).toLong else 10000000L
     if (args.length == 2) {
       val cores = args(1).toInt
-      val (rps, n) = runAt(cores, "/root/testdata/sf0.1", benchRows)
+      val (rps, n) = runAt(cores, benchRows)
       println(s"""SCALING_RESULT {"rows":$n,"cores":$cores,"rows_per_sec":$rps}""")
       return
     }
@@ -335,8 +268,8 @@ object ScalingBench {
     var rpsHi = 0.0
     var n = 0L
     for (_ <- 0 until pairs) {
-      val (lo, n0) = runAt(loCores, "/root/testdata/sf0.1", benchRows)
-      val (hi, _) = runAt(hiCores, "/root/testdata/sf0.1", benchRows)
+      val (lo, n0) = runAt(loCores, benchRows)
+      val (hi, _) = runAt(hiCores, benchRows)
       rpsLo = math.max(rpsLo, lo)
       rpsHi = math.max(rpsHi, hi)
       n = n0
@@ -378,7 +311,8 @@ object ScalingBench {
          |""".stripMargin
     // BENCH_local.md is the curated multi-run record; raw output goes to
     // its own file so a rerun cannot clobber the curation.
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("/root/repo/BENCH_scaling_last.md"), md)
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(Local.workDir).resolveSibling("BENCH_scaling_last.md"), md)
     println(md)
     println(s"""SCALING_FINAL {"rows":$n,"cores_lo":$loCores,"cores_hi":$hiCores,"rps_lo":$rpsLo,"rps_hi":$rpsHi,"efficiency":$efficiency}""")
   }

@@ -130,7 +130,8 @@ object Curation {
     * whose cut it clears — `100 * count_le(s) > pct * n` (all BIGINT
     * arithmetic, so both engines agree exactly; ties share a score and
     * therefore a bucket, making the assignment deterministic at any
-    * parallelism).
+    * parallelism). Documents whose score is NULL are not counted in n
+    * and come back with bucket NULL.
     *
     * Scale shape: one map-side-combinable (stratum, score) histogram
     * exchange, then the cumulative window runs over the DISTINCT VALUE
@@ -147,7 +148,11 @@ object Curation {
                       restBucket: String = "tail"): DataFrame = {
     require(cuts.nonEmpty && cuts.map(_._2) == cuts.map(_._2).sorted.reverse,
       "cuts must be highest-percentile first")
-    val hist = df.groupBy(col(stratum), col(scoreCol).cast("long").as("_score"))
+    val scored = df.withColumn("_score", col(scoreCol).cast("long"))
+    // A NULL score has no rank: it stays out of the histogram (where it
+    // would count toward every cut) and comes back with bucket NULL.
+    val hist = scored.filter(col("_score").isNotNull)
+      .groupBy(col(stratum), col("_score"))
       .agg(count(lit(1)).as("_cnt"))
     val w = Window.partitionBy(stratum).orderBy(col("_score"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -160,8 +165,7 @@ object Curation {
           when(col("_cle") * 100 > col("_n") * pct, lit(name)).otherwise(rest)
         })
       .select(col(stratum), col("_score"), col("bucket"))
-    df.withColumn("_score", col(scoreCol).cast("long"))
-      .join(broadcast(labeled), Seq(stratum, "_score"))
+    scored.join(broadcast(labeled), Seq(stratum, "_score"), "left")
       .drop("_score")
   }
 }

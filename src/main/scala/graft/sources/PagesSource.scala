@@ -138,13 +138,12 @@ object PagesSource {
   }
 
   /** Materialize (once) the pages fixture parquet for a scale dir; cached
-    * under workDir so repeated runs and the DuckDB oracle read identical
-    * bytes.
+    * under the work dir so repeated runs and the DuckDB oracle read
+    * identical bytes.
     */
-  def pagesParquet(spark: SparkSession, sfDir: String,
-                   workDir: String = "/root/repo/work"): String = {
+  def pagesParquet(spark: SparkSession, sfDir: String): String = {
     val n = rowsForScale(sfDir)
-    val path = s"$workDir/pages_n$n.parquet"
+    val path = s"${graft.Local.workDir}/pages_n$n.parquet"
     val dir = new java.io.File(path)
     if (!dir.exists()) {
       generate(spark, n).coalesce(4)

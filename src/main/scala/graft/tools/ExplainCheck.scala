@@ -1,21 +1,19 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Local
+import graft.gate.Gate
 
-/** Prints physical plans for the SparkEntry queries (plan-quality review). */
+/** Prints physical plans for the gated queries (plan-quality review). */
 object ExplainCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Local.session()
     for (name <- args.drop(1) match {
-      case Array() => graft.SparkEntry.queries.keys.toSeq.sorted
+      case Array() => Gate.all.map(_.name).sorted
       case rest => rest.toSeq
     }) {
       println(s"===== $name")
-      graft.SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+      Gate(name).build(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -1,10 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Local
+import graft.gate.Gate
 
-/** Iteration helper: run ONE SparkEntry query + dump its oracle SQL in the
+/** Iteration helper: run ONE gated query + dump its oracle SQL in the
   * same layout Verify uses, so tools/compare_oracle.py can gate a single
-  * query without the full 36-query sweep.
+  * query without the full sweep.
   *
   * usage: runMain graft.tools.RunQuery <name> [sfDir] [outDir]
   */
@@ -13,37 +14,21 @@ object RunQuery {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 2) args(2) else "/tmp/runquery_out"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Local.session()
     new java.io.File(outDir).mkdirs()
+    val query = Gate(name)
     if (sys.env.contains("RUNQUERY_WARM")) { // bench-style warm pass first
       val tw = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, sfDir).count()
+      query.build(spark, sfDir).count()
       println(f"[runquery] $name warm pass ${(System.nanoTime() - tw) / 1e9}%.2f s")
     }
     val t0 = System.nanoTime()
-    graft.SparkEntry.queries(name)(spark, sfDir)
+    query.build(spark, sfDir)
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
     println(f"[runquery] $name wall ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql.get(name)
-      .map(sql => s"{${q(name)}: ${q(sql)}}").getOrElse("{}")
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json)
+      java.nio.file.Paths.get(s"$outDir/oracle_sql.json"),
+      Gate.oracleJson(Seq(name -> query.oracleSql)))
     spark.stop()
   }
 }

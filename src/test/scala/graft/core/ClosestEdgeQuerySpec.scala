@@ -19,7 +19,7 @@ class ClosestEdgeQuerySpec extends AnyFunSuite {
       LatLng.toPointDegrees(41.5, -72.5), 0.02, 48)))
     index.add(PolylineShape(Polyline.fromLatLngsDegrees(
       Seq((39.0, -75.0), (39.5, -74.0), (40.0, -75.5), (41.0, -76.0)))))
-    index.add(PolygonShape(graft.SparkEntry.cityAnnuli(0)._2)) // NY annulus
+    index.add(PolygonShape(graft.gate.GeoGate.cityAnnuli(0)._2)) // NY annulus
     index
   }
 

@@ -20,7 +20,7 @@ class ShapeIndexIncrementalSpec extends AnyFunSuite {
     LatLng.toPointDegrees(41.5, -72.5), 0.03, 48))
   private def line = PolylineShape(Polyline.fromLatLngsDegrees(
     Seq((39.0, -75.0), (39.5, -74.0), (40.0, -75.5), (41.0, -76.0))))
-  private def annulus = PolygonShape(graft.SparkEntry.cityAnnuli(0)._2)
+  private def annulus = PolygonShape(graft.gate.GeoGate.cityAnnuli(0)._2)
   private def bigLoop = LoopShape(Loop.regularLoop(
     LatLng.toPointDegrees(40.0, -74.5), 0.20, 96)) // interior spans cells
   private def points = PointVectorShape(Array(

@@ -31,7 +31,7 @@ class ShapeIndexSpec extends AnyFunSuite {
     index.add(LoopShape(Loop.regularLoop(
       LatLng.toPointDegrees(40.7, -74.0), 0.05, 64)))
     index.add(LoopShape(star(LatLng.toPointDegrees(-12.0, 130.0), 64, 0.06, 0.02)))
-    index.add(PolygonShape(graft.SparkEntry.cityAnnuli(1)._2))
+    index.add(PolygonShape(graft.gate.GeoGate.cityAnnuli(1)._2))
     index.add(PolylineShape(Polyline.fromLatLngsDegrees(
       Seq((10.0, -30.0), (12.0, -28.0), (15.0, -31.0)))))
     // a loop circling the pole (crosses all four polar-face quadrants)

@@ -244,6 +244,22 @@ class CurationSpec extends AnyFunSuite {
     assert(got == Map(1L -> "tail", 2L -> "middle", 3L -> "head"))
   }
 
+  test("quantileBuckets: NULL scores stay out of the histogram and come " +
+    "back with a NULL bucket") {
+    import spark.implicits._
+    // scores 1..10 plus two NULL-score docs in the same stratum: the cuts
+    // are those of the 10 scored docs alone (head = 10, middle = 6..9)
+    val docs = ((1 to 10).map(i => (i.toLong, "en", Option(i.toLong))) ++
+      Seq((11L, "en", Option.empty[Long]), (12L, "en", Option.empty[Long])))
+      .toDF("doc_id", "lang", "score")
+    val got = Curation.quantileBuckets(docs, "lang", "score")
+      .select("doc_id", "bucket")
+      .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+    assert(got == (1 to 10).map(i => i.toLong ->
+      Option(if (i == 10) "head" else if (i >= 6) "middle" else "tail")).toMap ++
+      Map(11L -> None, 12L -> None))
+  }
+
   test("quantileBuckets: per-stratum independence and parallelism invariance") {
     import spark.implicits._
     val rng = new scala.util.Random(17)

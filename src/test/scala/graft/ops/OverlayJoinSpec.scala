@@ -18,8 +18,8 @@ class OverlayJoinSpec extends AnyFunSuite {
 
   test("shuffle path equals broadcast path on the overlay fixtures") {
     import spark.implicits._
-    val pa = graft.SparkEntry.overlayPolysA
-    val pb = graft.SparkEntry.overlayPolysB
+    val pa = graft.gate.GeoGate.overlayPolysA
+    val pb = graft.gate.GeoGate.overlayPolysB
 
     val broadcastRows = OverlayJoin.polygonOverlapJoin(spark, pa, pb)
       .collect()
@@ -50,7 +50,7 @@ class OverlayJoinSpec extends AnyFunSuite {
     import spark.implicits._
     // multi-loop polygons (holes) through encode -> shuffle -> decode
     import graft.core.{Earth, LatLng, Loop, Polygon}
-    val annuli = graft.SparkEntry.cityAnnuli
+    val annuli = graft.gate.GeoGate.cityAnnuli
     val aDf = annuli.map { case (id, p) => (id, Codec.encodePolygon(p)) }
       .toDF("a_id", "geom")
     // in-ring discs (center ~133 km out, radius 30 km: spans 103-163 km,

@@ -23,7 +23,7 @@ class PlanAuditSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def plan(q: String): String =
-    graft.SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
+    graft.gate.Gate(q).build(spark, dir).queryExecution.executedPlan.toString
 
   test("covering joins: no ScalaUDF, no exchange in the probe stage") {
     for (q <- Seq("q_pip_city", "q_rect_join", "q_radius_100km",
@@ -44,7 +44,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("parquet scans prune to the needed columns") {
-    val df = graft.SparkEntry.queries("q_dedup_exact")(spark, dir)
+    val df = graft.gate.Gate("q_dedup_exact").build(spark, dir)
     val p = df.queryExecution.executedPlan.toString
     // documents.parquet has (doc_id, text, ...); the dedup query needs
     // only those two
@@ -216,7 +216,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("crawl delta: no exchange carries the text column") {
-    val df = graft.SparkEntry.queries("q_crawl_delta")(spark, dir)
+    val df = graft.gate.Gate("q_crawl_delta").build(spark, dir)
     val exchanges = df.queryExecution.executedPlan.collect {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
     }
@@ -241,7 +241,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("headline pipeline stays inside whole-stage codegen") {
-    val df = graft.SparkEntry.queries("q_pip_city")(spark, dir)
+    val df = graft.gate.Gate("q_pip_city").build(spark, dir)
     val codegen = org.apache.spark.sql.execution.debug
       .codegenString(df.queryExecution.executedPlan)
     assert(codegen.contains("WholeStageCodegen"),

@@ -71,7 +71,7 @@ class PolylineJoinSpec extends AnyFunSuite {
 
     // overlay join with an empty side
     val aDf = Seq((0L, graft.core.Codec.encodePolygon(
-      graft.SparkEntry.overlayPolysA.head._2))).toDF("a_id", "geom")
+      graft.gate.GeoGate.overlayPolysA.head._2))).toDF("a_id", "geom")
     val bDf = spark.emptyDataset[(Long, Array[Byte])].toDF("b_id", "geom")
     assert(OverlayJoin.polygonOverlapJoinLarge(spark, aDf, bDf).count() === 0)
 

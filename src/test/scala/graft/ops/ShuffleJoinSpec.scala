@@ -18,8 +18,8 @@ class ShuffleJoinSpec extends AnyFunSuite {
 
   /** The same join inputs as Loops and as Polygons with holes. */
   private val regionSets: Seq[(String, Seq[(Long, graft.core.S2Region)])] = Seq(
-    "city loops" -> graft.SparkEntry.cityPolygons,
-    "city annuli" -> graft.SparkEntry.cityAnnuli)
+    "city loops" -> graft.gate.GeoGate.cityPolygons,
+    "city annuli" -> graft.gate.GeoGate.cityAnnuli)
 
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.select("url", "poly_id").collect()
@@ -63,7 +63,7 @@ class ShuffleJoinSpec extends AnyFunSuite {
       spark.read.parquet(
         graft.sources.PagesSource.pagesParquet(spark, "/root/testdata/sf0.001")))
     val df = ShuffleSpatialJoin.pipJoinLarge(spark, pages,
-      graft.SparkEntry.cityPolygons)
+      graft.gate.GeoGate.cityPolygons)
     df.collect() // finalize the adaptive plan
     import org.apache.spark.sql.execution._
     import org.apache.spark.sql.execution.adaptive._
@@ -92,7 +92,7 @@ class ShuffleJoinSpec extends AnyFunSuite {
 
   test("level choice shrinks with tighter row budgets") {
     val coverer = graft.core.RegionCoverer(maxCells = 32)
-    val covs = graft.SparkEntry.cityPolygons.map(p => coverer.covering(p._2))
+    val covs = graft.gate.GeoGate.cityPolygons.map(p => coverer.covering(p._2))
     val fine = ShuffleSpatialJoin.chooseLevel(covs, maxRows = 10000000L)
     val coarse = ShuffleSpatialJoin.chooseLevel(covs, maxRows = 2000L)
     assert(fine >= coarse)
@@ -105,7 +105,7 @@ class ShuffleJoinSpec extends AnyFunSuite {
     val pages = graft.sources.PagesSource.withLatLng(
       spark.read.parquet(
         graft.sources.PagesSource.pagesParquet(spark, "/root/testdata/sf0.001")))
-    val polysA = graft.SparkEntry.cityPolygons.take(2)
+    val polysA = graft.gate.GeoGate.cityPolygons.take(2)
     // same ids (0, 1), different geometry: swap the two loops
     val polysB = Seq((0L, polysA(1)._2), (1L, polysA(0)._2))
 
@@ -122,7 +122,7 @@ class ShuffleJoinSpec extends AnyFunSuite {
   }
 
   test("dim table flags only truly-interior level-k cells as interior") {
-    val polys = graft.SparkEntry.cityPolygons.take(2)
+    val polys = graft.gate.GeoGate.cityPolygons.take(2)
     val level = 10
     val dim = ShuffleSpatialJoin.polygonDimTable(spark, polys, level)
     val rows = dim.collect()

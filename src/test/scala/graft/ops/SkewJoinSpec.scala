@@ -54,7 +54,7 @@ class SkewJoinSpec extends AnyFunSuite {
 
   test("skewed fixture really concentrates >=50% of rows in one join cell") {
     import graft.functions.S2
-    val polys = graft.SparkEntry.cityPolygons
+    val polys = graft.gate.GeoGate.cityPolygons
     val covs = SpatialJoin.polygonCoverings(polys).map(_._2)
     val level = ShuffleSpatialJoin.chooseLevel(covs)
     val counts = skewedPages
@@ -68,7 +68,7 @@ class SkewJoinSpec extends AnyFunSuite {
   test("AQE skew-join split engages on the hot cell") {
     withSkewConf {
       val df = ShuffleSpatialJoin.pipJoinLarge(spark, skewedPages,
-        graft.SparkEntry.cityPolygons)
+        graft.gate.GeoGate.cityPolygons)
       df.collect() // finalize THIS df's adaptive plan (count() would
                    // execute a different QueryExecution)
       import org.apache.spark.sql.execution._
@@ -96,11 +96,11 @@ class SkewJoinSpec extends AnyFunSuite {
   test("skew-split output is row-identical to the broadcast path") {
     withSkewConf {
       val shuffleRows = ShuffleSpatialJoin.pipJoinLarge(spark, skewedPages,
-        graft.SparkEntry.cityPolygons)
+        graft.gate.GeoGate.cityPolygons)
         .select("url", "poly_id").collect()
         .map(r => (r.getString(0), r.getLong(1))).toSet
       val broadcastRows = SpatialJoin.pipJoin(spark, skewedPages,
-        graft.SparkEntry.cityPolygons)
+        graft.gate.GeoGate.cityPolygons)
         .select("url", "poly_id").collect()
         .map(r => (r.getString(0), r.getLong(1))).toSet
       assert(broadcastRows.nonEmpty)

@@ -41,7 +41,7 @@ class DirtyInputSpec extends AnyFunSuite {
 
     // the join pipeline runs end-to-end over the mixed input without error
     val joined = graft.ops.SpatialJoin.pipJoin(spark, parsed,
-      graft.SparkEntry.cityPolygons)
+      graft.gate.GeoGate.cityPolygons)
     assert(joined.count() > 0)
 
     // parsed coordinates are all in valid ranges

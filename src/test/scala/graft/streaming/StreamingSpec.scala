@@ -98,7 +98,7 @@ class StreamingSpec extends AnyFunSuite {
     val input = MemoryStream[(java.sql.Timestamp, Double, Double)]
     val events = input.toDF().toDF("ts", "lat", "lng")
     val enriched = StreamingCells.streamingPipEnrich(spark, events,
-      graft.SparkEntry.cityPolygons)
+      graft.gate.GeoGate.cityPolygons)
     val query = enriched.writeStream
       .format("memory").queryName("pip_enriched").outputMode("append").start()
     val t = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
