@@ -3,29 +3,43 @@ package graft.core
 import java.lang.{Long => JLong}
 
 /** A collection of (cellId, label) pairs over possibly-overlapping,
-  * possibly-duplicated cells (/root/reference/s2/cell_index.go:15-495):
-  * e.g. one label per stored CellUnion. Internally the sphere is split
-  * into non-overlapping leaf-cell ranges, each pointing at a node of a
-  * preorder cell TREE whose ancestor chain enumerates exactly the pairs
-  * intersecting that range.
+  * possibly-duplicated cells (the reference's cell_index.go): e.g. one
+  * label per stored CellUnion. build() splits the sphere into
+  * non-overlapping leaf-cell ranges, each pointing at a node of a preorder
+  * cell tree whose ancestor chain enumerates exactly the pairs containing
+  * that range.
   *
-  * The distributed engine analogue is the flattened broadcast covering
-  * table (ops/SpatialJoin CoveringIndex); this is the local access path
-  * with the reference's exact range/contents iterator semantics,
-  * including the intersection visitors the Go port lists as TODOs.
+  * After build() the tree and the ranges are primitive arrays (cell ids,
+  * labels and parents; range starts and range contents), so a built index
+  * is compact to broadcast. Three access paths read them: the reference's
+  * range and contents iterators, visitIntersectingCells (cell-union
+  * targets), and labelsContaining (leaf targets: one binary search, then
+  * the parent chain). The covering-candidate joins (ops/SpatialJoin
+  * CoveringIndex) use the last two.
   */
-final class CellIndex {
+final class CellIndex extends Serializable {
   import CellIndex._
 
-  private[core] var cellTree = scala.collection.mutable.ArrayBuffer[Node]()
-  private[core] var rangeNodes = scala.collection.mutable.ArrayBuffer[RangeNode]()
+  // Pairs queued by add(); build() moves them into the tree.
+  private var pendingCells = Array.newBuilder[Long]
+  private var pendingLabels = Array.newBuilder[Int]
   private var built = false
+
+  // The preorder cell tree: node k stores one pair and its parent node.
+  private var treeCells: Array[Long] = _
+  private var treeLabels: Array[Int] = _
+  private var treeParents: Array[Int] = _
+  // The leaf-cell ranges: range r starts at rangeStarts(r) and its pairs
+  // are the chain from node rangeContents(r) (DoneContents when empty).
+  private var rangeStarts: Array[Long] = _
+  private var rangeContents: Array[Int] = _
 
   /** Queue a (cellId, label) pair; call build() before iterating. */
   def add(id: Long, label: Int): Unit = {
     require(label >= 0, "labels must be non-negative")
     require(!built, "CellIndex is not dynamic: add before build")
-    cellTree += Node(id, label, -1)
+    pendingCells += id
+    pendingLabels += label
   }
 
   /** Add every cell of the union under one label. */
@@ -33,53 +47,109 @@ final class CellIndex {
     cu.ids.foreach(add(_, label))
 
   /** Build the leaf-cell ranges and preorder cell tree
-    * (cell_index.go:406-489): each pair contributes a push delta at its
-    * range start and a pop delta just past its range end; sweeping the
-    * deltas in (startId asc, cellId desc, label asc) order maintains the
-    * ancestor stack and emits one RangeNode per distinct boundary.
+    * (cell_index.go:406-489): each pair is pushed at its range start and
+    * popped just past its range end. Sweeping the boundaries in order —
+    * at each one the pops first, then the pushes in (cellId desc, label
+    * asc) order — maintains the ancestor stack and emits one range per
+    * distinct boundary, including the first and last leaf of the sphere.
     */
   def build(): Unit = {
     if (built) return
     built = true
-    final case class Delta(startId: Long, cellId: Long, label: Int)
-    val deltas = scala.collection.mutable.ArrayBuffer[Delta]()
-    for (node <- cellTree) {
-      deltas += Delta(CellId.rangeMin(node.cellId), node.cellId, node.label)
-      deltas += Delta(CellId.next(CellId.rangeMax(node.cellId)),
-        SentinelCellId, -1)
-    }
-    deltas += Delta(CellId.childBeginAtLevel(CellId.fromFace(0), CellId.MaxLevel),
-      0L, -1)
-    deltas += Delta(CellId.childEndAtLevel(CellId.fromFace(5), CellId.MaxLevel),
-      0L, -1)
-    val sorted = deltas.sortWith { (a, b) =>
-      if (a.startId != b.startId) JLong.compareUnsigned(a.startId, b.startId) < 0
-      else if (a.cellId != b.cellId) JLong.compareUnsigned(a.cellId, b.cellId) > 0
-      else a.label < b.label
-    }
-    cellTree = scala.collection.mutable.ArrayBuffer[Node]()
-    rangeNodes = scala.collection.mutable.ArrayBuffer[RangeNode]()
-    var contents = -1
-    var i = 0
-    while (i < sorted.length) {
-      val startId = sorted(i).startId
-      while (i < sorted.length && sorted(i).startId == startId) {
-        val d = sorted(i)
-        if (d.label >= 0) {
-          cellTree += Node(d.cellId, d.label, contents)
-          contents = cellTree.length - 1
-        } else if (d.cellId == SentinelCellId) {
-          contents = cellTree(contents).parent
-        }
-        i += 1
+    val cells = pendingCells.result()
+    val labels = pendingLabels.result()
+    pendingCells = null
+    pendingLabels = null
+    val n = cells.length
+    val pushes = Array.tabulate[Integer](n)(Int.box)
+    java.util.Arrays.sort(pushes, (a: Integer, b: Integer) => {
+      val byStart = JLong.compareUnsigned(CellId.rangeMin(cells(a)), CellId.rangeMin(cells(b)))
+      if (byStart != 0) byStart
+      else if (cells(a) != cells(b)) JLong.compareUnsigned(cells(b), cells(a))
+      else Integer.compare(labels(a), labels(b))
+    })
+    def pushStart(k: Int) = CellId.rangeMin(cells(pushes(k)))
+    // Pop positions, sign-flipped so that a signed sort orders them
+    // unsigned.
+    def flip(id: Long) = id ^ Long.MinValue
+    val pops = cells.map(c => flip(CellId.next(CellId.rangeMax(c))))
+    java.util.Arrays.sort(pops)
+
+    treeCells = new Array[Long](n)
+    treeLabels = new Array[Int](n)
+    treeParents = new Array[Int](n)
+    val starts = Array.newBuilder[Long]
+    val contentsOf = Array.newBuilder[Int]
+    val last = CellId.childEndAtLevel(CellId.fromFace(5), CellId.MaxLevel)
+    var boundary = CellId.childBeginAtLevel(CellId.fromFace(0), CellId.MaxLevel)
+    var contents = DoneContents
+    var pi = 0 // next push
+    var qi = 0 // next pop
+    var more = true
+    while (more) {
+      while (qi < n && flip(pops(qi)) == boundary) {
+        contents = treeParents(contents)
+        qi += 1
       }
-      rangeNodes += RangeNode(startId, contents)
+      while (pi < n && pushStart(pi) == boundary) {
+        treeCells(pi) = cells(pushes(pi))
+        treeLabels(pi) = labels(pushes(pi))
+        treeParents(pi) = contents
+        contents = pi
+        pi += 1
+      }
+      starts += boundary
+      contentsOf += contents
+      // the next boundary: the least of the next push, next pop and last
+      var next = last
+      if (pi < n && JLong.compareUnsigned(pushStart(pi), next) < 0) next = pushStart(pi)
+      if (qi < n && JLong.compareUnsigned(flip(pops(qi)), next) < 0) next = flip(pops(qi))
+      more = boundary != last
+      boundary = next
     }
+    rangeStarts = starts.result()
+    rangeContents = contentsOf.result()
   }
 
   def rangeIterator(): RangeIterator = { build(); new RangeIterator(this, false) }
   def nonEmptyRangeIterator(): RangeIterator = { build(); new RangeIterator(this, true) }
   def contentsIterator(): ContentsIterator = { build(); new ContentsIterator(this) }
+
+  /** Every stored pair, in tree order. */
+  private[core] def pairs: IndexedSeq[(Long, Int)] = {
+    build()
+    treeCells.indices.map(k => (treeCells(k), treeLabels(k)))
+  }
+
+  /** The labels of every stored pair whose cell contains the leaf cell,
+    * coarsest cell first (pairs of one cell in label order): the leaf's
+    * range by binary search, then its node's parent chain.
+    */
+  def labelsContaining(leaf: Long): Array[Int] = {
+    build()
+    val top = rangeContents(rangeAt(leaf))
+    var n = 0
+    var k = top
+    while (k != DoneContents) { n += 1; k = treeParents(k) }
+    val out = new Array[Int](n)
+    k = top
+    while (k != DoneContents) { n -= 1; out(n) = treeLabels(k); k = treeParents(k) }
+    out
+  }
+
+  /** The last range starting at or before the target (range 0 for targets
+    * before the first leaf).
+    */
+  private def rangeAt(target: Long): Int = {
+    var lo = 0
+    var hi = rangeStarts.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (JLong.compareUnsigned(rangeStarts(mid), target) <= 0) lo = mid + 1
+      else hi = mid
+    }
+    math.max(lo - 1, 0)
+  }
 
   /** Visit every (cellId, label) pair that intersects the target union,
     * each exactly once (the C++ VisitIntersectingCells the Go port lists
@@ -126,24 +196,21 @@ final class CellIndex {
 }
 
 object CellIndex {
-  val SentinelCellId: Long = -1L // all ones: larger than any valid cell id
   val DoneContents: Int = -1
-
-  final case class Node(cellId: Long, label: Int, parent: Int)
-  final case class RangeNode(startId: Long, contents: Int)
 
   /** Iterator over the non-overlapping leaf-cell ranges covering the
     * sphere (cell_index.go:67-215); optionally skipping empty ranges.
     */
   final class RangeIterator(index: CellIndex, nonEmpty: Boolean) {
-    private val nodes = index.rangeNodes
+    private val starts = index.rangeStarts
+    private val contentsOf = index.rangeContents
     private var pos = 0
 
-    def startId: Long = nodes(pos).startId
-    def limitId: Long = nodes(pos + 1).startId
-    def isEmpty: Boolean = nodes(pos).contents == DoneContents
-    def done: Boolean = pos >= nodes.length - 1
-    private[CellIndex] def contents: Int = nodes(pos).contents
+    def startId: Long = starts(pos)
+    def limitId: Long = starts(pos + 1)
+    def isEmpty: Boolean = contentsOf(pos) == DoneContents
+    def done: Boolean = pos >= starts.length - 1
+    private[CellIndex] def contents: Int = contentsOf(pos)
 
     def begin(): Unit = {
       pos = 0
@@ -153,9 +220,9 @@ object CellIndex {
       pos += 1
       while (nonEmpty && isEmpty && !done) pos += 1
     }
-    def finish(): Unit = pos = nodes.length - 1
+    def finish(): Unit = pos = starts.length - 1
     def advance(n: Int): Boolean = {
-      if (n >= nodes.length - 1 - pos) return false
+      if (n >= starts.length - 1 - pos) return false
       pos += n
       true
     }
@@ -175,19 +242,11 @@ object CellIndex {
       if (isEmpty && !done) next()
       false
     }
-    /** First range with startId > target comes after pos; position at the
-      * last range with startId <= target (always exists for valid leaf
-      * targets).
+    /** Position at the last range with startId <= target (always exists
+      * for valid leaf targets).
       */
     def seek(target: Long): Unit = {
-      var lo = 0
-      var hi = nodes.length
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (JLong.compareUnsigned(nodes(mid).startId, target) <= 0) lo = mid + 1
-        else hi = mid
-      }
-      pos = math.max(lo - 1, 0)
+      pos = index.rangeAt(target)
       while (nonEmpty && isEmpty && !done) pos += 1
     }
   }
@@ -197,29 +256,31 @@ object CellIndex {
     * order reports each pair exactly once.
     */
   final class ContentsIterator(index: CellIndex) {
-    private val cellTree = index.cellTree
+    private val cells = index.treeCells
+    private val labels = index.treeLabels
+    private val parents = index.treeParents
     private var nodeCutoff = -1
     private var nextNodeCutoff = -1
     private var prevStartId = 0L
-    private var node = Node(0L, DoneContents, -1)
+    private var node = DoneContents
 
     def clear(): Unit = {
       prevStartId = 0L
       nodeCutoff = -1
       nextNodeCutoff = -1
-      node = node.copy(label = DoneContents)
+      node = DoneContents
     }
-    def cellId: Long = node.cellId
-    def label: Int = node.label
-    def done: Boolean = node.label == DoneContents
+    def cellId: Long = cells(node)
+    def label: Int = if (done) DoneContents else labels(node)
+    def done: Boolean = node == DoneContents
 
     def next(): Unit = {
-      if (node.parent <= nodeCutoff) {
+      if (parents(node) <= nodeCutoff) {
         // already processed this node and its ancestors
         nodeCutoff = nextNodeCutoff
-        node = node.copy(label = DoneContents)
+        node = DoneContents
       } else {
-        node = cellTree(node.parent)
+        node = parents(node)
       }
     }
 
@@ -228,8 +289,7 @@ object CellIndex {
         nodeCutoff = -1 // non-monotone visit: cannot suppress duplicates
       prevStartId = r.startId
       val contents = r.contents
-      if (contents <= nodeCutoff) node = node.copy(label = DoneContents)
-      else node = cellTree(contents)
+      node = if (contents <= nodeCutoff) DoneContents else contents
       // When visiting ancestors, stop as soon as the node index drops to
       // a previously visited one (preorder indexes: already reported).
       nextNodeCutoff = contents

@@ -8,14 +8,16 @@ import org.apache.spark.sql.types._
 import graft.ops.SpatialJoin.CoveringIndex
 
 /** Covering-probe kernel shared by interpreted eval and generated code:
-  * leaf-encode the point, probe the broadcast CoveringIndex through the
-  * ancestor-chain hash, refine boundary candidates exactly. Returns the
-  * matching region ids.
+  * leaf-encode the point, probe the broadcast CoveringIndex with the leaf,
+  * refine boundary candidates exactly. Returns the matching region ids; a
+  * point with a non-finite coordinate matches none (CellId encodes every
+  * such point to one corner leaf, which a covering may contain).
   */
 object CoveringProbe {
   type State = (CoveringIndex, (Long, Double, Double) => Boolean)
 
   def probe(bc: Broadcast[State], lat: Double, lng: Double): Array[Long] = {
+    if (!java.lang.Double.isFinite(lat) || !java.lang.Double.isFinite(lng)) return empty
     val (idx, refine) = bc.value
     val leaf = graft.core.CellId.fromLatLngDegrees(lat, lng)
     val cands = idx.candidates(leaf)

@@ -6,14 +6,17 @@ import graft.core._
 
 /** Polyline x polygon crossing join: which trajectories cross which
   * polygon boundaries — the distributed analogue of the reference's
-  * CrossingEdgeQuery (/root/reference/s2/crossing_edge_query.go:15-60).
+  * CrossingEdgeQuery (crossing_edge_query.go:15-60).
   *
   * The polyline side is a DataFrame (a trajectory table at any scale);
-  * polygons are broadcast with their bounds. Candidates are pruned by
-  * chain-bound x polygon-bound intersection, then refined with exact
-  * chain crossing signs; for large polygons the per-segment candidate
-  * edges come from the loop's edge index, so the refine is sublinear in
-  * the polygon's vertex count.
+  * polygons are broadcast with a SpatialJoin.CoveringIndex of their
+  * coverings, the index the point joins probe. Each row covers its line
+  * with the default RegionCoverer and refines only the polygons whose
+  * covering intersects the line's: the pruning is exact, since a line
+  * that crosses or lies inside a loop shares a point with it. The refine
+  * counts exact chain crossing signs; for large polygons the per-segment
+  * candidate edges come from the loop's edge index, so the refine is
+  * sublinear in the polygon's vertex count.
   */
 object CrossingJoin {
 
@@ -37,43 +40,56 @@ object CrossingJoin {
   def polylinePolygonJoinDF(spark: SparkSession, lines: DataFrame,
                             polygons: Seq[(Long, Loop)],
                             includeContained: Boolean = true): DataFrame = {
-    val bc = spark.sparkContext.broadcast(polygons)
+    // Region ids in the index are positions in `polygons`.
+    val regions = polygons.map(_._2).toArray
+    val bc = spark.sparkContext.broadcast((
+      SpatialJoin.CoveringIndex.build(SpatialJoin.polygonCoverings(
+        regions.indices.map(i => (i.toLong, regions(i))))),
+      polygons.map(_._1).toArray, regions))
 
     val matchUdf = udf((xs: Seq[Double], ys: Seq[Double], zs: Seq[Double]) => {
-      val verts = Array.tabulate(xs.length)(i => Vec3(xs(i), ys(i), zs(i)))
-      val rb = new RectBounder
-      verts.foreach(rb.addPoint)
-      val lineBound = rb.rectBound
-      bc.value.iterator.flatMap { case (polyId, loop) =>
-        if (!lineBound.intersects(loop.bound)) None
-        else {
-          var crossings = 0
-          var i = 1
-          while (i < verts.length) {
-            val a = verts(i - 1)
-            val b = verts(i)
-            val crosser = new EdgeCrosser(a, b)
-            val cand = loop.candidateEdgesPublic(a, b)
-            var k = 0
-            while (k < cand.length) {
-              val e = cand(k)
-              if (crosser.crossingSignTo(loop.vertex(e), loop.vertex(e + 1))
-                == EdgeCrossings.Cross) crossings += 1
-              k += 1
-            }
-            i += 1
-          }
+      val (index, polyIds, loops) = bc.value
+      if (xs.isEmpty) Seq.empty[(Long, Int)]
+      else {
+        val verts = Array.tabulate(xs.length)(i => Vec3(xs(i), ys(i), zs(i)))
+        val covering = RegionCoverer().covering(new Polyline(verts))
+        index.intersecting(covering).toSeq.flatMap { r =>
+          val loop = loops(r.toInt)
+          val crossings = crossingCount(verts, loop)
           val contained = crossings == 0 && loop.containsPoint(verts(0))
           if (crossings > 0 || (includeContained && contained))
-            Some((polyId, crossings))
+            Some((polyIds(r.toInt), crossings))
           else None
         }
-      }.toSeq
+      }
     })
 
     lines
       .select(col("line_id"),
         explode(matchUdf(col("xs"), col("ys"), col("zs"))).as("m"))
       .select(col("line_id"), col("m._1").as("poly_id"), col("m._2").as("crossings"))
+  }
+
+  /** Edges of the chain that cross an edge of the loop, counted per
+    * (chain edge, loop edge) pair.
+    */
+  private def crossingCount(verts: Array[Vec3], loop: Loop): Int = {
+    var crossings = 0
+    var i = 1
+    while (i < verts.length) {
+      val a = verts(i - 1)
+      val b = verts(i)
+      val crosser = new EdgeCrosser(a, b)
+      val cand = loop.candidateEdgesPublic(a, b)
+      var k = 0
+      while (k < cand.length) {
+        val e = cand(k)
+        if (crosser.crossingSignTo(loop.vertex(e), loop.vertex(e + 1))
+          == EdgeCrossings.Cross) crossings += 1
+        k += 1
+      }
+      i += 1
+    }
+    crossings
   }
 }

@@ -16,24 +16,19 @@ import graft.core._
   *  2. Equi-join on the cell key yields candidate pairs: two polygons can
   *     only relate if some covering cell overlaps. One shuffle, keyed by
   *     cell; hot cells are AQE-splittable.
-  *  3. Candidate pairs are dedup'd on ids (narrow) and refined with the
-  *     exact relation predicates against broadcast geometry.
+  *  3. Candidate pairs are dedup'd on ids (narrow), joined back to both
+  *     sides' geometry and refined with the exact relation predicates.
   *
-  * For broadcast-scale fixture sets the same plan degenerates gracefully
-  * (tiny dim tables, broadcast hash join) — the shape is what matters at
-  * 100 TB.
+  * There is one plan: the driver-side list entry point encodes its
+  * polygons and runs it. For broadcast-scale fixture sets it degenerates
+  * gracefully (tiny dim tables, broadcast hash join) — the shape is what
+  * matters at 100 TB.
   */
 object OverlayJoin {
 
-  /** Covering dim table rows (cell_lk, id) for a polygon set. */
-  private def coveringCells(polys: Seq[(Long, Polygon)], level: Int,
-                            coverer: RegionCoverer): Seq[(Long, Long)] =
-    polys.flatMap { case (id, p) =>
-      coverer.covering(p).denormalize(level, 1).ids
-        .map(c => (CellId.parent(c, level), id)).distinct
-    }
-
-  /** Inner overlap join of two polygon sets.
+  /** Inner overlap join of two driver-side polygon sets; wraps the
+    * DataFrame path with both sides in the lossless join wire form
+    * (SpatialJoin.encodeGeometry).
     *
     * @return DataFrame(a_id, b_id, a_contains_b, b_contains_a) with one
     *         row per intersecting pair.
@@ -44,27 +39,10 @@ object OverlayJoin {
                          level: Int = 8,
                          maxCells: Int = 32): DataFrame = {
     import spark.implicits._
-    val coverer = RegionCoverer(maxCells = maxCells)
-    val aCells = coveringCells(polysA, level, coverer).toDF("cell", "a_id")
-    val bCells = coveringCells(polysB, level, coverer).toDF("cell", "b_id")
-
-    val candidates = aCells.join(bCells, "cell")
-      .select("a_id", "b_id").distinct()
-
-    val aMap = spark.sparkContext.broadcast(polysA.toMap)
-    val bMap = spark.sparkContext.broadcast(polysB.toMap)
-    val relUdf = udf((aId: Long, bId: Long) => {
-      val a = aMap.value(aId)
-      val b = bMap.value(bId)
-      if (!a.intersects(b)) null
-      else (a.contains(b), b.contains(a))
-    })
-
-    candidates
-      .withColumn("rel", relUdf(col("a_id"), col("b_id")))
-      .filter(col("rel").isNotNull)
-      .select(col("a_id"), col("b_id"),
-        col("rel._1").as("a_contains_b"), col("rel._2").as("b_contains_a"))
+    def side(polys: Seq[(Long, Polygon)], idCol: String) =
+      polys.map { case (id, p) => (id, SpatialJoin.encodeGeometry(p)) }.toDF(idCol, "geom")
+    polygonOverlapJoinLarge(spark, side(polysA, "a_id"), side(polysB, "b_id"),
+      level, maxCells)
   }
 
   /** Shuffle-native overlay join for polygon sets too large to broadcast:
@@ -82,8 +60,8 @@ object OverlayJoin {
                               maxCells: Int = 32): DataFrame = {
     val coverUdf = udf((geom: Array[Byte]) => {
       val p = Codec.decodePolygon(geom)
-      RegionCoverer(maxCells = maxCells).covering(p)
-        .denormalize(level, 1).ids.map(c => CellId.parent(c, level)).distinct
+      RegionCoverer(maxCells = maxCells).covering(p).ids
+        .flatMap(CellId.cellsAtLevel(_, level)).distinct
     })
     val aCells = polysA
       .withColumn("cell", explode(coverUdf(col("geom"))))

@@ -51,7 +51,7 @@ object PolylineJoin {
         val coverer = RegionCoverer(maxCells = maxCells)
         var cov = coverer.covering(pl)
         if (expand) cov = cov.expandByRadius(radiusRad, 4)
-        cov.denormalize(level, 1).ids.map(c => CellId.parent(c, level)).distinct
+        cov.ids.flatMap(CellId.cellsAtLevel(_, level)).distinct
       })
 
     val aCells = linesA

@@ -120,7 +120,12 @@ object ShuffleSpatialJoin {
     val geoms = geometryTable(spark, polygons)
 
     import graft.functions.S2
+    // CellId encodes every point with a non-finite coordinate to one
+    // corner leaf; such a point is in no region, so it must not reach the
+    // exchange keyed to that corner's cell.
+    def finite(c: String) = !isnan(col(c)) && abs(col(c)) =!= Double.PositiveInfinity
     val pts = points
+      .filter(finite(latCol) && finite(lngCol))
       .withColumn("cell_lk",
         S2.parent(S2.cellId(col(latCol), col(lngCol)), lit(level)))
 

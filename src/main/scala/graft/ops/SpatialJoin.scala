@@ -20,16 +20,13 @@ import graft.core._
   *
   *  - Per region, precompute a RegionCoverer covering and interior
   *    covering once (driver side, embarrassingly parallel over regions).
-  *  - Broadcast a CoveringIndex: hash map from covering cell id to the
-  *    regions it belongs to (with an interior flag). This is the Spark
-  *    analogue of the reference's (cell, label) CellIndex
-  *    (/root/reference/s2/cell_index.go:370-460), keyed for O(levels)
-  *    point probes: a leaf cell is inside a covering cell iff that cell
-  *    is one of its <= 31 ancestors, so lookup = one hash probe per
-  *    distinct level present in the index. Correct under arbitrary
-  *    overlap between different regions' coverings (an interval scan
-  *    sorted by rangeMin is NOT — overlapping coverings break the
-  *    monotonicity a rangeMax binary search needs).
+  *  - Broadcast a CoveringIndex: the reference's (cell, label) index,
+  *    core.CellIndex, over every region's interior and boundary cells,
+  *    stored as primitive arrays. Its leaf-cell ranges never overlap, so
+  *    a point probe is one binary search for the leaf's range plus a walk
+  *    up that range's ancestor chain, which lists exactly the covering
+  *    cells containing the leaf, however different regions' coverings
+  *    overlap. CrossingJoin probes the same index with a line's covering.
   *  - A single narrow map stage probes each point's leaf cell. Points in
   *    *interior* covering cells skip the exact test (the containsCenter
   *    fast path, shapeindex.go:373-470); boundary candidates are refined
@@ -42,37 +39,35 @@ import graft.core._
   */
 object SpatialJoin {
 
-  /** Broadcastable covering index: covering cell id -> packed entries of
-    * (regionId, isInterior). Probe with the leaf's ancestor chain.
+  /** Broadcastable covering index: a CellIndex over every region's
+    * interior and boundary cells, labelled 2 * position + isInterior, and
+    * one packed entry per label, regionId << 1 | isInterior. Probe it with
+    * a leaf (candidates) or with a covering (intersecting).
     */
-  final class CoveringIndex(cellToEntries: java.util.HashMap[Long, Array[Long]],
-                            val levels: Array[Int]) extends Serializable {
+  final class CoveringIndex private (cells: CellIndex, packed: Array[Long],
+                                     val levels: Array[Int]) extends Serializable {
 
     /** Candidate (regionId, isInterior) pairs for a leaf cell, packed as
-      * regionId << 1 | interiorBit. Distinct regions may appear twice
-      * (interior + boundary cells at different levels); callers dedup.
+      * regionId << 1 | interiorBit, coarsest covering cell first. A region
+      * appears twice if its interior and boundary cells overlap; callers
+      * dedup.
       */
     def candidates(leaf: Long): Array[Long] = {
-      var out: Array[Long] = null
-      var total = 0
-      val hits = new Array[Array[Long]](levels.length)
+      val labels = cells.labelsContaining(leaf)
+      if (labels.length == 0) return CoveringIndex.emptyLongs
+      val out = new Array[Long](labels.length)
       var i = 0
-      while (i < levels.length) {
-        val anc = CellId.parent(leaf, levels(i))
-        val e = cellToEntries.get(anc)
-        if (e != null) { hits(i) = e; total += e.length }
-        i += 1
-      }
-      if (total == 0) return CoveringIndex.emptyLongs
-      out = new Array[Long](total)
-      var k = 0
-      i = 0
-      while (i < levels.length) {
-        val e = hits(i)
-        if (e != null) { System.arraycopy(e, 0, out, k, e.length); k += e.length }
-        i += 1
-      }
+      while (i < labels.length) { out(i) = packed(labels(i)); i += 1 }
       out
+    }
+
+    /** The distinct ids of the regions whose covering intersects the
+      * union, in build order.
+      */
+    def intersecting(covering: CellUnion): Array[Long] = {
+      val hit = new java.util.BitSet(packed.length >> 1)
+      cells.visitIntersectingCells(covering, (_, label) => { hit.set(label >> 1); true })
+      hit.stream().mapToLong(r => packed(r << 1) >> 1).toArray
     }
   }
 
@@ -81,20 +76,21 @@ object SpatialJoin {
 
     /** Build from (regionId, covering, interiorCovering) triples. */
     def build(entries: Seq[(Long, CellUnion, CellUnion)]): CoveringIndex = {
-      val m = new java.util.HashMap[Long, Array[Long]]()
-      val levels = scala.collection.mutable.SortedSet[Int]()
-      def add(cell: Long, packed: Long): Unit = {
-        levels += CellId.level(cell)
-        val prev = m.get(cell)
-        if (prev == null) m.put(cell, Array(packed))
-        else m.put(cell, prev :+ packed)
-      }
-      for ((id, covering, interior) <- entries) {
+      val cells = new CellIndex
+      val packed = new Array[Long](2 * entries.size)
+      var levels = 0
+      for (((id, covering, interior), r) <- entries.iterator.zipWithIndex) {
+        packed(2 * r) = id << 1
+        packed(2 * r + 1) = (id << 1) | 1L
         val boundary = covering.difference(interior)
-        interior.ids.foreach(c => add(c, (id << 1) | 1L))
-        boundary.ids.foreach(c => add(c, id << 1))
+        cells.addCellUnion(interior, 2 * r + 1)
+        cells.addCellUnion(boundary, 2 * r)
+        (interior.ids.iterator ++ boundary.ids.iterator)
+          .foreach(c => levels |= 1 << CellId.level(c))
       }
-      new CoveringIndex(m, levels.toArray)
+      cells.build()
+      new CoveringIndex(cells, packed,
+        (0 to CellId.MaxLevel).filter(l => (levels & (1 << l)) != 0).toArray)
     }
   }
 

@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * agree with seek/prev/next, the non-empty iterator stays synchronized,
   * and the contents iterator reports exactly the pairs whose cells
   * contain each range — for the named protocols and random overlapping
-  * cell unions. The intersection visitors (left as TODOs in the Go port)
-  * are cross-checked against brute force.
+  * cell unions; the leaf point query agrees with the contents at both
+  * ends of every range. The intersection visitors (left as TODOs in the
+  * Go port) are cross-checked against brute force.
   */
 class CellIndexSpec extends AnyFunSuite {
   import CellIndex._
@@ -90,23 +91,26 @@ class CellIndexSpec extends AnyFunSuite {
       assert(lt(minCellId, r.limitId), s"$desc: range must be non-empty")
       minCellId = r.limitId
 
-      val expected = index.cellTree.filter { x =>
-        leq(CellId.rangeMin(x.cellId), r.startId) &&
-          leq(r.limitId, CellId.next(CellId.rangeMax(x.cellId)))
-      }.toSeq
+      val expected = index.pairs.filter { case (cellId, _) =>
+        leq(CellId.rangeMin(cellId), r.startId) &&
+          leq(r.limitId, CellId.next(CellId.rangeMax(cellId)))
+      }
       // cells not covering the range must not intersect it either
-      index.cellTree.filterNot(expected.contains).foreach { x =>
-        assert(!(leq(CellId.rangeMin(x.cellId), CellId.prev(r.limitId)) &&
-          leq(r.startId, CellId.rangeMax(x.cellId))),
+      index.pairs.filterNot(expected.contains).foreach { case (cellId, _) =>
+        assert(!(leq(CellId.rangeMin(cellId), CellId.prev(r.limitId)) &&
+          leq(r.startId, CellId.rangeMax(cellId))),
           s"$desc: cell intersects range without covering it")
       }
       val actual = scala.collection.mutable.ArrayBuffer[(Long, Int)]()
       val c = index.contentsIterator()
       c.startUnion(r)
       while (!c.done) { actual += ((c.cellId, c.label)); c.next() }
-      assert(actual.sorted.toSeq ===
-        expected.map(x => (x.cellId, x.label)).sorted,
+      assert(actual.sorted.toSeq === expected.sorted,
         s"$desc: contents mismatch for range ${CellId.toToken(r.startId)}")
+      // the point query at either end of the range lists the same pairs
+      for (leaf <- Seq(r.startId, CellId.prev(r.limitId)))
+        assert(index.labelsContaining(leaf).sorted.toSeq === expected.map(_._2).sorted,
+          s"$desc: point query mismatch at ${CellId.toToken(leaf)}")
       r.next()
     }
     assert(minCellId ===

@@ -21,6 +21,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    decodes to a region with the same containsPoint — at loop vertices,
   *    edge midpoints, the poles and the antimeridian, with loops on both
   *    sides of the edge-index threshold.
+  *  - The broadcast joins' CoveringIndex: a leaf's candidates are exactly
+  *    the entries whose cell contains it, and a covering's intersecting
+  *    regions are exactly those whose covering meets it.
   */
 class CellRelationPropSpec extends AnyFunSuite {
   import RegionRelation._
@@ -243,5 +246,60 @@ class CellRelationPropSpec extends AnyFunSuite {
     Codec.decodePolygon(encodeGeometry(hole))
     assert(hole.depth == 1)
     intercept[IllegalArgumentException](encodeGeometry(Cap.fromCenterRadians(Vec3(0, 0, 1), 0.1)))
+  }
+
+  /** Six regions (overlapping ones included) indexed as the broadcast
+    * joins index them, under ids that are not their positions.
+    */
+  private val coveringsGen: Gen[Seq[(Long, CellUnion, CellUnion)]] = for {
+    regions <- Gen.listOfN(6, regionGen)
+    maxCells <- Gen.oneOf(4, 8, 32)
+  } yield regions.zipWithIndex.map { case (r, i) =>
+    val (c, ic) = RegionCoverer(maxCells = maxCells).coverings(r)
+    (100L + 7 * i, c, ic)
+  }
+
+  /** Leaves at the hard places, at the first and last leaf of every
+    * covering cell, and at its vertices.
+    */
+  private def leavesFor(covs: Seq[(Long, CellUnion, CellUnion)]): Gen[Seq[Long]] =
+    Gen.listOfN(16, hardPlace).map { places =>
+      val cells = covs.flatMap { case (_, c, ic) => c.ids ++ ic.ids }
+      places.map { case (lat, lng) => CellId.fromLatLngDegrees(lat, lng) } ++
+        cells.flatMap(c => Seq(CellId.rangeMin(c), CellId.rangeMax(c))) ++
+        cells.flatMap(c => (0 until 4).map { k =>
+          val v = Cell.fromId(c).vertex(k)
+          CellId.fromPoint(v.x, v.y, v.z)
+        })
+    }
+
+  test("CoveringIndex.candidates equals the entries whose cell contains the leaf") {
+    import graft.ops.SpatialJoin.CoveringIndex
+    val cases = for (covs <- coveringsGen; leaves <- leavesFor(covs)) yield (covs, leaves)
+    check(Prop.forAllNoShrink(cases) { case (covs, leaves) =>
+      val index = CoveringIndex.build(covs)
+      val bad = leaves.filter { leaf =>
+        val brute = covs.flatMap { case (id, c, ic) =>
+          ic.ids.filter(CellId.contains(_, leaf)).map(_ => (id << 1) | 1L) ++
+            c.difference(ic).ids.filter(CellId.contains(_, leaf)).map(_ => id << 1)
+        }
+        index.candidates(leaf).sorted.toSeq != brute.sorted
+      }
+      bad.isEmpty :| s"candidates differ at ${bad.map(CellId.toToken)}"
+    })
+  }
+
+  test("CoveringIndex.intersecting equals the regions whose covering meets the union") {
+    import graft.ops.SpatialJoin.CoveringIndex
+    val cases = for {
+      covs <- coveringsGen
+      target <- regionGen
+      maxCells <- Gen.oneOf(1, 8, 32)
+    } yield (covs, RegionCoverer(maxCells = maxCells).covering(target))
+    check(Prop.forAllNoShrink(cases) { case (covs, target) =>
+      val got = CoveringIndex.build(covs).intersecting(target).toSeq
+      val want = covs.collect { case (id, c, _) if c.intersectsUnion(target) => id }
+      (got == want) :| s"intersecting $got, brute $want"
+    })
   }
 }

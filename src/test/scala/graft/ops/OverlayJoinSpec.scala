@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Codec
 
-/** The shuffle-native overlay join must produce exactly the broadcast
-  * path's rows (same logical semantics, different physical strategy).
+/** The overlay join against a brute all-pairs scan of the exact
+  * Polygon predicates, through the list entry point and the DataFrame
+  * path it wraps.
   */
 class OverlayJoinSpec extends AnyFunSuite {
 
@@ -16,27 +17,30 @@ class OverlayJoinSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  test("shuffle path equals broadcast path on the overlay fixtures") {
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2), r.getBoolean(3)))
+      .toSet
+
+  test("overlay join equals a brute all-pairs scan on the overlay fixtures") {
     import spark.implicits._
     val pa = graft.gate.GeoGate.overlayPolysA
     val pb = graft.gate.GeoGate.overlayPolysB
+    val brute = (for {
+      (ai, a) <- pa
+      (bi, b) <- pb
+      if a.intersects(b)
+    } yield (ai, bi, a.contains(b), b.contains(a))).toSet
+    assert(brute.exists(r => r._3) && brute.exists(r => !r._3 && !r._4),
+      "fixtures should hold both contained and merely overlapping pairs")
 
-    val broadcastRows = OverlayJoin.polygonOverlapJoin(spark, pa, pb)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2), r.getBoolean(3)))
-      .toSet
+    assert(rows(OverlayJoin.polygonOverlapJoin(spark, pa, pb)) === brute)
 
     val aDf = pa.map { case (id, p) => (id, Codec.encodePolygon(p)) }
       .toDF("a_id", "geom")
     val bDf = pb.map { case (id, p) => (id, Codec.encodePolygon(p)) }
       .toDF("b_id", "geom")
-    val shuffleRows = OverlayJoin.polygonOverlapJoinLarge(spark, aDf, bDf)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2), r.getBoolean(3)))
-      .toSet
-
-    assert(broadcastRows.nonEmpty)
-    assert(shuffleRows === broadcastRows)
+    assert(rows(OverlayJoin.polygonOverlapJoinLarge(spark, aDf, bDf)) === brute)
 
     // covering rows must not carry geometry (the r1 dim-table lesson)
     val plan = OverlayJoin.polygonOverlapJoinLarge(spark, aDf, bDf)

@@ -48,6 +48,18 @@ class PolylineJoinSpec extends AnyFunSuite {
     assert(got === want)
   }
 
+  test("a radius far finer than the lines' coverings fails the fan-out guard") {
+    // ~2,000 km along 40N with a 1 m radius: the join level is ~22 while
+    // the coverings are ~level 6, a fan-out of ~4^16 cells per cell.
+    val long = Seq((0L, Polyline.fromLatLngsDegrees(Seq((40.0, -10.0), (40.0, 13.5)))))
+    val e = intercept[Exception](
+      PolylineJoin.polylineRadiusJoin(spark, long, long, 1.0).collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("fan-out")) &&
+      messages.exists(_.contains("is unreasonably large")), messages.mkString("\n"))
+  }
+
   test("degenerate inputs: empty sides, tiny k-overflow, single chains") {
     import spark.implicits._
     val one = Seq((0L, Polyline.fromLatLngsDegrees(Seq((10.0, 10.0), (10.5, 10.5)))))

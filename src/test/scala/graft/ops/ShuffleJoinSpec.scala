@@ -134,4 +134,24 @@ class ShuffleJoinSpec extends AnyFunSuite {
         s"cell ${graft.core.CellId.toToken(cell.id)} flagged interior but not contained")
     }
   }
+
+  test("points with a non-finite coordinate match no region on any PIP path") {
+    import spark.implicits._
+    import graft.core.{CellId, Earth, LatLng, Loop}
+    // CellId encodes every non-finite point to the leaf at the corner of
+    // face 2; a region around that corner holds it in an interior cell.
+    val (cLat, cLng) = (35.26438968275466, 45.0)
+    assert(CellId.fromLatLngDegrees(Double.NaN, 0) === 0x4000000000000001L)
+    assert(CellId.fromLatLngDegrees(Double.PositiveInfinity, 0) === 0x4000000000000001L)
+    val region = Seq((7L, Loop.regularLoop(LatLng.toPointDegrees(cLat, cLng),
+      Earth.angleFromMeters(100000), 64)))
+    val points = Seq(("nan-lat", Double.NaN, 0.0), ("nan-lng", 0.0, Double.NaN),
+      ("nan-both", Double.NaN, Double.NaN), ("inf-lat", Double.PositiveInfinity, 0.0),
+      ("centre", cLat, cLng)).toDF("url", "lat", "lng")
+    val want = Set(("centre", 7L))
+    assert(rows(SpatialJoin.pipJoin(spark, points, region)) === want, "pipJoin")
+    assert(rows(ShuffleSpatialJoin.pipJoinLarge(spark, points, region)) === want,
+      "pipJoinLarge")
+    assert(rows(SpatialJoin.pipJoinAuto(spark, points, region)) === want, "pipJoinAuto")
+  }
 }
