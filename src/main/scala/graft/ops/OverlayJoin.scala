@@ -23,8 +23,37 @@ import graft.core._
   * polygons and runs it. For broadcast-scale fixture sets it degenerates
   * gracefully (tiny dim tables, broadcast hash join) — the shape is what
   * matters at 100 TB.
+  *
+  * The refine decodes through this object's executor-local cache, keyed
+  * by the geometry bytes. The PIP shuffle join needs no such cache: it
+  * refines by region position (ShuffleSpatialJoin).
   */
 object OverlayJoin {
+
+  // Executor-local decode cache keyed by the geometry BYTES, not the
+  // polygon id: two joins in one executor JVM may reuse ids with
+  // different geometry, and an id-keyed cache would silently return the
+  // first job's polygon. ByteBuffer keys compare content; the LRU bound
+  // keeps long-lived executors from accumulating stale geometries.
+  private val geometryCache = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[java.nio.ByteBuffer, Polygon](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[java.nio.ByteBuffer, Polygon]): Boolean =
+        size() > 1024
+    })
+
+  /** Codec.decodePolygon through the executor-local cache: each geometry
+    * is decoded once per JVM while it stays among the 1024 most recent.
+    */
+  private def cachedGeometry(geom: Array[Byte]): Polygon = {
+    val key = java.nio.ByteBuffer.wrap(geom)
+    var p = geometryCache.get(key)
+    if (p == null) {
+      p = Codec.decodePolygon(geom)
+      geometryCache.put(key, p)
+    }
+    p
+  }
 
   /** Inner overlap join of two driver-side polygon sets; wraps the
     * DataFrame path with both sides in the lossless join wire form
@@ -49,10 +78,9 @@ object OverlayJoin {
     * both sides are DataFrames of (id, geom) with wire-encoded polygons
     * (Codec.encodePolygon). Coverings are computed row-side from the
     * geometry, candidates pair on covering cells, and the refine decodes
-    * through SpatialJoin.cachedGeometry, the content-keyed executor cache
-    * shared with the PIP shuffle join — geometry only travels on
-    * the candidate pairs that survive cell pruning, never on covering
-    * rows.
+    * through cachedGeometry, the content-keyed executor cache — geometry
+    * only travels on the candidate pairs that survive cell pruning, never
+    * on covering rows.
     */
   def polygonOverlapJoinLarge(spark: SparkSession,
                               polysA: DataFrame, polysB: DataFrame,
@@ -73,8 +101,8 @@ object OverlayJoin {
       .select("a_id", "b_id").distinct()
 
     val relUdf = udf((aGeom: Array[Byte], bGeom: Array[Byte]) => {
-      val a = SpatialJoin.cachedGeometry(aGeom)
-      val b = SpatialJoin.cachedGeometry(bGeom)
+      val a = cachedGeometry(aGeom)
+      val b = cachedGeometry(bGeom)
       if (!a.intersects(b)) null
       else (a.contains(b), b.contains(a))
     })

@@ -1,5 +1,6 @@
 package graft.ops
 
+import java.util.concurrent.atomic.AtomicReferenceArray
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
@@ -12,18 +13,29 @@ import graft.core._
   * test into an equi-join at a fixed cell level.
   *
   *  - Polygon side: covering cells denormalized to join level k, one row
-  *    per (cell_lk, polyId, isInterior) — a DataFrame that shuffles like
-  *    any dimension table. Geometry travels once per polygon in the join
-  *    wire form (SpatialJoin.encodeGeometry) and is decoded once per
-  *    executor JVM through SpatialJoin.cachedGeometry.
+  *    per (cell_lk, polyId, isInterior, pos) — a DataFrame that shuffles
+  *    like any dimension table. `pos` is the region's dense position in
+  *    the caller's region list; geometry never rides on dim rows.
   *  - Point side: withColumn(cell_lk = s2_parent(s2_cellid(lat,lng), k)).
-  *  - Equi-join on cell_lk (sort-merge or shuffled hash, Catalyst/AQE
-  *    picks; hot cells are AQE-splittable because the join key is the
-  *    coarse cell). Interior matches skip the refine; boundary matches
-  *    run the exact parity PIP after decoding.
+  *  - One sort-merge equi-join on cell_lk (hot cells are AQE-splittable
+  *    because the join key is the coarse cell), then one filter:
+  *    interior candidates pass, boundary candidates run the region's
+  *    exact containsPoint. The points are scanned once.
+  *  - Region table, indexed by position, in the join wire form
+  *    (SpatialJoin.encodeGeometry). When the wire bytes fit Spark's
+  *    spark.sql.autoBroadcastJoinThreshold they are broadcast and each
+  *    region is decoded on first use, for all tasks of the executor.
+  *    Decoded regions are larger than their wire bytes (2.4x for 16-gons,
+  *    5.4x for 64-gons once their edge indexes exist), and they stay as
+  *    long as the broadcast does. Otherwise candidates sort-merge join
+  *    the (pos, geom) table and each task decodes a region once per run
+  *    of equal positions. That join exchanges every candidate, interior
+  *    ones too: keeping interior rows out of it would take a union whose
+  *    interior branch scans and exchanges the points a second time.
   *
-  * Regions follow SpatialJoin's region contract: (id, S2Region) pairs,
-  * Loops or Polygons (holes included), refined with containsPoint.
+  * Regions follow SpatialJoin's region contract: (id, S2Region) pairs with
+  * distinct ids, Loops or Polygons (holes included), refined with
+  * containsPoint.
   *
   * Level choice: coarser k = fewer polygon rows but more false-positive
   * point-polygon pairs; finer k = bigger dimension table. chooseLevel
@@ -53,71 +65,68 @@ object ShuffleSpatialJoin {
   }
 
   /** Build the polygon dimension DataFrame:
-    * (cell_lk long, poly_id long, is_interior boolean).
+    * (cell_lk long, poly_id long, is_interior boolean, pos int), where
+    * pos is the region's position in `polygons`. Regions need distinct
+    * ids.
     *
-    * Geometry bytes deliberately do NOT ride on covering rows: a fine
-    * join level times per-row geometry multiplies the dim table by the
-    * vertex count (hundreds of MB of duplicated bytes for city-sized
-    * polygon sets). Geometry travels once per polygon in the separate
-    * geometryTable and joins back only for boundary candidates.
+    * Only the normalized coverings leave the driver (<= 2*maxCells cells
+    * per polygon, as two long arrays). One executor flatMap does all the
+    * per-polygon work that multiplies cells: the boundary difference
+    * covering \ interior, the level-k fan-out (bounded by the maxDimRows
+    * budget) and the interior flag of each level-k cell.
     */
   def polygonDimTable(spark: SparkSession, polygons: Seq[(Long, S2Region)],
                       level: Int, maxCells: Int = 32,
                       precomputed: Option[Seq[(Long, CellUnion, CellUnion)]] = None): DataFrame = {
     import spark.implicits._
-    import graft.functions.S2
+    SpatialJoin.requireDistinctIds(polygons)
+    val posOf = polygons.iterator.map(_._1).zipWithIndex.toMap
     val coverings = precomputed.getOrElse(
       SpatialJoin.polygonCoverings(polygons, maxCells))
-    // Only the NORMALIZED covering rides from the driver (<= 2*maxCells
-    // cells per polygon, as two long arrays); everything that multiplies
-    // cells happens executor-side. That includes the boundary DIFFERENCE:
-    // covering \ interior fragments into dozens of finer cells per
-    // polygon, and materializing it driver-side made the shipped
-    // LocalRelation the dim build's dominant cost at 10k polygons (~28
-    // cells/polygon shipped vs <= 16 normalized) — and, like the level-k
-    // fan-out (s2_cells_at + explode, bounded by the maxDimRows budget),
-    // it is a per-polygon computation with no cross-polygon dependency,
-    // exactly what scales out.
-    val normalized = coverings.map { case (id, covering, interior) =>
-      (id, covering.ids, interior.ids)
-    }.toDF("poly_id", "cov", "inter")
-      .repartition(spark.sparkContext.defaultParallelism)
-    val rows = normalized.as[(Long, Array[Long], Array[Long])]
-      .flatMap { case (id, cov, inter) =>
-        val interior = CellUnion.fromNormalized(inter)
-        val boundary = CellUnion.fromNormalized(cov).difference(interior)
-        interior.ids.iterator.map(c => (c, id, true)) ++
-          boundary.ids.iterator.map(c => (c, id, false))
+    coverings.map { case (id, covering, interior) =>
+      (posOf(id), id, covering.ids, interior.ids)
+    }.toDS()
+      .flatMap { case (pos, id, cov, inter) =>
+        levelCells(cov, inter, level).map { case (c, in) => (c, id, in, pos) }
       }
-    rows.toDF("cell", "poly_id", "covering_interior")
-      .withColumn("cell_lk", explode(S2.cellsAt(col("cell"), lit(level))))
-      // A finer-than-k covering cell rolls UP to its level-k parent; the
-      // parent is then not fully interior, so force the refine.
-      .withColumn("is_interior",
-        col("covering_interior") && S2.level(col("cell")) <= lit(level))
-      // a polygon may touch the same level-k cell with both interior and
-      // boundary sub-cells; keep interior=false in that case (must refine)
-      .groupBy("cell_lk", "poly_id")
-      .agg(min(col("is_interior").cast("int")).cast("boolean").as("is_interior"))
+      .toDF("cell_lk", "poly_id", "is_interior", "pos")
   }
 
-  /** One wire-encoded geometry row per polygon. */
-  def geometryTable(spark: SparkSession, polygons: Seq[(Long, S2Region)]): DataFrame = {
-    import spark.implicits._
-    polygons.map { case (id, region) => (id, SpatialJoin.encodeGeometry(region)) }
-      .toDF("poly_id", "geom")
+  /** One polygon's distinct level-k cells, each flagged interior when the
+    * whole cell lies in the interior covering.
+    *
+    * The interior and boundary cells are disjoint, so a cell at or above
+    * level k fans out to level-k cells that no other cell reaches, and it
+    * passes its own flag on. A finer cell rolls up to its level-k parent,
+    * which it does not fill, so that parent needs the refine; several
+    * finer cells may share it, hence the distinct.
+    */
+  private def levelCells(cov: Array[Long], inter: Array[Long],
+                         level: Int): Iterator[(Long, Boolean)] = {
+    val interior = CellUnion.fromNormalized(inter)
+    val boundary = CellUnion.fromNormalized(cov).difference(interior)
+    def fanOut(cells: Array[Long], isInterior: Boolean) =
+      cells.iterator.filter(CellId.level(_) <= level)
+        .flatMap(CellId.cellsAtLevel(_, level).iterator.map(c => (c, isInterior)))
+    val rolledUp = (interior.ids.iterator ++ boundary.ids.iterator)
+      .filter(CellId.level(_) > level).map(CellId.parent(_, level))
+      .toArray.distinct
+    fanOut(interior.ids, isInterior = true) ++ fanOut(boundary.ids, isInterior = false) ++
+      rolledUp.iterator.map(c => (c, false))
   }
 
-  /** The shuffle-path join itself. Returns points + poly_id. */
+  /** The shuffle-path join itself. Returns points + poly_id. Regions need
+    * distinct ids.
+    */
   def pipJoinLarge(spark: SparkSession, points: DataFrame,
                    polygons: Seq[(Long, S2Region)],
                    latCol: String = "lat", lngCol: String = "lng",
                    maxDimRows: Long = 2000000L,
                    precomputed: Option[Seq[(Long, CellUnion, CellUnion)]] = None): DataFrame = {
+    SpatialJoin.requireDistinctIds(polygons)
     val coverings = precomputed.getOrElse(SpatialJoin.polygonCoverings(polygons))
     val level = chooseLevel(coverings.map(_._2), maxDimRows)
     val dim = polygonDimTable(spark, polygons, level, precomputed = Some(coverings))
-    val geoms = geometryTable(spark, polygons)
 
     import graft.functions.S2
     // CellId encodes every point with a non-finite coordinate to one
@@ -129,24 +138,65 @@ object ShuffleSpatialJoin {
       .withColumn("cell_lk",
         S2.parent(S2.cellId(col(latCol), col(lngCol)), lit(level)))
 
-    // Exact refine with a per-JVM decode cache (geometry decoded once per
-    // executor per polygon, not per row).
-    val refine = udf((geom: Array[Byte], lat: Double, lng: Double) =>
-      SpatialJoin.cachedGeometry(geom).containsPoint(LatLng.toPointDegrees(lat, lng)))
-
     // The dim side is by definition too large to broadcast (that case is
     // SpatialJoin.pipJoin); pin the sort-merge plan so tiny test inputs
     // exercise the same join the operator exists for, and AQE's skew
     // handling applies to hot cells.
     val candidates = pts.join(dim.hint("merge"), "cell_lk")
-    val interiorHits = candidates.filter(col("is_interior"))
-      .drop("cell_lk", "is_interior")
-    // Only boundary candidates need geometry (AQE picks broadcast vs
-    // shuffle for the per-polygon geometry join by its actual size).
-    val boundaryHits = candidates.filter(!col("is_interior"))
-      .join(geoms, "poly_id")
-      .filter(refine(col("geom"), col(latCol), col(lngCol)))
-      .drop("cell_lk", "is_interior", "geom")
-    interiorHits.unionByName(boundaryHits)
+
+    val wire = polygons.map { case (_, region) => SpatialJoin.encodeGeometry(region) }.toArray
+    val matched =
+      if (wire.iterator.map(_.length.toLong).sum <=
+          spark.sessionState.conf.autoBroadcastJoinThreshold) {
+        val regions = spark.sparkContext.broadcast(new RegionArray(wire))
+        val refine = udf((pos: Int, lat: Double, lng: Double) =>
+          regions.value(pos).containsPoint(LatLng.toPointDegrees(lat, lng)))
+        candidates.filter(col("is_interior") || refine(col("pos"), col(latCol), col(lngCol)))
+      } else {
+        import spark.implicits._
+        val regionTable = wire.toSeq.zipWithIndex.map(_.swap).toDF("pos", "geom")
+        val slot = new RunSlot
+        val refine = udf((pos: Int, geom: Array[Byte], lat: Double, lng: Double) =>
+          slot(pos, geom).containsPoint(LatLng.toPointDegrees(lat, lng)))
+        candidates.join(regionTable.hint("merge"), "pos")
+          .filter(col("is_interior") ||
+            refine(col("pos"), col("geom"), col(latCol), col(lngCol)))
+      }
+    matched.drop("cell_lk", "is_interior", "pos", "geom")
+  }
+
+  /** Broadcast region table: wire-form regions indexed by position, each
+    * decoded on first use and then shared by every task of the executor.
+    */
+  private final class RegionArray(wire: Array[Array[Byte]]) extends Serializable {
+    @transient private lazy val decoded = new AtomicReferenceArray[Polygon](wire.length)
+
+    def apply(pos: Int): Polygon = {
+      var p = decoded.get(pos)
+      if (p == null) {
+        p = Codec.decodePolygon(wire(pos))
+        decoded.set(pos, p)
+      }
+      p
+    }
+  }
+
+  /** The region of the current run of equal positions; within one join a
+    * position names one region. The position and its decoded region are
+    * one immutable pair in one field, so a thread that shares the slot
+    * sees a matching pair and at worst decodes again.
+    */
+  private final class RunSlot extends Serializable {
+    @volatile private var run: (Int, Polygon) = (-1, null)
+
+    def apply(pos: Int, geom: Array[Byte]): Polygon = {
+      val cur = run
+      if (cur._1 == pos) cur._2
+      else {
+        val region = Codec.decodePolygon(geom)
+        run = (pos, region)
+        region
+      }
+    }
   }
 }

@@ -8,12 +8,13 @@ import graft.core._
   *
   * Region contract of the PIP joins (pipJoin, pipJoinAuto and
   * ShuffleSpatialJoin.pipJoinLarge): regions arrive as (id, S2Region)
-  * pairs, each is covered once with RegionCoverer.coverings, and a
-  * boundary candidate is refined with the region's own containsPoint, so
-  * Loops and Polygons with holes share one path. pipJoin takes any
-  * S2Region. pipJoinAuto, the shuffle path and the distributed coverer
-  * size or ship geometry in one wire form (encodeGeometry), so they take
-  * Loops and Polygons only.
+  * pairs with distinct ids (a repeated id fails a require), each is
+  * covered once with RegionCoverer.coverings, and a boundary candidate is
+  * refined with the region's own containsPoint, so Loops and Polygons
+  * with holes share one path. pipJoin takes any S2Region. pipJoinAuto,
+  * the shuffle path and the distributed coverer size or ship geometry in
+  * one wire form, encodeGeometry: the lossless polygon layout that
+  * Codec.decodePolygon reads. They take Loops and Polygons only.
   *
   * Architecture (SURVEY.md §3.1, replacing the reference's in-memory
   * ShapeIndex with Spark-native access paths):
@@ -113,6 +114,16 @@ object SpatialJoin {
     points.withColumn(outCol, explode(matcher))
   }
 
+  /** Fails, naming the id, when two regions share an id: the refine and
+    * the join output identify a region by it.
+    */
+  private[ops] def requireDistinctIds(regions: Seq[(Long, S2Region)]): Unit = {
+    val seen = new scala.collection.mutable.HashSet[Long]
+    regions.foreach { case (id, _) =>
+      require(seen.add(id), s"region id $id appears more than once; PIP join region ids must be distinct")
+    }
+  }
+
   /** Exact refine of the region joins: the region's own containsPoint. */
   private def containsRefine(
       regions: Seq[(Long, S2Region)]): (Long, Double, Double) => Boolean = {
@@ -181,6 +192,7 @@ object SpatialJoin {
                   latCol: String = "lat", lngCol: String = "lng",
                   maxCells: Int = 32,
                   broadcastBudgetBytes: Long = 10L * 1024 * 1024): DataFrame = {
+    requireDistinctIds(polygons)
     val coverings = polygonCoverings(polygons, maxCells)
     if (estimateBroadcastBytes(polygons, coverings) <= broadcastBudgetBytes)
       coveringJoin(spark, points, coverings, containsRefine(polygons),
@@ -196,9 +208,11 @@ object SpatialJoin {
     */
   def pipJoin(spark: SparkSession, points: DataFrame, polygons: Seq[(Long, S2Region)],
               latCol: String = "lat", lngCol: String = "lng",
-              maxCells: Int = 32): DataFrame =
+              maxCells: Int = 32): DataFrame = {
+    requireDistinctIds(polygons)
     coveringJoin(spark, points, polygonCoverings(polygons, maxCells),
       containsRefine(polygons), "poly_id", latCol, lngCol)
+  }
 
   /** Lat/lng-rectangle join: adds `rect_id`. Rects as (id, latLo, lngLo,
     * latHi, lngHi) degrees.
@@ -239,8 +253,9 @@ object SpatialJoin {
   }
 
   // ------------------------------------------------------------------
-  // Join wire form: how the shuffle path and the distributed coverer ship
-  // a region, and how executors decode it.
+  // Join wire form: how the shuffle path, the overlay join and the
+  // distributed coverer ship a region; executors decode it with
+  // Codec.decodePolygon.
 
   private def requireWireForm(region: S2Region): Unit =
     require(region.isInstanceOf[Loop] || region.isInstanceOf[Polygon],
@@ -264,31 +279,6 @@ object SpatialJoin {
       case l: Loop => Codec.encodeLoopAsPolygon(l)
       case p: Polygon => Codec.encodePolygonLossless(p)
     }
-  }
-
-  // Executor-local decode cache keyed by the geometry BYTES, not the
-  // region id: two joins in one executor JVM may reuse ids with different
-  // geometry, and an id-keyed cache would silently return the first job's
-  // polygon. ByteBuffer keys compare content; the LRU bound keeps
-  // long-lived executors from accumulating stale geometries.
-  private val geometryCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[java.nio.ByteBuffer, Polygon](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[java.nio.ByteBuffer, Polygon]): Boolean =
-        size() > 1024
-    })
-
-  /** Codec.decodePolygon through the executor-local cache: each geometry
-    * is decoded once per JVM while it stays among the 1024 most recent.
-    */
-  private[graft] def cachedGeometry(geom: Array[Byte]): Polygon = {
-    val key = java.nio.ByteBuffer.wrap(geom)
-    var p = geometryCache.get(key)
-    if (p == null) {
-      p = Codec.decodePolygon(geom)
-      geometryCache.put(key, p)
-    }
-    p
   }
 
   /** kNN join (driver-side query list): thin wrapper over knnJoinDF. */
