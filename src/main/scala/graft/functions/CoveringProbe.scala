@@ -9,38 +9,44 @@ import graft.ops.SpatialJoin.CoveringIndex
 
 /** Covering-probe kernel shared by interpreted eval and generated code:
   * leaf-encode the point, probe the broadcast CoveringIndex with the leaf,
-  * refine boundary candidates exactly. Returns the matching region ids; a
+  * refine boundary candidates exactly. The index labels regions by
+  * position (SpatialJoin.indexByPosition); candidates are deduped and
+  * refined by position, and the matching regions' ids are returned. A
   * point with a non-finite coordinate matches none (CellId encodes every
   * such point to one corner leaf, which a covering may contain).
   */
 object CoveringProbe {
-  type State = (CoveringIndex, (Long, Double, Double) => Boolean)
+  /** (index by position, region id by position, refine(position, lat, lng)). */
+  type State = (CoveringIndex, Array[Long], (Int, Double, Double) => Boolean)
 
   def probe(bc: Broadcast[State], lat: Double, lng: Double): Array[Long] = {
     if (!java.lang.Double.isFinite(lat) || !java.lang.Double.isFinite(lng)) return empty
-    val (idx, refine) = bc.value
+    val (idx, ids, refine) = bc.value
     val leaf = graft.core.CellId.fromLatLngDegrees(lat, lng)
     val cands = idx.candidates(leaf)
     if (cands.length == 0) return CoveringProbe.empty
+    // positions of the matches, mapped to ids once the scan is done
     var out: Array[Long] = null
     var n = 0
     var i = 0
     while (i < cands.length) {
-      val rid = cands(i) >> 1
+      val pos = cands(i) >> 1
       val interior = (cands(i) & 1L) == 1L
       var dup = false
       var k = 0
-      while (k < n) { if (out(k) == rid) { dup = true; k = n } else k += 1 }
-      if (!dup && (interior || refine(rid, lat, lng))) {
+      while (k < n) { if (out(k) == pos) { dup = true; k = n } else k += 1 }
+      if (!dup && (interior || refine(pos.toInt, lat, lng))) {
         if (out == null) out = new Array[Long](cands.length)
-        out(n) = rid
+        out(n) = pos
         n += 1
       }
       i += 1
     }
-    if (n == 0) empty
-    else if (n == out.length) out
-    else java.util.Arrays.copyOf(out, n)
+    if (n == 0) return empty
+    val res = if (n == out.length) out else java.util.Arrays.copyOf(out, n)
+    var j = 0
+    while (j < n) { res(j) = ids(res(j).toInt); j += 1 }
+    res
   }
 
   private val empty = Array.empty[Long]

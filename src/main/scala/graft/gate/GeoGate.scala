@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Local
 import graft.core.{CellId, ClosestEdgeQuery, Earth, FurthestEdgeQuery, LatLng, Loop,
-  Polygon, Polyline, PolylineAlignment, RegionCoverer, WebMercator}
+  Polygon, Polyline, PolylineAlignment, PolylineShape, RegionCoverer, ShapeIndex,
+  WebMercator}
 import graft.functions.S2
 import graft.ops.{CrossingJoin, OverlayJoin, ShuffleSpatialJoin, SpatialJoin}
 import graft.sources.PagesSource
@@ -201,6 +202,19 @@ object GeoGate {
   def tileCoveringCellsPath(dir: String): String =
     s"${Local.workDir}/tile_cov_cells_n${PagesSource.rowsForScale(dir)}.parquet"
 
+  /** Polylines with their ShapeIndex (shape i is line i), broadcast as
+    * one value: each executor builds the index once per broadcast, on
+    * first use, and frees it with the broadcast.
+    */
+  private final class IndexedLines(val lines: Seq[(Long, Polyline)]) extends Serializable {
+    @transient lazy val index: ShapeIndex = {
+      val idx = new ShapeIndex()
+      lines.foreach { case (_, pl) => idx.add(PolylineShape(pl)) }
+      idx.iterator() // force the one-time build
+      idx
+    }
+  }
+
   /** Each city center's 3 closest (or farthest) trajectory segments via
     * ClosestEdgeQuery (FurthestEdgeQuery) over a broadcast ShapeIndex of
     * the chains — the executor-local best-first access path inside a
@@ -211,10 +225,9 @@ object GeoGate {
     val queries = PagesSource.cities.zipWithIndex
       .map { case ((la, ln), i) => (i.toLong, la, ln) }
       .toDF("query_id", "q_lat", "q_lng")
-    val bc = s.sparkContext.broadcast(trajectoryLines)
+    val bc = s.sparkContext.broadcast(new IndexedLines(trajectoryLines))
     val rankUdf = udf((lat: Double, lng: Double) => {
-      // index built once per executor (IndexCache), not per row
-      val index = graft.ops.IndexCache.forPolylines(bc)
+      val index = bc.value.index
       val p = LatLng.toPointDegrees(lat, lng)
       val hits =
         if (farthest) new FurthestEdgeQuery(index, includeInteriors = false)
@@ -224,7 +237,7 @@ object GeoGate {
           .findClosestEdges(ClosestEdgeQuery.PointTarget(p), 3)
           .map(r => (r.shapeId, r.edgeId))
       hits.zipWithIndex.map { case ((shapeId, edgeId), rank) =>
-        (bc.value(shapeId)._1, edgeId, rank + 1)
+        (bc.value.lines(shapeId)._1, edgeId, rank + 1)
       }
     })
     queries

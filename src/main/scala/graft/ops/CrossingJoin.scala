@@ -10,13 +10,15 @@ import graft.core._
   *
   * The polyline side is a DataFrame (a trajectory table at any scale);
   * polygons are broadcast with a SpatialJoin.CoveringIndex of their
-  * coverings, the index the point joins probe. Each row covers its line
-  * with the default RegionCoverer and refines only the polygons whose
-  * covering intersects the line's: the pruning is exact, since a line
-  * that crosses or lies inside a loop shares a point with it. The refine
-  * counts exact chain crossing signs; for large polygons the per-segment
-  * candidate edges come from the loop's edge index, so the refine is
-  * sublinear in the polygon's vertex count.
+  * coverings, indexed by position as in the point joins
+  * (SpatialJoin.indexByPosition), next to their ids and loops by
+  * position. Each row covers its line with the default RegionCoverer and
+  * refines only the polygons whose covering intersects the line's: the
+  * pruning is exact, since a line that crosses or lies inside a loop
+  * shares a point with it. The refine counts exact chain crossing signs;
+  * for large polygons the per-segment candidate edges come from the
+  * loop's edge index, so the refine is sublinear in the polygon's vertex
+  * count.
   */
 object CrossingJoin {
 
@@ -40,12 +42,9 @@ object CrossingJoin {
   def polylinePolygonJoinDF(spark: SparkSession, lines: DataFrame,
                             polygons: Seq[(Long, Loop)],
                             includeContained: Boolean = true): DataFrame = {
-    // Region ids in the index are positions in `polygons`.
-    val regions = polygons.map(_._2).toArray
     val bc = spark.sparkContext.broadcast((
-      SpatialJoin.CoveringIndex.build(SpatialJoin.polygonCoverings(
-        regions.indices.map(i => (i.toLong, regions(i))))),
-      polygons.map(_._1).toArray, regions))
+      SpatialJoin.indexByPosition(SpatialJoin.polygonCoverings(polygons)),
+      polygons.map(_._1).toArray, polygons.map(_._2).toArray))
 
     val matchUdf = udf((xs: Seq[Double], ys: Seq[Double], zs: Seq[Double]) => {
       val (index, polyIds, loops) = bc.value

@@ -28,11 +28,13 @@ import graft.functions.{Bloom, BloomStatics}
   *
   * The result is EXACT (bloom errors only ever add rows to the confirm
   * join, never drop a new url), so the gate oracle is the plain
-  * anti-join semantics. Sizing: at ~10 bits/key the false-positive rate
-  * is ~1% (measured in BloomSpec), so step 3 carries ~|seen-overlap| +
-  * 0.01x|new| rows. A single driver-resident filter covers ~10^9-10^10
-  * seen urls (GBs of bits); beyond that the same aggregate builds one
-  * filter per url-hash partition and step 2 probes the matching one.
+  * anti-join semantics. Sizing: newUrls counts the seen table and gives
+  * the filter 16 bits a key; with k = 7 the false-positive rate is then
+  * about 0.07%, so step 3 carries ~|seen-overlap| + 0.0007x|new| rows (at
+  * ~10 bits/key it is ~1%). A single driver-resident filter covers
+  * ~10^9-10^10 seen urls (GBs of bits); beyond that the same aggregate
+  * builds one filter per url-hash partition and step 2 probes the
+  * matching one.
   */
 object Frontier {
 
@@ -58,12 +60,19 @@ object Frontier {
       flagged.filter(col("__maybe_seen")).drop("__maybe_seen"))
   }
 
-  /** Distinct candidate urls NOT present in `seen` — exact. */
+  /** Bloom filter size for `keys` keys: 16 bits a key, a multiple of 64
+    * bits, at least 64.
+    */
+  private[ops] def bloomBits(keys: Long): Long =
+    math.max(64L, (16L * keys + 63L) / 64L * 64L)
+
+  /** Distinct candidate urls NOT present in `seen` — exact. The filter is
+    * sized from the seen count (bloomBits).
+    */
   def newUrls(spark: SparkSession, seen: DataFrame, candidates: DataFrame,
-              urlCol: String = "url", mBits: Long = 1L << 21,
-              k: Int = 7): DataFrame = {
+              urlCol: String = "url", k: Int = 7): DataFrame = {
     val (definiteNew, maybeSeen) =
-      splitByBloom(spark, seen, candidates, urlCol, mBits, k)
+      splitByBloom(spark, seen, candidates, urlCol, bloomBits(seen.count()), k)
     val confirmedNew = maybeSeen
       .join(seen.select(col(urlCol)), Seq(urlCol), "left_anti")
     definiteNew.select(col(urlCol))

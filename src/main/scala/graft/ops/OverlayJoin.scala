@@ -22,11 +22,15 @@ import graft.core._
   * There is one plan: the driver-side list entry point encodes its
   * polygons and runs it. For broadcast-scale fixture sets it degenerates
   * gracefully (tiny dim tables, broadcast hash join) — the shape is what
-  * matters at 100 TB.
+  * matters at 100 TB. Spark sizes a local table at a fixed width per row,
+  * so the list entry point decides from the real wire bytes: a side whose
+  * geometry exceeds SpatialJoin.broadcastThreshold carries a merge hint
+  * and is never broadcast.
   *
   * The refine decodes through this object's executor-local cache, keyed
-  * by the geometry bytes. The PIP shuffle join needs no such cache: it
-  * refines by region position (ShuffleSpatialJoin).
+  * by the geometry bytes. The PIP joins need no such cache: they refine
+  * by region position. The overlay join cannot, because its DataFrame
+  * inputs carry ids and geometry but no positions.
   */
 object OverlayJoin {
 
@@ -68,8 +72,12 @@ object OverlayJoin {
                          level: Int = 8,
                          maxCells: Int = 32): DataFrame = {
     import spark.implicits._
-    def side(polys: Seq[(Long, Polygon)], idCol: String) =
-      polys.map { case (id, p) => (id, SpatialJoin.encodeGeometry(p)) }.toDF(idCol, "geom")
+    def side(polys: Seq[(Long, Polygon)], idCol: String) = {
+      val wire = polys.map { case (id, p) => (id, SpatialJoin.encodeGeometry(p)) }
+      val df = wire.toDF(idCol, "geom")
+      if (wire.iterator.map(_._2.length.toLong).sum <= SpatialJoin.broadcastThreshold(spark)) df
+      else df.hint("merge")
+    }
     polygonOverlapJoinLarge(spark, side(polysA, "a_id"), side(polysB, "b_id"),
       level, maxCells)
   }

@@ -8,9 +8,10 @@ import graft.core._
 /** Shuffle-path PIP join for polygon sets too large to broadcast.
   *
   * The broadcast CoveringIndex path (SpatialJoin) is the default; it
-  * breaks down when |polygons| * maxCells no longer fits per-executor.
-  * This path is the SURVEY §4 "Plan B": turn the covering containment
-  * test into an equi-join at a fixed cell level.
+  * breaks down when |polygons| * maxCells no longer fits per-executor, and
+  * SpatialJoin.pipJoin then runs this path instead. This path is the
+  * SURVEY §4 "Plan B": turn the covering containment test into an
+  * equi-join at a fixed cell level.
   *
   *  - Polygon side: covering cells denormalized to join level k, one row
   *    per (cell_lk, polyId, isInterior, pos) — a DataFrame that shuffles
@@ -139,15 +140,14 @@ object ShuffleSpatialJoin {
         S2.parent(S2.cellId(col(latCol), col(lngCol)), lit(level)))
 
     // The dim side is by definition too large to broadcast (that case is
-    // SpatialJoin.pipJoin); pin the sort-merge plan so tiny test inputs
-    // exercise the same join the operator exists for, and AQE's skew
-    // handling applies to hot cells.
+    // SpatialJoin.pipJoin's covering probe); pin the sort-merge plan so
+    // tiny test inputs exercise the same join the operator exists for, and
+    // AQE's skew handling applies to hot cells.
     val candidates = pts.join(dim.hint("merge"), "cell_lk")
 
     val wire = polygons.map { case (_, region) => SpatialJoin.encodeGeometry(region) }.toArray
     val matched =
-      if (wire.iterator.map(_.length.toLong).sum <=
-          spark.sessionState.conf.autoBroadcastJoinThreshold) {
+      if (wire.iterator.map(_.length.toLong).sum <= SpatialJoin.broadcastThreshold(spark)) {
         val regions = spark.sparkContext.broadcast(new RegionArray(wire))
         val refine = udf((pos: Int, lat: Double, lng: Double) =>
           regions.value(pos).containsPoint(LatLng.toPointDegrees(lat, lng)))

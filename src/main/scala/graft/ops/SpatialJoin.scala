@@ -6,15 +6,18 @@ import graft.core._
 
 /** Distributed point-in-polygon / rect / radius / kNN joins.
   *
-  * Region contract of the PIP joins (pipJoin, pipJoinAuto and
-  * ShuffleSpatialJoin.pipJoinLarge): regions arrive as (id, S2Region)
-  * pairs with distinct ids (a repeated id fails a require), each is
-  * covered once with RegionCoverer.coverings, and a boundary candidate is
-  * refined with the region's own containsPoint, so Loops and Polygons
-  * with holes share one path. pipJoin takes any S2Region. pipJoinAuto,
-  * the shuffle path and the distributed coverer size or ship geometry in
-  * one wire form, encodeGeometry: the lossless polygon layout that
-  * Codec.decodePolygon reads. They take Loops and Polygons only.
+  * Region contract of the PIP join: pipJoin is its one entry point. It
+  * takes (id, region) pairs of Loops and Polygons (holes included) with
+  * distinct ids (a repeated id fails a require), covers each region once
+  * with RegionCoverer.coverings, and refines a boundary candidate with the
+  * region's own containsPoint. When the covering index and the geometry
+  * fit Spark's spark.sql.autoBroadcastJoinThreshold (estimateBroadcastBytes
+  * against broadcastThreshold) it runs the broadcast covering probe below;
+  * otherwise it hands the same coverings to
+  * ShuffleSpatialJoin.pipJoinLarge, the cell-level sort-merge join. The
+  * shuffle path, the overlay join and the distributed coverer ship
+  * geometry in one wire form, encodeGeometry: the lossless polygon layout
+  * that Codec.decodePolygon reads.
   *
   * Architecture (SURVEY.md §3.1, replacing the reference's in-memory
   * ShapeIndex with Spark-native access paths):
@@ -28,6 +31,10 @@ import graft.core._
   *    up that range's ancestor chain, which lists exactly the covering
   *    cells containing the leaf, however different regions' coverings
   *    overlap. CrossingJoin probes the same index with a line's covering.
+  *  - The covering joins index their regions by position (indexByPosition):
+  *    the broadcast carries the index, the ids by position and a refine
+  *    over arrays by position, computed once per query, so the probe
+  *    looks nothing up by id.
   *  - A single narrow map stage probes each point's leaf cell. Points in
   *    *interior* covering cells skip the exact test (the containsCenter
   *    fast path, shapeindex.go:373-470); boundary candidates are refined
@@ -95,16 +102,30 @@ object SpatialJoin {
     }
   }
 
-  /** Generic covering join: emits `outCol` with the region id for every
-    * region containing the point, refining boundary candidates with
-    * `refine(regionId, lat, lng)`.
+  /** The covering index of the covering joins: region i of `coverings`
+    * is indexed as id i, so candidates carry positions.
+    */
+  private[ops] def indexByPosition(
+      coverings: Seq[(Long, CellUnion, CellUnion)]): CoveringIndex =
+    CoveringIndex.build(coverings.zipWithIndex.map { case ((_, c, ic), pos) =>
+      (pos.toLong, c, ic) })
+
+  /** Spark's spark.sql.autoBroadcastJoinThreshold: the one broadcast
+    * budget of the spatial joins (a negative value broadcasts nothing).
+    */
+  private[ops] def broadcastThreshold(spark: SparkSession): Long =
+    spark.sessionState.conf.autoBroadcastJoinThreshold
+
+  /** Generic covering join: emits `outCol` with the id of every region
+    * containing the point, refining boundary candidates with
+    * `refine(position, lat, lng)`, where a position indexes `coverings`.
     */
   private def coveringJoin(spark: SparkSession, points: DataFrame,
-                           entries: Seq[(Long, CellUnion, CellUnion)],
-                           refine: (Long, Double, Double) => Boolean,
+                           coverings: Seq[(Long, CellUnion, CellUnion)],
+                           refine: (Int, Double, Double) => Boolean,
                            outCol: String, latCol: String, lngCol: String): DataFrame = {
-    val index = CoveringIndex.build(entries)
-    val bc = spark.sparkContext.broadcast((index, refine))
+    val bc = spark.sparkContext.broadcast(
+      (indexByPosition(coverings), coverings.map(_._1).toArray, refine))
     // Native codegen expression (not a ScalaUDF): the probe runs inside
     // whole-stage codegen with primitive doubles, no boxing/encoder hops.
     val matcher = graft.functions.ColumnBridge.column(
@@ -114,21 +135,14 @@ object SpatialJoin {
     points.withColumn(outCol, explode(matcher))
   }
 
-  /** Fails, naming the id, when two regions share an id: the refine and
-    * the join output identify a region by it.
+  /** Fails, naming the id, when two regions share an id: the join output
+    * identifies a region by it.
     */
   private[ops] def requireDistinctIds(regions: Seq[(Long, S2Region)]): Unit = {
     val seen = new scala.collection.mutable.HashSet[Long]
     regions.foreach { case (id, _) =>
       require(seen.add(id), s"region id $id appears more than once; PIP join region ids must be distinct")
     }
-  }
-
-  /** Exact refine of the region joins: the region's own containsPoint. */
-  private def containsRefine(
-      regions: Seq[(Long, S2Region)]): (Long, Double, Double) => Boolean = {
-    val byId = regions.toMap
-    (rid, lat, lng) => byId(rid).containsPoint(LatLng.toPointDegrees(lat, lng))
   }
 
   /** Covering + interior covering per region — computed once and shared
@@ -177,41 +191,26 @@ object SpatialJoin {
       16L * (c.size + ic.size) + 24L * numVertices(region) + 64L
     }.sum
 
-  def estimateBroadcastBytes(polygons: Seq[(Long, S2Region)]): Long =
-    estimateBroadcastBytes(polygons, polygonCoverings(polygons))
-
-  /** The north rule's join chooser: broadcast covering-probe join when
-    * the covering index + geometries fit the broadcast budget, the
-    * cell-level sort-merge path otherwise. The default budget mirrors
-    * Spark's autoBroadcastJoinThreshold scale (10 MB); pass the real
-    * executor budget at deploy time. Coverings are computed exactly once
-    * and reused by the chosen path.
-    */
-  def pipJoinAuto(spark: SparkSession, points: DataFrame,
-                  polygons: Seq[(Long, S2Region)],
-                  latCol: String = "lat", lngCol: String = "lng",
-                  maxCells: Int = 32,
-                  broadcastBudgetBytes: Long = 10L * 1024 * 1024): DataFrame = {
-    requireDistinctIds(polygons)
-    val coverings = polygonCoverings(polygons, maxCells)
-    if (estimateBroadcastBytes(polygons, coverings) <= broadcastBudgetBytes)
-      coveringJoin(spark, points, coverings, containsRefine(polygons),
-        "poly_id", latCol, lngCol)
-    else
-      ShuffleSpatialJoin.pipJoinLarge(spark, points, polygons, latCol, lngCol,
-        precomputed = Some(coverings))
-  }
-
   /** Inner PIP join: adds `poly_id`, one row per (point, containing
     * region). Loops and Polygons with holes take the same path; the
-    * boundary refine is the region's containsPoint.
+    * boundary refine is the region's containsPoint. The regions are
+    * covered once; the broadcast covering probe runs when its estimated
+    * payload fits broadcastThreshold, the cell-level sort-merge join
+    * (ShuffleSpatialJoin.pipJoinLarge) otherwise.
     */
   def pipJoin(spark: SparkSession, points: DataFrame, polygons: Seq[(Long, S2Region)],
               latCol: String = "lat", lngCol: String = "lng",
               maxCells: Int = 32): DataFrame = {
     requireDistinctIds(polygons)
-    coveringJoin(spark, points, polygonCoverings(polygons, maxCells),
-      containsRefine(polygons), "poly_id", latCol, lngCol)
+    val coverings = polygonCoverings(polygons, maxCells)
+    if (estimateBroadcastBytes(polygons, coverings) <= broadcastThreshold(spark)) {
+      val regions = polygons.map(_._2).toArray
+      coveringJoin(spark, points, coverings,
+        (pos, lat, lng) => regions(pos).containsPoint(LatLng.toPointDegrees(lat, lng)),
+        "poly_id", latCol, lngCol)
+    } else
+      ShuffleSpatialJoin.pipJoinLarge(spark, points, polygons, latCol, lngCol,
+        precomputed = Some(coverings))
   }
 
   /** Lat/lng-rectangle join: adds `rect_id`. Rects as (id, latLo, lngLo,
@@ -224,9 +223,14 @@ object SpatialJoin {
     val regions = rects.map { case (id, latLo, lngLo, latHi, lngHi) =>
       id -> RectRegion.fromDegrees(latLo, lngLo, latHi, lngHi)
     }
-    val rectMap = regions.toMap
-    coveringJoin(spark, points, polygonCoverings(regions, maxCells),
-      (rid, lat, lng) => rectMap(rid).rect.containsLatLng(
+    val byPos = regions.map(_._2.rect).toArray
+    // The refine, like SQL's BETWEEN on degrees, matches no point outside
+    // [-90, 90] x [-180, 180]; dropping such points before the probe keeps
+    // interior covering cells from admitting them.
+    val inRange = points.filter(abs(col(latCol) * LatLng.DegToRad) <= math.Pi / 2 &&
+      abs(col(lngCol) * LatLng.DegToRad) <= math.Pi)
+    coveringJoin(spark, inRange, polygonCoverings(regions, maxCells),
+      (pos, lat, lng) => byPos(pos).containsLatLng(
         lat * LatLng.DegToRad, lng * LatLng.DegToRad),
       "rect_id", latCol, lngCol)
   }
@@ -242,13 +246,12 @@ object SpatialJoin {
       id -> Cap.fromCenterRadians(
         LatLng.toPointDegrees(qlat, qlng), Earth.angleFromMeters(rm))
     }
-    val qMeta = queries.map(q => q._1 -> ((q._2, q._3, q._4))).toMap
+    val qLat = queries.map(_._2 * LatLng.DegToRad).toArray
+    val qLng = queries.map(_._3 * LatLng.DegToRad).toArray
+    val angle = queries.map(q => Earth.angleFromMeters(q._4)).toArray
     coveringJoin(spark, points, polygonCoverings(caps, maxCells),
-      (rid, lat, lng) => {
-        val (qlat, qlng, rm) = qMeta(rid)
-        LatLng.distance(lat * LatLng.DegToRad, lng * LatLng.DegToRad,
-          qlat * LatLng.DegToRad, qlng * LatLng.DegToRad) <= Earth.angleFromMeters(rm)
-      },
+      (pos, lat, lng) => LatLng.distance(lat * LatLng.DegToRad, lng * LatLng.DegToRad,
+        qLat(pos), qLng(pos)) <= angle(pos),
       "query_id", latCol, lngCol)
   }
 

@@ -8,7 +8,7 @@ import graft.core._
 /** Dimension-table scale rehearsal: the shuffle path exists for polygon
   * sets too large to broadcast, but until now was only driver-exercised
   * with 8 polygons. This spec pushes 10,000 synthesized polygons through
-  * pipJoinAuto and pins the contracts that matter at that scale:
+  * pipJoin and pins the contracts that matter at that scale:
   * the chooser picks the shuffle path, only normalized coverings leave
   * the driver (bounded closure), the denormalized dim table respects
   * maxDimRows, and the result matches the broadcast path row-for-row.
@@ -72,11 +72,11 @@ class DimScaleSpec extends AnyFunSuite {
       s"normalized covering payload ${bos.size()} bytes exceeds 8 MB")
   }
 
-  test("pipJoinAuto selects the shuffle path at 10k polygons") {
+  test("pipJoin selects the shuffle path at 10k polygons") {
     val est = SpatialJoin.estimateBroadcastBytes(polys, coverings)
     assert(est > 10L * 1024 * 1024,
       s"fixture must exceed the 10 MB broadcast budget, estimated $est")
-    val auto = SpatialJoin.pipJoinAuto(spark, points, polys)
+    val auto = SpatialJoin.pipJoin(spark, points, polys)
     assert(!auto.queryExecution.executedPlan.toString.contains("covering_probe"),
       "10k polygons must not take the broadcast covering-probe path")
   }
@@ -95,7 +95,13 @@ class DimScaleSpec extends AnyFunSuite {
       precomputed = Some(coverings))
       .select("url", "poly_id").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
-    val broadcastRows = SpatialJoin.pipJoin(spark, points, polys)
+    // an unbounded threshold keeps pipJoin on the broadcast probe
+    val broadcast = graft.WithConf.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> Long.MaxValue.toString) {
+      SpatialJoin.pipJoin(spark, points, polys)
+    }
+    assert(broadcast.queryExecution.executedPlan.toString.contains("covering_probe"))
+    val broadcastRows = broadcast
       .select("url", "poly_id").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
     assert(shuffleRows === broadcastRows)

@@ -77,12 +77,27 @@ class FrontierSpec extends AnyFunSuite {
     val seen = seenUrls.toDF("url")
     val cands = candUrls.toDF("url")
 
-    val got = Frontier.newUrls(spark, seen, cands, mBits = 1L << 16, k = 7)
+    val got = Frontier.newUrls(spark, seen, cands, k = 7)
       .collect().map(_.getString(0)).toSet
     val want = cands.join(seen, Seq("url"), "left_anti")
       .distinct().collect().map(_.getString(0)).toSet
     assert(got == want)
     assert(want.size == 2000)
+  }
+
+  test("newUrls sizes its filter at 16 bits per seen url") {
+    import spark.implicits._
+    val seen = (0 until 100000).map(i => s"https://s$i.test/").toDF("url")
+    val cands = Seq("https://s7.test/", "https://new.test/").toDF("url")
+    val df = Frontier.newUrls(spark, seen, cands)
+    val mBits = df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+      case b: graft.functions.BloomProbeExpr => b.mBits
+    }))
+    assert(mBits.nonEmpty, "newUrls must probe a bloom filter")
+    // 16 bits a key, from the seen count: not a fixed size
+    assert(mBits.toSet === Set(1600000L), s"filter bits $mBits")
+    assert(df.collect().map(_.getString(0)).toSeq === Seq("https://new.test/"))
+    assert(Frontier.bloomBits(0) === 64L && Frontier.bloomBits(5) === 128L)
   }
 
   test("prefilter effectiveness: the confirm join carries only the seen " +

@@ -50,6 +50,42 @@ class OverlayJoinSpec extends AnyFunSuite {
       "no exchange may carry (cell, geom) rows")
   }
 
+  test("list entry point never broadcasts geometry over the threshold") {
+    // Spark sizes a local table's row at about 116 B, so set A's 8
+    // 24-gons (about 4.8 kB on the wire) are estimated at 928 B, under a
+    // 1 kB threshold.
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive._
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val pa = graft.gate.GeoGate.overlayPolysA
+    val pb = graft.gate.GeoGate.overlayPolysB
+    val brute = (for {
+      (ai, a) <- pa
+      (bi, b) <- pb
+      if a.intersects(b)
+    } yield (ai, bi, a.contains(b), b.contains(a))).toSet
+    graft.WithConf.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "1KB") {
+      val df = OverlayJoin.polygonOverlapJoin(spark, pa, pb)
+      assert(rows(df) === brute)
+      val geomBroadcasts = scala.collection.mutable.ArrayBuffer[String]()
+      def walk(p: SparkPlan): Unit = {
+        p match {
+          case b: BroadcastExchangeExec if b.output.exists(_.name.endsWith("geom")) =>
+            geomBroadcasts += b.output.map(_.name).mkString(",")
+          case _ =>
+        }
+        p match {
+          case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+          case q: QueryStageExec => walk(q.plan)
+          case other => other.children.foreach(walk)
+        }
+      }
+      walk(df.queryExecution.executedPlan)
+      assert(geomBroadcasts.isEmpty,
+        s"geometry broadcast: $geomBroadcasts\n${df.queryExecution.executedPlan}")
+    }
+  }
+
   test("annulus polygons round trip through the wire format in the join") {
     import spark.implicits._
     // multi-loop polygons (holes) through encode -> shuffle -> decode

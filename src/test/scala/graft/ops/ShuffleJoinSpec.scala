@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.WithConf.withConf
 import graft.core.{CellId, Earth, LatLng, Loop, Polygon, S2Region, Vec3}
 
 /** The shuffle-path PIP join must produce exactly the broadcast path's
@@ -39,7 +40,7 @@ class ShuffleJoinSpec extends AnyFunSuite {
     }
   }
 
-  test("pipJoinAuto chooses by covering cardinality and stays row-identical") {
+  test("pipJoin chooses by covering cardinality and stays row-identical") {
     val pages = graft.sources.PagesSource.withLatLng(
       spark.read.parquet(
         graft.sources.PagesSource.pagesParquet(spark, "/root/testdata/sf0.001")))
@@ -47,25 +48,19 @@ class ShuffleJoinSpec extends AnyFunSuite {
       df.queryExecution.executedPlan.toString.contains("covering_probe")
 
     for ((name, polys) <- regionSets) {
-      val est = SpatialJoin.estimateBroadcastBytes(polys)
+      val est = SpatialJoin.estimateBroadcastBytes(polys,
+        SpatialJoin.polygonCoverings(polys))
       assert(est > 0, name)
       // generous budget: broadcast path
-      val auto1 = SpatialJoin.pipJoinAuto(spark, pages, polys)
+      val auto1 = SpatialJoin.pipJoin(spark, pages, polys)
       assert(hasBroadcastProbe(auto1), s"$name: small dim set must broadcast")
       // starved budget: shuffle path, identical rows
-      val auto2 = SpatialJoin.pipJoinAuto(spark, pages, polys,
-        broadcastBudgetBytes = est - 1)
+      val auto2 = withConf(spark,
+          "spark.sql.autoBroadcastJoinThreshold" -> (est - 1).toString) {
+        SpatialJoin.pipJoin(spark, pages, polys)
+      }
       assert(!hasBroadcastProbe(auto2), s"$name: over-budget dim set must not broadcast")
       assert(rows(auto1) === rows(auto2), name)
-    }
-  }
-
-  private def withConf[T](key: String, value: String)(body: => T): T = {
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -81,7 +76,7 @@ class ShuffleJoinSpec extends AnyFunSuite {
     // threshold, so the regions broadcast; 1 kB forces the sort-merge join
     // on the region position.
     for ((threshold, broadcastRegions) <- Seq("10MB" -> true, "1KB" -> false))
-      withConf("spark.sql.autoBroadcastJoinThreshold", threshold) {
+      withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> threshold) {
         val df = ShuffleSpatialJoin.pipJoinLarge(spark, pages,
           graft.gate.GeoGate.cityPolygons)
         df.collect() // finalize the adaptive plan
@@ -139,7 +134,6 @@ class ShuffleJoinSpec extends AnyFunSuite {
     val clash = polys.updated(3, (5L, polys(3)._2))
     for ((name, join) <- Seq[(String, () => Any)](
         "pipJoin" -> (() => SpatialJoin.pipJoin(spark, pages, clash)),
-        "pipJoinAuto" -> (() => SpatialJoin.pipJoinAuto(spark, pages, clash)),
         "pipJoinLarge" -> (() => ShuffleSpatialJoin.pipJoinLarge(spark, pages, clash)))) {
       val e = intercept[IllegalArgumentException](join())
       assert(e.getMessage.contains("region id 5 "), s"$name: ${e.getMessage}")
@@ -209,7 +203,6 @@ class ShuffleJoinSpec extends AnyFunSuite {
     assert(rows(SpatialJoin.pipJoin(spark, points, region)) === want, "pipJoin")
     assert(rows(ShuffleSpatialJoin.pipJoinLarge(spark, points, region)) === want,
       "pipJoinLarge")
-    assert(rows(SpatialJoin.pipJoinAuto(spark, points, region)) === want, "pipJoinAuto")
   }
 
   // Differential property of pipJoinLarge: at fixed seeds it returns
@@ -330,8 +323,8 @@ class ShuffleJoinSpec extends AnyFunSuite {
         assert(coverings.exists(_._3.ids.exists(CellId.level(_) > level)),
           s"no interior covering cell finer than level $level")
       val handed = if (idOrder) coverings.sortBy(_._1) else coverings
-      for (threshold <- Seq("10MB", "1KB")) withConf(
-          "spark.sql.autoBroadcastJoinThreshold", threshold) {
+      for (threshold <- Seq("10MB", "1KB")) withConf(spark,
+          "spark.sql.autoBroadcastJoinThreshold" -> threshold) {
         val got = pairs(ShuffleSpatialJoin.pipJoinLarge(spark, df, regs,
           maxDimRows = maxDimRows, precomputed = Some(handed)))
         assert(got === want,

@@ -25,23 +25,15 @@ class SkewJoinSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def withSkewConf[T](body: => T): T = {
-    val keys = Seq(
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1MB",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "512KB",
-      // keep AQE from folding the 4 shuffle partitions into 1 before the
-      // skew detector sees them
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val saved = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
+  private def withSkewConf[T](body: => T): T = graft.WithConf.withConf(spark,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1MB",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "512KB",
+    // keep AQE from folding the 4 shuffle partitions into 1 before the
+    // skew detector sees them
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "false")(body)
 
   private lazy val skewedPages = {
     val df = graft.sources.PagesSource.withLatLng(
