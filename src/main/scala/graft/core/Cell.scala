@@ -31,7 +31,7 @@ final case class Cell(id: Long, face: Int, level: Int,
   def containsPoint(p: Vec3): Boolean = STUV.onFacePositiveSide(face, p) && {
     val u = STUV.validFaceXYZtoU(face, p.x, p.y, p.z)
     val v = STUV.validFaceXYZtoV(face, p.x, p.y, p.z)
-    val m = (1.125 + MachineEps) * MachineEps
+    val m = Cell.PointMargin
     u >= uLo - m && u <= uHi + m && v >= vLo - m && v <= vHi + m
   }
 
@@ -262,11 +262,22 @@ final case class Cell(id: Long, face: Int, level: Int,
 }
 
 object Cell {
+  /** UV slack of containsPoint, for the error of projecting p
+    * (cell.go:462-491).
+    */
+  final val PointMargin: Double = (1.125 + Predicates.MachineEps) * Predicates.MachineEps
+
+  /** The cell's UV rectangle from one packed (i, j) decode, with no
+    * intermediate tuples (cellid.go:656-671).
+    */
   def fromId(id: Long): Cell = {
-    val (f, i, j, _) = CellId.faceIJOrientation(id)
+    val ij = CellId.ijPacked(id)
     val lvl = CellId.level(id)
-    val (uLo, uHi, vLo, vHi) = CellId.ijLevelToBoundUV(i, j, lvl)
-    Cell(id, f, lvl, uLo, uHi, vLo, vHi)
+    val size = CellId.sizeIJ(lvl)
+    val i = CellId.packedI(ij) & -size
+    val j = CellId.packedJ(ij) & -size
+    Cell(id, CellId.face(id), lvl, CellId.gridUV(i), CellId.gridUV(i + size),
+      CellId.gridUV(j), CellId.gridUV(j + size))
   }
 
   def fromPoint(p: Vec3): Cell = fromId(CellId.fromPoint(p.x, p.y, p.z))

@@ -273,9 +273,6 @@ object CellId {
     n * 2 + 1
   }
 
-  /** Decode id -> (face, i, j, orientation) (cellid.go:539-573).
-    * Returns the packed result; use the fij* accessors.
-    */
   private def expandEndpoint(u: Double, maxV: Double, sinDist: Double): Double = {
     val sinUShift = sinDist * math.sqrt((1 + u * u + maxV * maxV) / (1 + u * u))
     val cosUShift = math.sqrt(1 - sinUShift * sinUShift)
@@ -302,19 +299,37 @@ object CellId {
     * leaf (rangeMin here) and shifting yields the level-k grid index
     * (cellid.go:539-573 decode + the (face,i,j) prefix property).
     */
-  def iAtLevel(id: Long, level: Int): Int = {
-    val (_, i, _, _) = faceIJOrientation(rangeMin(id))
-    i >>> (MaxLevel - level)
+  def iAtLevel(id: Long, level: Int): Int =
+    packedI(ijPacked(rangeMin(id))) >>> (MaxLevel - level)
+
+  def jAtLevel(id: Long, level: Int): Int =
+    packedJ(ijPacked(rangeMin(id))) >>> (MaxLevel - level)
+
+  /** The leaf (i, j) inside the cell that faceIJOrientation decodes,
+    * packed as (i << 32 | j) and read back with packedI / packedJ: the
+    * same decode without a tuple, for callers that need no orientation.
+    */
+  def ijPacked(id: Long): Long = {
+    val ijo = decodeIJO(id)
+    (ijo & 0xFFFFFFFF00000000L) | ((ijo & 0xFFFFFFFFL) >>> 2)
   }
 
-  def jAtLevel(id: Long, level: Int): Int = {
-    val (_, _, j, _) = faceIJOrientation(rangeMin(id))
-    j >>> (MaxLevel - level)
-  }
+  def packedI(ij: Long): Int = (ij >>> 32).toInt
+  def packedJ(ij: Long): Int = ij.toInt
 
+  /** Decode id -> (face, i, j, orientation) (cellid.go:539-573). */
   def faceIJOrientation(id: Long): (Int, Int, Int, Int) = {
-    val f = face(id)
-    var orientation = f & SwapMask
+    val ijo = decodeIJO(id)
+    var orientation = (ijo & 3L).toInt
+    if ((lsb(id) & 0x1111111111111110L) != 0) orientation ^= SwapMask
+    (face(id), (ijo >>> 32).toInt, (ijo >>> 2).toInt & (MaxSize - 1), orientation)
+  }
+
+  /** The Hilbert decode: i << 32 | j << 2 | the orientation of the last
+    * lookup, before faceIJOrientation's level correction.
+    */
+  private def decodeIJO(id: Long): Long = {
+    var orientation = face(id) & SwapMask
     var nbits = MaxLevel - 7 * LookupBits // first iteration: 2 bits
     var i = 0
     var j = 0
@@ -329,8 +344,7 @@ object CellId {
       nbits = LookupBits
       k -= 1
     }
-    if ((lsb(id) & 0x1111111111111110L) != 0) orientation ^= SwapMask
-    (f, i, j, orientation)
+    (i.toLong << 32) | (j.toLong << 2) | orientation
   }
 
   private def clampIJ(v: Int): Int =
@@ -376,20 +390,24 @@ object CellId {
 
   /** (face, si, ti) of cell center (cellid.go:525-536). si/ti carried as Long. */
   def faceSiTi(id: Long): (Int, Long, Long) = {
-    val (f, i, j, _) = faceIJOrientation(id)
-    val delta =
-      if (isLeaf(id)) 1
-      else if (((i ^ (id >>> 2).toInt) & 1) != 0) 2
-      else 0
-    (f, 2L * i + delta, 2L * j + delta)
+    val ij = ijPacked(id)
+    val delta = centerDelta(id, packedI(ij))
+    (face(id), 2L * packedI(ij) + delta, 2L * packedJ(ij) + delta)
   }
+
+  /** si - 2i (and ti - 2j) of the cell centre, given the decoded i. */
+  private def centerDelta(id: Long, i: Int): Int =
+    if (isLeaf(id)) 1
+    else if (((i ^ (id >>> 2).toInt) & 1) != 0) 2
+    else 0
 
   /** Unnormalized center vector (cellid.go:519-522). */
   def rawPoint(id: Long): Vec3 = {
-    val (f, si, ti) = faceSiTi(id)
-    STUV.faceUVToXYZ(f,
-      STUV.stToUV((0.5 / MaxSize) * si.toDouble),
-      STUV.stToUV((0.5 / MaxSize) * ti.toDouble))
+    val ij = ijPacked(id)
+    val delta = centerDelta(id, packedI(ij))
+    STUV.faceUVToXYZ(face(id),
+      STUV.stToUV((0.5 / MaxSize) * (2L * packedI(ij) + delta).toDouble),
+      STUV.stToUV((0.5 / MaxSize) * (2L * packedJ(ij) + delta).toDouble))
   }
 
   def toPoint(id: Long): Vec3 = rawPoint(id).normalize
@@ -464,7 +482,10 @@ object CellId {
   def edgeNeighbors(id: Long): Array[Long] = {
     val lvl = level(id)
     val size = sizeIJ(lvl)
-    val (f, i, j, _) = faceIJOrientation(id)
+    val f = face(id)
+    val ij = ijPacked(id)
+    val i = packedI(ij)
+    val j = packedJ(ij)
     Array(
       parent(fromFaceIJWrap(f, i, j - size), lvl),
       parent(fromFaceIJWrap(f, i + size, j), lvl),
@@ -477,7 +498,10 @@ object CellId {
   def vertexNeighbors(id: Long, level: Int): Array[Long] = {
     val halfSize = sizeIJ(level + 1)
     val size = halfSize << 1
-    val (f, i, j, _) = faceIJOrientation(id)
+    val f = face(id)
+    val ij = ijPacked(id)
+    val i = packedI(ij)
+    val j = packedJ(ij)
     var isame = false; var jsame = false
     var ioffset = 0; var joffset = 0
     if ((i & halfSize) != 0) { ioffset = size; isame = (i + size) < MaxSize }
@@ -500,10 +524,11 @@ object CellId {
   def allNeighbors(id: Long, nbrLevel: Int): Array[Long] = {
     if (nbrLevel < level(id) || nbrLevel > MaxLevel) return Array.empty
     val buf = new scala.collection.mutable.ArrayBuffer[Long]()
-    var (f, i, j, _) = faceIJOrientation(id)
+    val f = face(id)
+    val ij = ijPacked(id)
     val size = sizeIJ(level(id))
-    i &= -size
-    j &= -size
+    val i = packedI(ij) & -size
+    val j = packedJ(ij) & -size
     val nbrSize = sizeIJ(nbrLevel)
     var k = -nbrSize
     var done = false
@@ -532,15 +557,18 @@ object CellId {
     val cellSize = sizeIJ(level)
     val xLo = i & -cellSize
     val yLo = j & -cellSize
-    (STUV.stToUV(STUV.ijToSTMin(xLo)),
-      STUV.stToUV(STUV.ijToSTMin(xLo + cellSize)),
-      STUV.stToUV(STUV.ijToSTMin(yLo)),
-      STUV.stToUV(STUV.ijToSTMin(yLo + cellSize)))
+    (gridUV(xLo), gridUV(xLo + cellSize), gridUV(yLo), gridUV(yLo + cellSize))
   }
 
+  /** u (or v) of leaf grid line x in [0, MaxSize]: the level-k cell
+    * containing leaf i spans gridUV(i & -sizeIJ(k)) to that plus
+    * sizeIJ(k).
+    */
+  def gridUV(x: Int): Double = STUV.stToUV(STUV.ijToSTMin(x))
+
   def boundUV(id: Long): (Double, Double, Double, Double) = {
-    val (_, i, j, _) = faceIJOrientation(id)
-    ijLevelToBoundUV(i, j, level(id))
+    val c = Cell.fromId(id)
+    (c.uLo, c.uHi, c.vLo, c.vHi)
   }
 
   /** Unsigned ordering comparator for cell ids. */

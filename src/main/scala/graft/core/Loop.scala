@@ -462,13 +462,58 @@ object Loop {
   * later cell, so a coverer run builds each crosser once instead of once
   * per edge per cell. Not thread-safe: a Loop is broadcast to concurrent
   * tasks, so this state lives here and never in the Loop.
+  *
+  * Single-face path. When every vertex lies well inside one cube face F
+  * (|u|, |v| <= 1 - 1e-6) and the loop does not contain the antipode of
+  * F's centre, the loop's closed region lies inside the UV hull of its
+  * vertices on F: its edges project to straight UV segments, and the
+  * region outside the hull, connected to that antipode and crossed by no
+  * edge, is outside the loop. The first relation() projects the vertices
+  * onto F once. A cell is then Disjoint if it lies on another face or if
+  * its UV rectangle misses the vertex UV box widened by UVMargin, and
+  * the rect bound is never computed. The vertex-in-cell test compares
+  * the projected vertices with the arithmetic and margin of
+  * Cell.containsPoint. Only edges whose widened UV box meets the cell
+  * reach the EdgeCrosser tests, and a cell whose vertex 0 lies outside
+  * the widened vertex box needs no containsPoint. These filters skip only
+  * tests whose exact answer they already know: every remaining decision
+  * goes through the same exact predicates as the general path, so both
+  * paths return the same relation for every cell. Loops that fail the
+  * condition, and loops large enough to carry an edge index, take the
+  * general path. Loop.containsCell and intersectsCell build a relator per
+  * call but use only boundaryIntersects, so they never build the
+  * projection.
   */
 private[core] final class LoopCellRelator(loop: Loop) extends CellRelator {
   import RegionRelation._
+  import LoopCellRelator._
 
   private val crossers = new Array[EdgeCrosser](loop.numVertices)
 
+  /** Relations answered on the single-face path. */
+  private[core] var singleFaceRelations = 0
+
+  // The single-face projection, built by the first relation():
+  // `face` is Unplanned before that and NoFace when the loop does not
+  // qualify. us/vs are the vertices' (u, v) on the face, box the widened
+  // vertex box (uLo, uHi, vLo, vHi) and edgeBoxes the same per edge.
+  private var face = Unplanned
+  private var us: Array[Double] = _
+  private var vs: Array[Double] = _
+  private val box = new Array[Double](4)
+  private var edgeBoxes: Array[Double] = _
+  private val edgesMeetingCell = new Array[Int](loop.numVertices)
+
   def relation(cell: Cell): Int = {
+    if (face == Unplanned) face = projectOntoFace()
+    if (face == NoFace) generalRelation(cell)
+    else {
+      singleFaceRelations += 1
+      singleFaceRelation(cell)
+    }
+  }
+
+  private def generalRelation(cell: Cell): Int = {
     if (loop.isEmpty) return Disjoint
     if (!loop.isFull) {
       val cellBound = cell.rectBound
@@ -479,6 +524,94 @@ private[core] final class LoopCellRelator(loop: Loop) extends CellRelator {
     val inside = loop.containsPoint(cell.vertex(0))
     if (inside && loop.bound.containsPoint(cell.center)) Contains
     else if (inside || loop.isFull) Intersects
+    else Disjoint
+  }
+
+  /** The face the single-face path projects onto, or NoFace; fills
+    * us, vs, box and edgeBoxes.
+    */
+  private def projectOntoFace(): Int = {
+    val n = loop.numVertices
+    if (loop.isEmptyOrFull || n > LoopEdgeIndex.MaxBruteForceVertices) return NoFace
+    val v0 = loop.vertex(0)
+    val f = STUV.face(v0.x, v0.y, v0.z)
+    val u = new Array[Double](n)
+    val v = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      val p = loop.vertex(i)
+      if (!STUV.onFacePositiveSide(f, p)) return NoFace
+      u(i) = STUV.validFaceXYZtoU(f, p.x, p.y, p.z)
+      v(i) = STUV.validFaceXYZtoV(f, p.x, p.y, p.z)
+      if (!(math.abs(u(i)) <= FaceLimit && math.abs(v(i)) <= FaceLimit)) return NoFace
+      i += 1
+    }
+    if (loop.containsPoint(STUV.unitNorm(f) * -1.0)) return NoFace
+    val eb = new Array[Double](4 * n)
+    box(0) = Double.PositiveInfinity; box(1) = Double.NegativeInfinity
+    box(2) = Double.PositiveInfinity; box(3) = Double.NegativeInfinity
+    i = 0
+    while (i < n) {
+      val k = if (i + 1 == n) 0 else i + 1
+      eb(4 * i) = math.min(u(i), u(k)) - UVMargin
+      eb(4 * i + 1) = math.max(u(i), u(k)) + UVMargin
+      eb(4 * i + 2) = math.min(v(i), v(k)) - UVMargin
+      eb(4 * i + 3) = math.max(v(i), v(k)) + UVMargin
+      box(0) = math.min(box(0), eb(4 * i)); box(1) = math.max(box(1), eb(4 * i + 1))
+      box(2) = math.min(box(2), eb(4 * i + 2)); box(3) = math.max(box(3), eb(4 * i + 3))
+      i += 1
+    }
+    us = u
+    vs = v
+    edgeBoxes = eb
+    f
+  }
+
+  private def singleFaceRelation(cell: Cell): Int = {
+    if (cell.face != face || cell.uLo > box(1) || cell.uHi < box(0) ||
+      cell.vLo > box(3) || cell.vHi < box(2)) return Disjoint
+    // Vertex i can lie in the cell only if edge i's box meets it, so one
+    // pass over the edge boxes runs the vertex tests and collects the
+    // edges for the crossing tests.
+    val uLo = cell.uLo - Cell.PointMargin
+    val uHi = cell.uHi + Cell.PointMargin
+    val vLo = cell.vLo - Cell.PointMargin
+    val vHi = cell.vHi + Cell.PointMargin
+    var m = 0
+    var i = 0
+    while (i < us.length) {
+      val b = 4 * i
+      if (edgeBoxes(b) <= cell.uHi && edgeBoxes(b + 1) >= cell.uLo &&
+        edgeBoxes(b + 2) <= cell.vHi && edgeBoxes(b + 3) >= cell.vLo) {
+        val u = us(i)
+        val v = vs(i)
+        if (u >= uLo && u <= uHi && v >= vLo && v <= vHi) return Intersects
+        edgesMeetingCell(m) = i
+        m += 1
+      }
+      i += 1
+    }
+    var v0: Vec3 = null
+    if (m > 0) {
+      v0 = cell.vertex(0)
+      val v1 = cell.vertex(1)
+      val v2 = cell.vertex(2)
+      val v3 = cell.vertex(3)
+      i = 0
+      while (i < m) {
+        val cr = crosser(edgesMeetingCell(i))
+        if (cr.edgeOrVertexCrossingTo(v0, v1) || cr.edgeOrVertexCrossingTo(v1, v2) ||
+          cr.edgeOrVertexCrossingTo(v2, v3) || cr.edgeOrVertexCrossingTo(v3, v0)) return Intersects
+        i += 1
+      }
+    }
+    // No boundary in the cell: it lies wholly inside or wholly outside,
+    // and outside when its vertex 0 lies outside the vertex box.
+    if (cell.uLo < box(0) || cell.uLo > box(1) || cell.vLo < box(2) || cell.vLo > box(3))
+      return Disjoint
+    val inside = loop.containsPoint(if (v0 == null) cell.vertex(0) else v0)
+    if (inside && loop.bound.containsPoint(cell.center)) Contains
+    else if (inside) Intersects
     else Disjoint
   }
 
@@ -521,6 +654,19 @@ private[core] final class LoopCellRelator(loop: Loop) extends CellRelator {
     }
     cr
   }
+}
+
+private[core] object LoopCellRelator {
+  private final val Unplanned = -2
+  private final val NoFace = -1
+
+  /** Largest |u| and |v| of a vertex on the single-face path. */
+  private final val FaceLimit = 1 - 1e-6
+
+  /** Widening of the vertex and edge UV boxes: far above the rounding
+    * of a projected vertex or of a normalized cell corner (about 1e-16).
+    */
+  private final val UVMargin = 1e-9
 }
 
 /** Triangle centroid kernels (/root/reference/s2/centroids.go:61-133). */

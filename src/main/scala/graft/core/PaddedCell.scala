@@ -136,11 +136,12 @@ object PaddedCell {
       p.middleComputed = true
       return p
     }
-    val (_, i, j, orientation) = CellId.faceIJOrientation(id)
+    val (_, i0, j0, orientation) = CellId.faceIJOrientation(id)
     val lvl = CellId.level(id)
-    val (uLo, uHi, vLo, vHi) = CellId.ijLevelToBoundUV(i, j, lvl)
     val ijSize = CellId.sizeIJ(lvl)
-    new PaddedCell(id, padding, uLo - padding, uHi + padding,
-      vLo - padding, vHi + padding, i & -ijSize, j & -ijSize, orientation, lvl)
+    val i = i0 & -ijSize
+    val j = j0 & -ijSize
+    new PaddedCell(id, padding, CellId.gridUV(i) - padding, CellId.gridUV(i + ijSize) + padding,
+      CellId.gridUV(j) - padding, CellId.gridUV(j + ijSize) + padding, i, j, orientation, lvl)
   }
 }

@@ -19,6 +19,16 @@ import scala.collection.mutable.ArrayBuffer
   * (regioncoverer.go:226-245); the coverings are identical. `coverings`
   * runs the covering pass and the interior pass through one memo, since
   * both start from the same fastCovering cells.
+  *
+  * Loops of up to LoopEdgeIndex.MaxBruteForceVertices vertices that lie
+  * well inside one cube face, and do not contain the antipode of its
+  * centre, answer from their vertices projected onto that face
+  * (LoopCellRelator): the loop then lies inside its vertices' UV hull,
+  * so a cell on another face, or whose UV rectangle misses the widened
+  * vertex box, is Disjoint without further tests, and only the edges
+  * whose UV box meets a cell reach the crossing tests. The exact
+  * predicates still decide every other cell, so the coverings equal
+  * those of the general path cell for cell.
   */
 final case class RegionCoverer(minLevel: Int = 0, maxLevel: Int = CellId.MaxLevel,
                                levelMod: Int = 1, maxCells: Int = 8) {
@@ -97,7 +107,8 @@ object RegionCoverer {
       CellId.parent(CellId.fromPoint(start.x, start.y, start.z), level))
 }
 
-private final class Candidate(val cell: Cell) {
+private final class Candidate(val id: Long) {
+  val level: Int = CellId.level(id)
   var terminal: Boolean = false
   var numChildren: Int = 0
   var children: ArrayBuffer[Candidate] = null
@@ -162,20 +173,56 @@ private final class CandidateHeap {
 /** A region's cell relations for one coverer call, evaluated once per
   * cell id through one cellRelator and remembered for the rest of the
   * call; dropped with it, so it holds at most the cells one region's
-  * coverings visit.
+  * coverings visit. The Cell is decoded only on a miss. An open-addressing
+  * table on the id (0 marks a free slot: no valid id is 0), sized for a
+  * 16-gon's 200-odd relations at maxCells 8 and doubled at half load.
   */
 private final class RelationMemo(region: S2Region) {
   private val relator = region.cellRelator()
-  private val known = new scala.collection.mutable.LongMap[Int]()
+  private var ids = new Array[Long](512)
+  private var relations = new Array[Byte](512)
+  private var size = 0
 
-  def apply(cell: Cell): Int = {
-    val r = known.getOrElse(cell.id, -1)
-    if (r >= 0) r
-    else {
-      val fresh = relator.relation(cell)
-      known.update(cell.id, fresh)
-      fresh
+  def apply(id: Long): Int = {
+    val mask = ids.length - 1
+    var slot = RelationMemo.slot(id, mask)
+    while (ids(slot) != 0L) {
+      if (ids(slot) == id) return relations(slot)
+      slot = (slot + 1) & mask
     }
+    val fresh = relator.relation(Cell.fromId(id))
+    ids(slot) = id
+    relations(slot) = fresh.toByte
+    size += 1
+    if (2 * size > ids.length) grow()
+    fresh
+  }
+
+  private def grow(): Unit = {
+    val oldIds = ids
+    val oldRelations = relations
+    ids = new Array[Long](2 * oldIds.length)
+    relations = new Array[Byte](2 * oldIds.length)
+    val mask = ids.length - 1
+    var k = 0
+    while (k < oldIds.length) {
+      if (oldIds(k) != 0L) {
+        var slot = RelationMemo.slot(oldIds(k), mask)
+        while (ids(slot) != 0L) slot = (slot + 1) & mask
+        ids(slot) = oldIds(k)
+        relations(slot) = oldRelations(k)
+      }
+      k += 1
+    }
+  }
+}
+
+private object RelationMemo {
+  /** Cell ids at one level share their low bits, so mix before masking. */
+  def slot(id: Long, mask: Int): Int = {
+    var h = id ^ (id >>> 33)
+    h *= 0xff51afd7ed558ccdL
+    (h ^ (h >>> 33)).toInt & mask
   }
 }
 
@@ -185,11 +232,11 @@ private final class Coverer(minLevel: Int, maxLevel: Int, levelMod: Int,
   val result = new ArrayBuffer[Long]()
   private val pq = new CandidateHeap
 
-  private def newCandidate(cell: Cell): Candidate = {
-    val rel = relation(cell)
+  private def newCandidate(id: Long): Candidate = {
+    val rel = relation(id)
     if (rel == RegionRelation.Disjoint) return null
-    val cand = new Candidate(cell)
-    val level = cell.level
+    val cand = new Candidate(id)
+    val level = cand.level
     if (level >= minLevel) {
       val contained = rel == RegionRelation.Contains
       if (interiorCovering) {
@@ -202,18 +249,17 @@ private final class Coverer(minLevel: Int, maxLevel: Int, levelMod: Int,
     cand
   }
 
-  private def expandChildren(cand: Candidate, cell: Cell, numLevels0: Int): Int = {
+  private def expandChildren(cand: Candidate, id: Long, numLevels0: Int): Int = {
     val numLevels = numLevels0 - 1
     var numTerminals = 0
-    val last = CellId.childEnd(cell.id)
-    var ci = CellId.childBegin(cell.id)
+    val last = CellId.childEnd(id)
+    var ci = CellId.childBegin(id)
     while (ci != last) {
-      val childCell = Cell.fromId(ci)
       if (numLevels > 0) {
-        if (relation(childCell) != RegionRelation.Disjoint)
-          numTerminals += expandChildren(cand, childCell, numLevels)
+        if (relation(ci) != RegionRelation.Disjoint)
+          numTerminals += expandChildren(cand, ci, numLevels)
       } else {
-        val child = newCandidate(childCell)
+        val child = newCandidate(ci)
         if (child != null) {
           cand.addChild(child)
           if (child.terminal) numTerminals += 1
@@ -226,12 +272,12 @@ private final class Coverer(minLevel: Int, maxLevel: Int, levelMod: Int,
 
   private def addCandidate(cand: Candidate): Unit = {
     if (cand == null) return
-    if (cand.terminal) { result += cand.cell.id; return }
+    if (cand.terminal) { result += cand.id; return }
 
     var numLevels = levelMod
-    val level = cand.cell.level
+    val level = cand.level
     if (level < minLevel) numLevels = 1
-    val numTerminals = expandChildren(cand, cand.cell, numLevels)
+    val numTerminals = expandChildren(cand, cand.id, numLevels)
     val maxChildrenShift = 2 * levelMod
     if (cand.numChildren == 0) ()
     else if (!interiorCovering && numTerminals == (1 << maxChildrenShift) &&
@@ -276,10 +322,10 @@ private final class Coverer(minLevel: Int, maxLevel: Int, levelMod: Int,
 
   def coveringInternal(memo: RelationMemo, start: Array[Long]): Unit = {
     relation = memo
-    start.foreach(ci => addCandidate(newCandidate(Cell.fromId(ci))))
+    start.foreach(ci => addCandidate(newCandidate(ci)))
     while (pq.nonEmpty && (!interiorCovering || result.length < maxCells)) {
       val cand = pq.pop()
-      if (interiorCovering || cand.cell.level < minLevel || cand.numChildren == 1 ||
+      if (interiorCovering || cand.level < minLevel || cand.numChildren == 1 ||
         result.length + pq.size + cand.numChildren <= maxCells) {
         if (cand.children != null) cand.children.foreach { child =>
           if (!interiorCovering || result.length < maxCells) addCandidate(child)

@@ -237,4 +237,24 @@ class CellIdSpec extends AnyFunSuite {
     val otherFace = CellId.fromFace((CellId.face(id) + 3) % 6)
     assert(CellId.commonAncestorLevel(id, otherFace) === -1)
   }
+
+  test("packed (i, j) decode equals faceIJOrientation, and Cell.fromId the tuple construction") {
+    val rng = new scala.util.Random(29)
+    for (face <- 0 until 6; level <- 0 to CellId.MaxLevel; _ <- 0 until 40) {
+      val id = CellId.fromFacePosLevel(face, rng.nextLong() & ((1L << CellId.PosBits) - 1), level)
+      val (f, i, j, _) = CellId.faceIJOrientation(id)
+      val ij = CellId.ijPacked(id)
+      assert((f, CellId.packedI(ij), CellId.packedJ(ij)) === (face, i, j), CellId.toToken(id))
+      // the decoded leaf lies in the cell: fromFaceIJ inverts the decode
+      assert(CellId.parent(CellId.fromFaceIJ(f, i, j), level) === id, CellId.toToken(id))
+      val (uLo, uHi, vLo, vHi) = CellId.ijLevelToBoundUV(i, j, level)
+      assert(Cell.fromId(id) === Cell(id, f, level, uLo, uHi, vLo, vHi), CellId.toToken(id))
+      // the centre: si/ti of the tuple decode, as cellid.go:525-536 builds it
+      val delta = if (CellId.isLeaf(id)) 1 else if (((i ^ (id >>> 2).toInt) & 1) != 0) 2 else 0
+      assert(CellId.faceSiTi(id) === ((f, 2L * i + delta, 2L * j + delta)), CellId.toToken(id))
+      assert(CellId.rawPoint(id) === STUV.faceUVToXYZ(f,
+        STUV.stToUV((0.5 / CellId.MaxSize) * (2L * i + delta).toDouble),
+        STUV.stToUV((0.5 / CellId.MaxSize) * (2L * j + delta).toDouble)), CellId.toToken(id))
+    }
+  }
 }

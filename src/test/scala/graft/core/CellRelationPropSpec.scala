@@ -13,6 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *    for Loops (including loops large enough to carry an edge index),
   *    Polygons with holes, Caps and RectRegions, on cells at levels 0-30
   *    at the poles, the antimeridian, face boundaries and loop vertices.
+  *    Loops also come where LoopCellRelator's single-face path is decided
+  *    at its margins: complements of small loops, loops within 1e-6 of a
+  *    face edge or corner or straddling two faces, metre-scale 16-gons and
+  *    loops whose vertices are a cell's corners, on cells whose UV
+  *    rectangle just touches the loop's vertex UV box.
   *  - RegionCoverer.coverings equals the two separate passes driven only by
   *    intersectsCell/containsCell, cell for cell.
   *  - The join layer's one region type: Polygon.containsPoint equals the
@@ -31,7 +36,9 @@ class CellRelationPropSpec extends AnyFunSuite {
   private val params = Test.Parameters.default
     .withInitialSeed(20261017L).withMinSuccessfulTests(150).withWorkers(1)
 
-  private def check(prop: Prop): Unit = {
+  private def check(prop: Prop): Unit = check(params, prop)
+
+  private def check(params: Test.Parameters, prop: Prop): Unit = {
     val result = Test.check(params, prop)
     assert(result.passed, Pretty.pretty(result, Pretty.Params(2)))
   }
@@ -106,6 +113,55 @@ class CellRelationPropSpec extends AnyFunSuite {
   private val regionGen: Gen[S2Region] =
     Gen.oneOf(loopGen, loopGen, polygonGen, capGen, rectGen)
 
+  /** A small loop reversed: it contains the antipode of its face's centre,
+    * so its region is not inside its vertices' UV hull.
+    */
+  private val complementGen: Gen[Loop] = for {
+    c <- center
+    radius <- Gen.oneOf(Gen.choose(1e-6, 1e-4), Gen.choose(1e-4, 0.05))
+    n <- Gen.choose(3, 16)
+    jitter <- Gen.listOfN(n, Gen.choose(0.6, 1.0))
+  } yield loopAt(c, radius, n, jitter).inverted
+
+  /** Centred within a few 1e-6 of a face edge (or corner), on either side
+    * of it, with radii around 1e-6: vertices fall on both sides of the
+    * single-face limit |u|, |v| <= 1 - 1e-6, and some loops straddle two
+    * or three faces.
+    */
+  private val nearFaceEdgeGen: Gen[Loop] = for {
+    face <- Gen.choose(0, 5)
+    d <- Gen.oneOf(Gen.const(1e-6), Gen.choose(-3e-6, 3e-6), Gen.choose(-1e-4, 1e-4))
+    corner <- Gen.oneOf(true, false)
+    su <- Gen.oneOf(-1.0, 1.0)
+    sv <- Gen.oneOf(-1.0, 1.0)
+    along <- Gen.choose(-0.9, 0.9)
+    radius <- Gen.oneOf(Gen.choose(1e-8, 1e-6), Gen.choose(1e-6, 1e-4))
+    n <- Gen.choose(3, 16)
+    jitter <- Gen.listOfN(n, Gen.choose(0.6, 1.0))
+  } yield {
+    val v = if (corner) sv * (1 - d) else along
+    loopAt(STUV.faceUVToXYZ(face, su * (1 - d), v).normalize, radius, n, jitter)
+  }
+
+  private val metreGen: Gen[Loop] = for {
+    c <- center
+    metres <- Gen.choose(0.5, 50.0)
+  } yield Loop.regularLoop(c, Earth.angleFromMeters(metres), 16)
+
+  /** The boundary of a cell: its vertices sit on the grid lines that the
+    * cell's neighbours share, within rounding of a projected point.
+    */
+  private val cellCornerGen: Gen[Loop] = for {
+    (lat, lng) <- hardPlace
+    level <- Gen.choose(6, 26)
+  } yield {
+    val cell = Cell.fromId(CellId.parent(CellId.fromLatLngDegrees(lat, lng), level))
+    Loop.fromPoints(Array.tabulate(4)(cell.vertex))
+  }
+
+  private val marginLoopGen: Gen[Loop] =
+    Gen.oneOf(complementGen, nearFaceEdgeGen, metreGen, cellCornerGen)
+
   /** Points that matter for a region: its vertices (or bound corners),
     * its center and points on its edges.
     */
@@ -137,14 +193,50 @@ class CellRelationPropSpec extends AnyFunSuite {
     })
   }
 
+  /** Cells at levels 8-30 just outside each side of a loop's vertex UV
+    * box on the face of its vertex 0, at gaps from 0 to 1e-8 around the
+    * single-face path's 1e-9 widening; none for loops with a vertex off
+    * that face.
+    */
+  private def boxTouchingCells(l: Loop): Gen[Seq[Cell]] = {
+    val v0 = l.vertex(0)
+    val f = STUV.face(v0.x, v0.y, v0.z)
+    if (!l.vertices.forall(STUV.onFacePositiveSide(f, _))) return Gen.const(Seq.empty)
+    val us = l.vertices.map(p => STUV.validFaceXYZtoU(f, p.x, p.y, p.z))
+    val vs = l.vertices.map(p => STUV.validFaceXYZtoV(f, p.x, p.y, p.z))
+    Gen.listOfN(12, for {
+      side <- Gen.choose(0, 3)
+      t <- Gen.choose(0.0, 1.0)
+      gap <- Gen.oneOf(0.0, -1e-12, 1e-15, 1e-12, 1e-10, 5e-10, 1e-9, 2e-9, 1e-8)
+      level <- Gen.choose(8, CellId.MaxLevel)
+    } yield {
+      val u = us.min + t * (us.max - us.min)
+      val v = vs.min + t * (vs.max - vs.min)
+      val p = (side match {
+        case 0 => STUV.faceUVToXYZ(f, us.min - gap, v)
+        case 1 => STUV.faceUVToXYZ(f, us.max + gap, v)
+        case 2 => STUV.faceUVToXYZ(f, u, vs.min - gap)
+        case _ => STUV.faceUVToXYZ(f, u, vs.max + gap)
+      }).normalize
+      Cell.fromId(CellId.parent(CellId.fromPoint(p.x, p.y, p.z), level))
+    })
+  }
+
   private def expected(r: S2Region, cell: Cell): Int =
     if (!r.intersectsCell(cell)) Disjoint
     else if (r.containsCell(cell)) Contains
     else Intersects
 
   test("cellRelation equals (intersectsCell, containsCell) at the sphere's hard places") {
-    val cases = for (r <- regionGen; cells <- cellsFor(r)) yield (r, cells)
-    check(Prop.forAllNoShrink(cases) { case (r, cells) =>
+    val cases = for {
+      r <- Gen.oneOf(regionGen, marginLoopGen)
+      cells <- cellsFor(r)
+      touching <- r match {
+        case l: Loop => boxTouchingCells(l)
+        case _ => Gen.const(Seq.empty)
+      }
+    } yield (r, cells ++ touching)
+    check(params.withMinSuccessfulTests(600), Prop.forAllNoShrink(cases) { case (r, cells) =>
       val relator = r.cellRelator()
       val bad = cells.filter { cell =>
         val want = expected(r, cell)
@@ -166,18 +258,6 @@ class CellRelationPropSpec extends AnyFunSuite {
     assert(kinds === Set(Disjoint, Intersects, Contains))
     assert(Loop.full.cellRelation(Cell.fromId(CellId.fromFace(3))) === Contains)
     assert(Loop.empty.cellRelation(Cell.fromId(CellId.fromFace(3))) === Disjoint)
-  }
-
-  /** Oracle: forwards only the two predicates, so coverings through it
-    * follow the reference's call pattern.
-    */
-  private final class PredicatesOnly(r: S2Region) extends S2Region {
-    def capBound: Cap = r.capBound
-    def rectBound: SphereRect = r.rectBound
-    def containsCell(cell: Cell): Boolean = r.containsCell(cell)
-    def intersectsCell(cell: Cell): Boolean = r.intersectsCell(cell)
-    def containsPoint(p: Vec3): Boolean = r.containsPoint(p)
-    def cellUnionBound: Array[Long] = r.cellUnionBound
   }
 
   test("coverings equals the two-pass covering and interior covering, cell for cell") {
@@ -302,4 +382,16 @@ class CellRelationPropSpec extends AnyFunSuite {
       (got == want) :| s"intersecting $got, brute $want"
     })
   }
+}
+
+/** Oracle: forwards only the two predicates, so coverings through it
+  * follow the reference's call pattern.
+  */
+private[core] final class PredicatesOnly(r: S2Region) extends S2Region {
+  def capBound: Cap = r.capBound
+  def rectBound: SphereRect = r.rectBound
+  def containsCell(cell: Cell): Boolean = r.containsCell(cell)
+  def intersectsCell(cell: Cell): Boolean = r.intersectsCell(cell)
+  def containsPoint(p: Vec3): Boolean = r.containsPoint(p)
+  def cellUnionBound: Array[Long] = r.cellUnionBound
 }

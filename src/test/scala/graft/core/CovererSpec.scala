@@ -155,6 +155,62 @@ class CovererSpec extends AnyFunSuite {
     assert(shared < separate, s"shared memo $shared vs two passes $separate")
   }
 
+  /** Forwards to a loop, and hands the coverer relators that count the
+    * relations they answer.
+    */
+  private final class RelatorSpy(loop: Loop) extends S2Region {
+    val relators = scala.collection.mutable.ArrayBuffer[LoopCellRelator]()
+    var relations = 0
+    def capBound: Cap = loop.capBound
+    def rectBound: SphereRect = loop.rectBound
+    def containsCell(cell: Cell): Boolean = loop.containsCell(cell)
+    def intersectsCell(cell: Cell): Boolean = loop.intersectsCell(cell)
+    def containsPoint(p: Vec3): Boolean = loop.containsPoint(p)
+    def cellUnionBound: Array[Long] = loop.cellUnionBound
+    override def cellRelator(): CellRelator = {
+      val r = new LoopCellRelator(loop)
+      relators += r
+      cell => { relations += 1; r.relation(cell) }
+    }
+  }
+
+  test("geobench-shaped 16-gons take the single-face path and cover as the predicates do") {
+    // 16-gons of radius 2-15 km within +-3 deg of the benchmark's 8 cities
+    val cities = Seq((40.7128, -74.0060), (51.5074, -0.1278), (35.6762, 139.6503),
+      (-23.5505, -46.6333), (28.6139, 77.2090), (-33.8688, 151.2093),
+      (6.5244, 3.3792), (48.8566, 2.3522))
+    val rng = new Random(9)
+    val rc = RegionCoverer(maxCells = 8)
+    var singleFace = 0
+    for (k <- 0 until 2000) {
+      val (lat, lng) = cities(k % cities.size)
+      val loop = Loop.regularLoop(LatLng.toPointDegrees(lat + rng.nextDouble() * 6 - 3,
+        lng + rng.nextDouble() * 6 - 3), Earth.angleFromMeters(2000 + rng.nextDouble() * 13000), 16)
+      // Tokyo and New York lie near cube edges, so some loops straddle two
+      // faces; these small loops never contain a face centre's antipode.
+      val f = STUV.face(loop.vertex(0).x, loop.vertex(0).y, loop.vertex(0).z)
+      val eligible = loop.vertices.forall { p =>
+        STUV.face(p.x, p.y, p.z) == f &&
+          math.abs(STUV.validFaceXYZtoU(f, p.x, p.y, p.z)) <= 1 - 1e-6 &&
+          math.abs(STUV.validFaceXYZtoV(f, p.x, p.y, p.z)) <= 1 - 1e-6
+      }
+      val spy = new RelatorSpy(loop)
+      val (cov, interior) = rc.coverings(spy)
+      assert(spy.relators.size === 1)
+      val taken = spy.relators.head.singleFaceRelations
+      assert(spy.relations > 0 && taken === (if (eligible) spy.relations else 0),
+        s"loop $k: $taken of ${spy.relations} relations took the single-face path")
+      if (eligible) singleFace += 1
+      val oracle = new PredicatesOnly(loop)
+      assert(cov.ids sameElements rc.covering(oracle).ids, s"loop $k covering")
+      assert(interior.ids sameElements rc.interiorCovering(oracle).ids, s"loop $k interior")
+      val counted = new CountingRegion(loop)
+      rc.coverings(counted)
+      assert(counted.relationsById.values.forall(_ == 1), s"loop $k: a cell was related twice")
+    }
+    assert(singleFace >= 1950, s"only $singleFace of 2000 loops lie within one face")
+  }
+
   test("cell union normalize: siblings collapse (cellunion_test.go semantics)") {
     val id = CellId.parent(CellId.fromLatLngDegrees(10, 20), 10)
     val kids = CellId.children(id)
