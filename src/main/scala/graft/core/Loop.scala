@@ -100,16 +100,14 @@ final class Loop private (val vertices: Array[Vec3]) extends S2Region {
   def edgeIndexOption: Option[LoopEdgeIndex] = builtIndex
 
   /** Conservative candidate edge ids for a query segment (all edges for
-    * small loops) — the pruning source for loop-relation crossing scans.
+    * small loops) — the pruning source for loop-relation crossing scans
+    * and the crossing join.
     */
-  private[core] def candidateEdges(a: Vec3, b: Vec3): Array[Int] =
+  private[graft] def candidateEdges(a: Vec3, b: Vec3): Array[Int] =
     builtIndex match {
       case Some(idx) => idx.candidateEdges(a, b)
       case None => Array.tabulate(vertices.length)(identity)
     }
-
-  /** Public candidate-edge access for engine operators (crossing joins). */
-  def candidateEdgesPublic(a: Vec3, b: Vec3): Array[Int] = candidateEdges(a, b)
 
   def containsPoint(p: Vec3): Boolean = {
     if (!bound.containsPoint(p)) return false
@@ -520,10 +518,10 @@ private[core] final class LoopCellRelator(loop: Loop) extends CellRelator {
       if (!loop.bound.intersects(cellBound)) return Disjoint
       if (boundaryIntersects(cell, cellBound)) return Intersects
     }
-    // No boundary in the cell: it lies wholly inside or wholly outside.
-    val inside = loop.containsPoint(cell.vertex(0))
-    if (inside && loop.bound.containsPoint(cell.center)) Contains
-    else if (inside || loop.isFull) Intersects
+    // No boundary in the cell: it lies wholly inside or wholly outside,
+    // as its vertex 0 does.
+    if (loop.containsPoint(cell.vertex(0))) Contains
+    else if (loop.isFull) Intersects
     else Disjoint
   }
 
@@ -606,12 +604,11 @@ private[core] final class LoopCellRelator(loop: Loop) extends CellRelator {
       }
     }
     // No boundary in the cell: it lies wholly inside or wholly outside,
-    // and outside when its vertex 0 lies outside the vertex box.
+    // as its vertex 0 does, and outside when that vertex lies outside the
+    // vertex box. Inside the box the parity test needs no bound reject.
     if (cell.uLo < box(0) || cell.uLo > box(1) || cell.vLo < box(2) || cell.vLo > box(3))
       return Disjoint
-    val inside = loop.containsPoint(if (v0 == null) cell.vertex(0) else v0)
-    if (inside && loop.bound.containsPoint(cell.center)) Contains
-    else if (inside) Intersects
+    if (loop.bruteForceContainsPoint(if (v0 == null) cell.vertex(0) else v0)) Contains
     else Disjoint
   }
 

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
@@ -507,32 +507,4 @@ object S2 {
   def tileY(lat: Column, zoom: Column): Column = col(TileYExpr(expr(lat), expr(zoom)))
   def geoLat(text: Column): Column = col(GeoLatExpr(expr(text)))
   def geoLng(text: Column): Column = col(GeoLngExpr(expr(text)))
-
-  /** Register all functions for SQL use. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def add1(name: String, f: Expression => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, es => f(es.head), "builtin")
-    def add2(name: String, f: (Expression, Expression) => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, es => f(es(0), es(1)), "builtin")
-    add2("s2_cellid", S2CellIdExpr)
-    add2("s2_parent", S2ParentExpr)
-    add1("s2_level", S2LevelExpr)
-    add1("s2_token", S2TokenExpr)
-    add1("s2_from_token", S2FromTokenExpr)
-    add1("s2_lat", S2LatExpr)
-    add1("s2_lng", S2LngExpr)
-    add1("s2_face", S2FaceExpr)
-    add2("s2_i", S2CellIExpr)
-    add2("s2_j", S2CellJExpr)
-    add1("s2_range_min", S2RangeMinExpr)
-    add1("s2_range_max", S2RangeMaxExpr)
-    add2("s2_cell_contains", S2CellContainsExpr)
-    add2("s2_neighbors", S2NeighborsExpr)
-    add2("s2_cells_at", S2CellsAtExpr)
-    reg.createOrReplaceTempFunction("s2_distance",
-      es => S2DistanceExpr(es.toSeq), "builtin")
-    reg.createOrReplaceTempFunction("s2_snap_cell",
-      es => S2SnapCellExpr(es(0), es(1), es(2)), "builtin")
-  }
 }

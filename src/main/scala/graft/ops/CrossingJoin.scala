@@ -26,14 +26,9 @@ object CrossingJoin {
   def polylinePolygonJoin(spark: SparkSession,
                           polylines: Seq[(Long, Polyline)],
                           polygons: Seq[(Long, Loop)],
-                          includeContained: Boolean = true): DataFrame = {
-    import spark.implicits._
-    val lines = polylines.map { case (id, pl) =>
-      (id, pl.vertices.map(_.x).toSeq, pl.vertices.map(_.y).toSeq,
-        pl.vertices.map(_.z).toSeq)
-    }.toDF("line_id", "xs", "ys", "zs")
-    polylinePolygonJoinDF(spark, lines, polygons, includeContained)
-  }
+                          includeContained: Boolean = true): DataFrame =
+    polylinePolygonJoinDF(spark, PolylineJoin.lineRows(spark, polylines, "line_id"),
+      polygons, includeContained)
 
   /** DataFrame polyline side: (line_id, xs, ys, zs) unit-vector component
     * arrays. Returns (line_id, poly_id, crossings); containment-only
@@ -50,7 +45,7 @@ object CrossingJoin {
       val (index, polyIds, loops) = bc.value
       if (xs.isEmpty) Seq.empty[(Long, Int)]
       else {
-        val verts = Array.tabulate(xs.length)(i => Vec3(xs(i), ys(i), zs(i)))
+        val verts = PolylineJoin.vertices(xs, ys, zs)
         val covering = RegionCoverer().covering(new Polyline(verts))
         index.intersecting(covering).toSeq.flatMap { r =>
           val loop = loops(r.toInt)
@@ -79,7 +74,7 @@ object CrossingJoin {
       val a = verts(i - 1)
       val b = verts(i)
       val crosser = new EdgeCrosser(a, b)
-      val cand = loop.candidateEdgesPublic(a, b)
+      val cand = loop.candidateEdges(a, b)
       var k = 0
       while (k < cand.length) {
         val e = cand(k)

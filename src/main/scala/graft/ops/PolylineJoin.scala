@@ -23,16 +23,25 @@ object PolylineJoin {
   def polylineRadiusJoin(spark: SparkSession,
                          linesA: Seq[(Long, Polyline)],
                          linesB: Seq[(Long, Polyline)],
-                         radiusMeters: Double): DataFrame = {
+                         radiusMeters: Double): DataFrame =
+    polylineRadiusJoinDF(spark, lineRows(spark, linesA, "a_id"),
+      lineRows(spark, linesB, "b_id"), radiusMeters)
+
+  /** The row form of the DataFrame polyline joins: (idCol, xs, ys, zs),
+    * each vertex's unit-vector components.
+    */
+  private[ops] def lineRows(spark: SparkSession, lines: Seq[(Long, Polyline)],
+                            idCol: String): DataFrame = {
     import spark.implicits._
-    def toDF(ls: Seq[(Long, Polyline)], idCol: String) =
-      ls.map { case (id, pl) =>
-        (id, pl.vertices.map(_.x).toSeq, pl.vertices.map(_.y).toSeq,
-          pl.vertices.map(_.z).toSeq)
-      }.toDF(idCol, "xs", "ys", "zs")
-    polylineRadiusJoinDF(spark, toDF(linesA, "a_id"), toDF(linesB, "b_id"),
-      radiusMeters)
+    lines.map { case (id, pl) =>
+      (id, pl.vertices.map(_.x).toSeq, pl.vertices.map(_.y).toSeq,
+        pl.vertices.map(_.z).toSeq)
+    }.toDF(idCol, "xs", "ys", "zs")
   }
+
+  /** The vertices of one row of the row form. */
+  private[ops] def vertices(xs: Seq[Double], ys: Seq[Double], zs: Seq[Double]): Array[Vec3] =
+    Array.tabulate(xs.length)(i => Vec3(xs(i), ys(i), zs(i)))
 
   /** DataFrame sides: (a_id|b_id, xs, ys, zs) unit-vector component
     * arrays. Returns (a_id, b_id, dist_rad) for pairs within the radius.
@@ -46,8 +55,7 @@ object PolylineJoin {
 
     def coveringUdf(expand: Boolean) = udf(
       (xs: Seq[Double], ys: Seq[Double], zs: Seq[Double]) => {
-        val pl = new Polyline(
-          Array.tabulate(xs.length)(i => Vec3(xs(i), ys(i), zs(i))))
+        val pl = new Polyline(vertices(xs, ys, zs))
         val coverer = RegionCoverer(maxCells = maxCells)
         var cov = coverer.covering(pl)
         if (expand) cov = cov.expandByRadius(radiusRad, 4)
@@ -68,10 +76,8 @@ object PolylineJoin {
 
     val refine = udf((axs: Seq[Double], ays: Seq[Double], azs: Seq[Double],
                       bxs: Seq[Double], bys: Seq[Double], bzs: Seq[Double]) => {
-      val a = new Polyline(
-        Array.tabulate(axs.length)(i => Vec3(axs(i), ays(i), azs(i))))
-      val b = new Polyline(
-        Array.tabulate(bxs.length)(i => Vec3(bxs(i), bys(i), bzs(i))))
+      val a = new Polyline(vertices(axs, ays, azs))
+      val b = new Polyline(vertices(bxs, bys, bzs))
       val d = ChordAngle.toRadians(a.distanceToPolyline(b))
       if (d <= radiusRad) d else -1.0
     })

@@ -1,6 +1,5 @@
 package graft.ops
 
-import java.util.concurrent.atomic.AtomicReferenceArray
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
@@ -22,17 +21,14 @@ import graft.core._
   *    because the join key is the coarse cell), then one filter:
   *    interior candidates pass, boundary candidates run the region's
   *    exact containsPoint. The points are scanned once.
-  *  - Region table, indexed by position, in the join wire form
-  *    (SpatialJoin.encodeGeometry). When the wire bytes fit Spark's
-  *    spark.sql.autoBroadcastJoinThreshold they are broadcast and each
-  *    region is decoded on first use, for all tasks of the executor.
-  *    Decoded regions are larger than their wire bytes (2.4x for 16-gons,
-  *    5.4x for 64-gons once their edge indexes exist), and they stay as
-  *    long as the broadcast does. Otherwise candidates sort-merge join
-  *    the (pos, geom) table and each task decodes a region once per run
-  *    of equal positions. That join exchanges every candidate, interior
-  *    ones too: keeping interior rows out of it would take a union whose
-  *    interior branch scans and exchanges the points a second time.
+  *  - Region table (SpatialJoin.RegionTable), indexed by position, in
+  *    the join wire form: broadcast when its wire bytes fit Spark's
+  *    spark.sql.autoBroadcastJoinThreshold, each region decoded on first
+  *    use per executor; otherwise candidates sort-merge join it on `pos`
+  *    and each task decodes a region once per run of equal positions.
+  *    That join exchanges every candidate, interior ones too: keeping
+  *    interior rows out of it would take a union whose interior branch
+  *    scans and exchanges the points a second time.
   *
   * Regions follow SpatialJoin's region contract: (id, S2Region) pairs with
   * distinct ids, Loops or Polygons (holes included), refined with
@@ -145,58 +141,13 @@ object ShuffleSpatialJoin {
     // AQE's skew handling applies to hot cells.
     val candidates = pts.join(dim.hint("merge"), "cell_lk")
 
-    val wire = polygons.map { case (_, region) => SpatialJoin.encodeGeometry(region) }.toArray
-    val matched =
-      if (wire.iterator.map(_.length.toLong).sum <= SpatialJoin.broadcastThreshold(spark)) {
-        val regions = spark.sparkContext.broadcast(new RegionArray(wire))
-        val refine = udf((pos: Int, lat: Double, lng: Double) =>
-          regions.value(pos).containsPoint(LatLng.toPointDegrees(lat, lng)))
-        candidates.filter(col("is_interior") || refine(col("pos"), col(latCol), col(lngCol)))
-      } else {
-        import spark.implicits._
-        val regionTable = wire.toSeq.zipWithIndex.map(_.swap).toDF("pos", "geom")
-        val slot = new RunSlot
-        val refine = udf((pos: Int, geom: Array[Byte], lat: Double, lng: Double) =>
-          slot(pos, geom).containsPoint(LatLng.toPointDegrees(lat, lng)))
-        candidates.join(regionTable.hint("merge"), "pos")
-          .filter(col("is_interior") ||
-            refine(col("pos"), col("geom"), col(latCol), col(lngCol)))
-      }
-    matched.drop("cell_lk", "is_interior", "pos", "geom")
-  }
-
-  /** Broadcast region table: wire-form regions indexed by position, each
-    * decoded on first use and then shared by every task of the executor.
-    */
-  private final class RegionArray(wire: Array[Array[Byte]]) extends Serializable {
-    @transient private lazy val decoded = new AtomicReferenceArray[Polygon](wire.length)
-
-    def apply(pos: Int): Polygon = {
-      var p = decoded.get(pos)
-      if (p == null) {
-        p = Codec.decodePolygon(wire(pos))
-        decoded.set(pos, p)
-      }
-      p
-    }
-  }
-
-  /** The region of the current run of equal positions; within one join a
-    * position names one region. The position and its decoded region are
-    * one immutable pair in one field, so a thread that shares the slot
-    * sees a matching pair and at worst decodes again.
-    */
-  private final class RunSlot extends Serializable {
-    @volatile private var run: (Int, Polygon) = (-1, null)
-
-    def apply(pos: Int, geom: Array[Byte]): Polygon = {
-      val cur = run
-      if (cur._1 == pos) cur._2
-      else {
-        val region = Codec.decodePolygon(geom)
-        run = (pos, region)
-        region
-      }
-    }
+    val regions = new SpatialJoin.RegionTable(spark, polygons.map(_._2), "pos", "geom")
+    val resolve = regions.resolve
+    val refine = udf((pos: Int, geom: Array[Byte], lat: Double, lng: Double) =>
+      resolve(pos, geom).containsPoint(LatLng.toPointDegrees(lat, lng)))
+    regions.attach(candidates)
+      .filter(col("is_interior") ||
+        refine(col("pos"), col("geom"), col(latCol), col(lngCol)))
+      .drop("cell_lk", "is_interior", "pos", "geom")
   }
 }

@@ -82,10 +82,8 @@ class PolylineJoinSpec extends AnyFunSuite {
     assert(all.count() === total)
 
     // overlay join with an empty side
-    val aDf = Seq((0L, graft.core.Codec.encodePolygon(
-      graft.gate.GeoGate.overlayPolysA.head._2))).toDF("a_id", "geom")
-    val bDf = spark.emptyDataset[(Long, Array[Byte])].toDF("b_id", "geom")
-    assert(OverlayJoin.polygonOverlapJoinLarge(spark, aDf, bDf).count() === 0)
+    val onePoly = graft.gate.GeoGate.overlayPolysA.take(1)
+    assert(OverlayJoin.polygonOverlapJoin(spark, onePoly, Nil).count() === 0)
 
     // ClosestEdgeQuery over an empty index
     val emptyIndex = new graft.core.ShapeIndex()
