@@ -564,8 +564,8 @@ object GeoGate {
          |  count(*) AS n_pages
          |FROM st GROUP BY 1, 2, 3""".stripMargin),
 
-    // kNN join: 5 nearest pages to each city center via iterative
-    // cap-radius expansion + exact chord re-rank.
+    // kNN join: 5 nearest pages to each city center, one radius join with
+    // each city's radius read off a point histogram, ranked by haversine.
     GateQuery("q_knn5", (s, dir) => {
       val qs = PagesSource.cities.zipWithIndex.map { case ((la, ln), i) =>
         (i.toLong, la, ln)

@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   * graph only; documents never re-enter. Overflow bound: rank mass stays
   * ≤ n_hosts*scale, so rank*weight ≤ n_hosts*scale*max_weight must stay
   * under 2^63 — scale=10^9 leaves ~9 orders of headroom at 10^8 hosts.
-  * At high iteration counts the production path persists each ranks
+  * At high iteration counts a production run would checkpoint each ranks
   * iteration to cut plan depth; at the fixed small iters used here the
   * composed plan is fine.
   */

@@ -129,9 +129,8 @@ object ShuffleSpatialJoin {
     // CellId encodes every point with a non-finite coordinate to one
     // corner leaf; such a point is in no region, so it must not reach the
     // exchange keyed to that corner's cell.
-    def finite(c: String) = !isnan(col(c)) && abs(col(c)) =!= Double.PositiveInfinity
     val pts = points
-      .filter(finite(latCol) && finite(lngCol))
+      .filter(SpatialJoin.finite(latCol) && SpatialJoin.finite(lngCol))
       .withColumn("cell_lk",
         S2.parent(S2.cellId(col(latCol), col(lngCol)), lit(level)))
 

@@ -45,6 +45,9 @@ import graft.core._
   * map-side join, and the only data motion is the broadcast (O(regions *
   * maxCells) entries). Skewed hot cells cost nothing here because there
   * is no partitioning by cell — each input split probes independently.
+  *
+  * The kNN join is the radius join with one radius per query, read off a
+  * histogram of the points per cell before the join (knnJoin).
   */
 object SpatialJoin {
 
@@ -361,143 +364,138 @@ object SpatialJoin {
     }
   }
 
-  /** kNN join (driver-side query list): thin wrapper over knnJoinDF. */
+  // ------------------------------------------------------------------
+  // kNN join: a point histogram picks each query's radius, and one
+  // radiusJoin answers every query.
+
+  /** The level of the kNN join's point histogram. The histogram has at
+    * most one row per level-8 cell: 6 * 4^8 = 393,216 (cell, count) rows,
+    * about 6 MB, collected into the calling JVM.
+    */
+  private[ops] final val KnnLevel = 8
+
+  /** Cells of the interior covering that counts a radius's points. */
+  private final val KnnCountCells = 16
+
+  /** Relative widening of a counted radius before the join. A point in a
+    * cell inside the radius may have a computed haversine an ulp above
+    * it, and the join's refine reads the computed value.
+    */
+  private[ops] final val KnnMargin = 1e-9
+
+  /** Keeps, as a filter, the rows whose `c` is finite: a null, NaN or
+    * infinite coordinate is dropped.
+    */
+  private[ops] def finite(c: String): Column =
+    !isnan(col(c)) && abs(col(c)) =!= Double.PositiveInfinity
+
+  /** Points per level-KnnLevel cell, sorted by cell id, with prefix sums:
+    * the points under a coarser cell are two binary searches away.
+    */
+  private[ops] final class CellCounts(cells: Array[Long], counts: Array[Long]) {
+    // Flipping the sign bit turns unsigned cell-id order into signed order.
+    private val order = cells.indices.sortBy(i => cells(i) ^ Long.MinValue).toArray
+    private val keys = order.map(i => cells(i) ^ Long.MinValue)
+    private val prefix = order.scanLeft(0L)(_ + counts(_))
+
+    def total: Long = prefix.last
+
+    /** Points in the cells of a union of cells at level KnnLevel or
+      * coarser. A cell's range ends are leaves, never a key, so each
+      * search returns an insertion point.
+      */
+    def within(cover: CellUnion): Long = cover.ids.iterator.map { c =>
+      prefix(-1 - java.util.Arrays.binarySearch(keys, CellId.rangeMax(c) ^ Long.MinValue)) -
+        prefix(-1 - java.util.Arrays.binarySearch(keys, CellId.rangeMin(c) ^ Long.MinValue))
+    }.sum
+  }
+
+  /** The kNN join's histogram: one aggregate over the points that the
+    * covering probe can match, those with a finite lat and lng. (CellId
+    * encodes a non-finite point to a corner leaf; counted, it would let a
+    * query choose a radius holding fewer than k matchable points.)
+    */
+  private[ops] def cellCounts(points: DataFrame, latCol: String, lngCol: String): CellCounts = {
+    val rows = points.filter(finite(latCol) && finite(lngCol))
+      .groupBy(graft.functions.S2.parent(
+        graft.functions.S2.cellId(col(latCol), col(lngCol)), lit(KnnLevel)))
+      .count().collect()
+    new CellCounts(rows.map(_.getLong(0)), rows.map(_.getLong(1)))
+  }
+
+  /** A query's search radius in radians: the first rung of the ladder
+    * w, 2w, 4w, ... below π (w, the minimum width of a level-KnnLevel
+    * cell) whose cap's interior covering at maxLevel KnnLevel holds at
+    * least k counted points, or π, the whole sphere, when none does.
+    * Every point in an interior cell lies within the rung, so the cap
+    * holds the query's k nearest points.
+    */
+  private[ops] def knnRadius(counts: CellCounts, lat: Double, lng: Double, k: Int): Double =
+    if (counts.total < k) math.Pi
+    else {
+      val center = LatLng.toPointDegrees(lat, lng)
+      val coverer = RegionCoverer(maxLevel = KnnLevel, maxCells = KnnCountCells)
+      Iterator.iterate(Metric.MinWidth.value(KnnLevel))(_ * 2).takeWhile(_ < math.Pi)
+        .find(r => counts.within(
+          coverer.interiorCovering(Cap.fromCenterRadians(center, r))) >= k)
+        .getOrElse(math.Pi)
+    }
+
+  /** The radius radiusJoin takes for a counted radius: widened by
+    * KnnMargin, so π comes back from meters as more than π, a cap holding
+    * the antipode.
+    */
+  private[ops] def knnJoinMeters(radius: Double): Double =
+    Earth.metersFromAngle(radius * (1 + KnnMargin))
+
+  /** kNN join: for each query (id, lat, lng) in degrees, its k nearest
+    * points, ranked by haversine distance and then by `tieBreakCol` (when
+    * given). Adds `query_id`, `q_lat`, `q_lng`, `dist_rad` (radians) and
+    * `knn_rank` (1..k); a query with fewer than k matchable points gets
+    * them all. Points with a non-finite coordinate never match.
+    *
+    * The plan is the paper's cell-ring expansion with the rings counted
+    * before the join; the output scans the points once:
+    *
+    *  1. One aggregate counts the finite points per level-KnnLevel cell
+    *     (cellCounts); it is the call's only Spark action.
+    *  2. In the calling JVM (queries are small by contract), each query takes
+    *     knnRadius: the smallest rung of a doubling ladder whose interior
+    *     covering holds k points, or π.
+    *  3. One radiusJoin, the broadcast covering probe, with each radius
+    *     widened by KnnMargin. It emits every point whose computed
+    *     distance is within the radius, so every point that ranks at or
+    *     before the k-th, ties included.
+    *  4. A broadcast join attaches q_lat/q_lng; a window per query keeps
+    *     the first k by (dist_rad, tieBreakCol).
+    *
+    * Fails fast unless k >= 1 and the query ids are distinct and their
+    * coordinates finite.
+    */
   def knnJoin(spark: SparkSession, points: DataFrame,
               queries: Seq[(Long, Double, Double)], k: Int,
               latCol: String = "lat", lngCol: String = "lng",
-              initialRadiusMeters: Double = 100000,
-              tieBreakCol: String = null, maxRings: Int = 3): DataFrame = {
-    import spark.implicits._
-    knnJoinDF(spark, points, queries.toDF("query_id", "q_lat", "q_lng"), k,
-      latCol, lngCol, initialRadiusMeters, tieBreakCol, maxRings)
-  }
-
-  def knnJoinDF(spark: SparkSession, points: DataFrame, queries: DataFrame,
-                k: Int, latCol: String = "lat", lngCol: String = "lng",
-                initialRadiusMeters: Double = 100000,
-                tieBreakCol: String = null, maxRings: Int = 3): DataFrame =
-    knnJoinDFStats(spark, points, queries, k, latCol, lngCol,
-      initialRadiusMeters, tieBreakCol, maxRings)._1
-
-  /** kNN join with a DataFrame query side, escalating through expanding
-    * cell rings before paying a full scan (the iterative-deepening
-    * analogue of the reference's best-first distance queries,
-    * edge_query.go:527-569, with CellUnion.ExpandAtLevel's ring
-    * semantics, cellunion.go:475-495):
-    *
-    *  1. Ring pass r (r = 0..maxRings-1, radius r_r = r0 * 4^r): pick the
-    *     finest level whose min cell width covers r_r; every point within
-    *     r_r of a query then lies in the query cell's 3x3 neighbor ring,
-    *     so an equi-join on the ring cells finds ALL candidates within
-    *     r_r. Queries with >= k candidates are satisfied — their global
-    *     top-k is provably inside the ring candidate set. The rest
-    *     escalate to the next, 4x-wider ring, where only THEY rejoin the
-    *     points table.
-    *  2. Brute pass: queries still unsatisfied after maxRings rings run
-    *     against the full points table as a broadcast — the guaranteed-
-    *     correct fallback, now reserved for genuinely empty regions
-    *     instead of every sparse-region query.
-    *
-    * Each ring's candidate set persists to disk so the satisfied-count
-    * job and the final output read one scan's work; the escalation
-    * check per ring is a count on the (small, driver-provided) query
-    * table. This mirrors the reference's brute-below-threshold vs
-    * best-first split (edge_query.go:475-491).
-    */
-  def knnJoinDFStats(spark: SparkSession, points: DataFrame, queries: DataFrame,
-                     k: Int, latCol: String = "lat", lngCol: String = "lng",
-                     initialRadiusMeters: Double = 100000,
-                     tieBreakCol: String = null,
-                     maxRings: Int = 3): (DataFrame, Seq[Long], Long) = {
+              tieBreakCol: String = null): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import graft.functions.S2
-
-    def withDist(df: DataFrame): DataFrame = df.withColumn("dist_rad",
-      S2.distance(col("q_lat"), col("q_lng"), col(latCol), col(lngCol)))
-
-    val q = queries.select(col("query_id"), col("q_lat"), col("q_lng"))
-    val caches = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    val parts = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    val leftoverCounts = scala.collection.mutable.ArrayBuffer[Long]()
-
-    var angle = Earth.angleFromMeters(initialRadiusMeters)
-    var leftover = q
-    var nLeftover = -1L // lazily counted; -1 = not yet known non-zero
-    var ring = 0
-    while (ring < maxRings && nLeftover != 0L &&
-        angle <= Metric.MinWidth.value(0)) {
-      val level = Metric.MinWidth.maxLevel(angle)
-      val qCells = leftover
-        .withColumn("q_cell", S2.parent(S2.cellId(col("q_lat"), col("q_lng")), lit(level)))
-        .withColumn("cell", explode(array_union(
-          S2.neighbors(col("q_cell"), lit(level)), array(col("q_cell")))))
-        .drop("q_cell")
-      val pCells = points.withColumn("cell",
-        S2.parent(S2.cellId(col(latCol), col(lngCol)), lit(level)))
-
-      // The ring candidate set (points within r_r of a leftover query) is
-      // the join's working set — orders of magnitude smaller than the
-      // points table. Persisting it means every consumer (satisfied
-      // count, escalation check, output) reads one scan's work.
-      // DISK_ONLY: candidate blocks must never compete with execution
-      // memory (storage-pool pressure starves concurrent sorts).
-      val candidates = withDist(pCells.join(qCells, "cell"))
-        .filter(col("dist_rad") <= lit(angle))
-        .drop("cell")
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      caches += candidates
-
-      val satisfiedIds = candidates.groupBy("query_id")
-        .agg(count(lit(1)).as("n_cand"))
-        .filter(col("n_cand") >= k)
-        .select("query_id")
-      parts += candidates.join(broadcast(satisfiedIds), "query_id")
-      leftover = leftover.join(satisfiedIds, Seq("query_id"), "left_anti")
-      // escalation check: a count on the query table (small by contract)
-      nLeftover = leftover.count()
-      leftoverCounts += nLeftover
-      angle *= 4
-      ring += 1
+    import spark.implicits._
+    require(k >= 1, s"kNN join k must be at least 1, got $k")
+    val seen = new scala.collection.mutable.HashSet[Long]
+    queries.foreach { case (id, lat, lng) =>
+      require(seen.add(id), s"query id $id appears more than once; kNN query ids must be distinct")
+      require(java.lang.Double.isFinite(lat) && java.lang.Double.isFinite(lng),
+        s"query id $id has a non-finite coordinate ($lat, $lng)")
     }
-
-    // Initial radius past any ring's coverage guarantee, or rings
-    // exhausted with queries still unsatisfied: guaranteed-correct brute.
-    val bruteQueries =
-      if (nLeftover >= 0L) nLeftover else leftover.count()
-    if (bruteQueries > 0L || parts.isEmpty)
-      parts += withDist(points.crossJoin(broadcast(leftover)))
-
-    val acc = parts.reduce(_ unionByName _)
-    val order =
-      if (tieBreakCol == null) Seq(col("dist_rad").asc)
-      else Seq(col("dist_rad").asc, col(tieBreakCol).asc)
-    val w = Window.partitionBy("query_id").orderBy(order: _*)
-    val topK = acc.withColumn("knn_rank", row_number().over(w))
+    val counts = cellCounts(points, latCol, lngCol)
+    val discs = queries.map { case (id, lat, lng) =>
+      (id, lat, lng, knnJoinMeters(knnRadius(counts, lat, lng, k)))
+    }
+    val order = col("dist_rad").asc +: Option(tieBreakCol).map(col(_).asc).toSeq
+    radiusJoin(spark, points, discs, latCol, lngCol)
+      .join(broadcast(queries.toDF("query_id", "q_lat", "q_lng")), "query_id")
+      .withColumn("dist_rad",
+        graft.functions.S2.distance(col("q_lat"), col("q_lng"), col(latCol), col(lngCol)))
+      .withColumn("knn_rank",
+        row_number().over(Window.partitionBy("query_id").orderBy(order: _*)))
       .filter(col("knn_rank") <= k)
-    SpatialJoin.retireKnnCaches(caches.toSeq)
-    (topK, leftoverCounts.toSeq, bruteQueries)
-  }
-
-  // Deferred cleanup for knnJoinDF's DISK_ONLY ring caches: the current
-  // call's caches must stay alive until its lazy result is consumed, so
-  // each call retires the PREVIOUS call's blocks instead. Storage is
-  // bounded at one call's ring set per session regardless of how many
-  // kNN joins run (r2 leaked one block set per call).
-  private var lastKnnCaches: Seq[DataFrame] = Nil
-  private def retireKnnCaches(current: Seq[DataFrame]): Unit = synchronized {
-    // CacheManager dedupes by logical plan: a plan-identical repeat call
-    // SHARES the previous cache entry, and unpersisting the old handle
-    // would evict the entry the new result is about to read.
-    lastKnnCaches.foreach { old =>
-      // the previous caches may belong to a SparkContext that has since
-      // stopped (test suites recreate sessions); unpersisting a dead
-      // handle NPEs inside the block manager, and there is nothing to
-      // free there anyway
-      if (!old.sparkSession.sparkContext.isStopped &&
-          !current.exists(c => old.queryExecution.analyzed.sameResult(
-            c.queryExecution.analyzed)))
-        try old.unpersist(false) catch { case _: Exception => }
-    }
-    lastKnnCaches = current
   }
 }

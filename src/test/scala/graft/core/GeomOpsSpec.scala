@@ -2,14 +2,12 @@ package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Edge distances, polylines, polygons, hulls, multi-way intersection,
-  * snappers, and the wire codec.
+/** Edge distances, polylines, polygons, hulls, snappers, and the wire
+  * codec.
   */
 class GeomOpsSpec extends AnyFunSuite {
 
   private val paris = LatLng.toPointDegrees(48.8566, 2.3522)
-  private val london = LatLng.toPointDegrees(51.5074, -0.1278)
-  private val ny = LatLng.toPointDegrees(40.7128, -74.0060)
 
   test("edge distances: project + distance basics") {
     val a = LatLng.toPointDegrees(0, 0)
@@ -114,23 +112,6 @@ class GeomOpsSpec extends AnyFunSuite {
     for (p <- pts) {
       val nudged = ((p * 0.999999) + (c * 0.000001)).normalize
       assert(hull.containsPoint(nudged))
-    }
-  }
-
-  test("s2intersect finds pairwise overlaps") {
-    val cover = RegionCoverer(maxCells = 8)
-    val capA = Cap.fromCenterRadians(paris, Earth.angleFromMeters(300000))
-    val capB = Cap.fromCenterRadians(london, Earth.angleFromMeters(300000))
-    val capC = Cap.fromCenterRadians(ny, Earth.angleFromMeters(300000))
-    val unions = Seq(cover.covering(capA), cover.covering(capB), cover.covering(capC))
-    val found = S2Intersect.find(unions)
-    // paris and london caps graze (344 km apart, 300+300 radius overlap);
-    // ny overlaps nobody
-    assert(found.exists(i => i.regions == Set(0, 1)))
-    assert(!found.exists(i => i.regions.contains(2)))
-    // every reported covering really intersects both inputs
-    for (i <- found; r <- i.regions) {
-      assert(unions(r).intersectsUnion(i.covering))
     }
   }
 

@@ -2,46 +2,12 @@ package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Measure-kernel protocols from point_measures_test.go and
-  * centroids_test.go: quarter/half-hemisphere area sums through
-  * near-180-degree and near-degenerate edges, and the true-centroid
-  * small-triangle median property.
+/** The centroid kernel's protocol from centroids_test.go: the true
+  * centroid of a small triangle sits at its median point.
   */
 class MeasuresProtocolSpec extends AnyFunSuite {
 
   private val rng = new scala.util.Random(1618)
-  private def pt(lat: Double, lng: Double) = LatLng.toPoint(lat, lng)
-
-  test("quarter and half hemisphere areas from extreme triangles") {
-    val eps2 = 1e-14
-    val p000 = pt(0, 0)
-    val p045 = pt(0, math.Pi / 4)
-    val p180 = pt(0, math.Pi)
-    val pz = Vec3(0, 0, 1)
-    for (a <- Seq(Vec3(1, 0.1 * eps2, eps2).normalize,
-      Vec3(1, 1, eps2).normalize)) {
-      val area = PointMeasures.pointArea(a, p000, p045) +
-        PointMeasures.pointArea(a, p045, p180) +
-        PointMeasures.pointArea(a, p180, pz) +
-        PointMeasures.pointArea(a, pz, p000)
-      assert(math.abs(area - math.Pi) < 1e-12, s"quarter sphere: $area")
-    }
-    // hemisphere via one near-180-degree and one near-degenerate edge
-    for (_ <- 0 until 100) {
-      val lng = 2 * math.Pi * rng.nextDouble()
-      val p2Lng = lng + rng.nextDouble()
-      val p0 = pt(1e-20, lng)
-      val p1 = pt(0, lng)
-      val p2 = pt(0, p2Lng)
-      val p3 = pt(0, lng + math.Pi)
-      val p4 = pt(0, lng + 5.0)
-      val area = PointMeasures.pointArea(p0, p1, p2) +
-        PointMeasures.pointArea(p0, p2, p3) +
-        PointMeasures.pointArea(p0, p3, p4) +
-        PointMeasures.pointArea(p0, p4, p1)
-      assert(math.abs(area - 2 * math.Pi) <= 2e-15, s"hemisphere: $area")
-    }
-  }
 
   test("true centroid of small triangles sits at the median point") {
     for (_ <- 0 until 100) {

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 
-/** Polyline radius join vs brute-force ground truth, and the kNN join's
-  * DataFrame query side with its two-scan plan audit.
+/** Polyline radius join vs brute-force ground truth, and the kNN join
+  * against exact ground truth with its one-scan plan audit.
   */
 class PolylineJoinSpec extends AnyFunSuite {
 
@@ -61,7 +61,6 @@ class PolylineJoinSpec extends AnyFunSuite {
   }
 
   test("degenerate inputs: empty sides, tiny k-overflow, single chains") {
-    import spark.implicits._
     val one = Seq((0L, Polyline.fromLatLngsDegrees(Seq((10.0, 10.0), (10.5, 10.5)))))
     // empty B side -> empty result, no crash
     val emptyB = Seq.empty[(Long, Polyline)]
@@ -76,9 +75,8 @@ class PolylineJoinSpec extends AnyFunSuite {
       spark.read.parquet(
         graft.sources.PagesSource.pagesParquet(spark, "/root/testdata/sf0.001")))
     val total = pages.count()
-    val qDf = Seq((0L, 48.8566, 2.3522)).toDF("query_id", "q_lat", "q_lng")
-    val all = SpatialJoin.knnJoinDF(spark, pages, qDf, k = total.toInt + 10,
-      tieBreakCol = "url")
+    val all = SpatialJoin.knnJoin(spark, pages, Seq((0L, 48.8566, 2.3522)),
+      k = total.toInt + 10, tieBreakCol = "url")
     assert(all.count() === total)
 
     // overlay join with an empty side
@@ -94,22 +92,19 @@ class PolylineJoinSpec extends AnyFunSuite {
 
   test("kNN join matches exact ground truth across radii, k, and densities") {
     import spark.implicits._
-    // clustered + sparse points: some queries satisfied by the grid pass,
-    // others forced through the brute fallback
+    // clustered + sparse points: the clustered queries' radii stay small,
+    // the sparse and polar ones' grow with k
     val pts = ((0 until 400).map { i =>
       (s"p$i", 40.0 + rng.nextDouble() * 2, -74.5 + rng.nextDouble() * 2)
     } ++ (0 until 20).map { i =>
       (s"sparse$i", -20.0 + rng.nextDouble() * 40, 60.0 + rng.nextDouble() * 40)
     }).toDF("url", "lat", "lng")
     for (trial <- 0 until 4) {
-      val k = 1 + rng.nextInt(7)
-      val radius = Seq(5000.0, 50000.0, 400000.0, 3000000.0)(trial)
+      val k = Seq(1, 3, 7, 25)(trial)
       val queries = ((0 until 6).map(i =>
         (i.toLong, 40.5 + rng.nextDouble(), -74.0 + rng.nextDouble())) ++
         Seq((6L, -10.0, 70.0), (7L, 89.0, 0.0))) // sparse + polar queries
-      val got = SpatialJoin.knnJoinDF(spark, pts,
-          queries.toDF("query_id", "q_lat", "q_lng"), k,
-          initialRadiusMeters = radius, tieBreakCol = "url")
+      val got = SpatialJoin.knnJoin(spark, pts, queries, k, tieBreakCol = "url")
         .select("query_id", "url").collect()
         .map(r => (r.getLong(0), r.getString(1))).toSet
       // exact ground truth via haversine in Scala
@@ -119,41 +114,32 @@ class PolylineJoinSpec extends AnyFunSuite {
           (graft.functions.LatLngStatics.distanceDegrees(qla, qln, la, ln), u)
         }.take(k).map(t => (qid, t._1))
       }.toSet
-      assert(got === want, s"trial $trial k=$k radius=$radius")
+      assert(got === want, s"trial $trial k=$k")
     }
   }
 
-  test("kNN DataFrame query side matches the Seq API and scans points at most twice") {
-    import spark.implicits._
+  test("kNN join scans the points parquet once") {
     val pages = graft.sources.PagesSource.withLatLng(
       spark.read.parquet(
         graft.sources.PagesSource.pagesParquet(spark, "/root/testdata/sf0.001")))
     val qSeq = graft.sources.PagesSource.cities.zipWithIndex.map {
       case ((la, ln), i) => (i.toLong, la, ln)
     }
-    val fromSeq = SpatialJoin.knnJoin(spark, pages, qSeq, k = 3, tieBreakCol = "url")
-      .select("query_id", "url").collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val qDf = qSeq.toDF("query_id", "q_lat", "q_lng")
-    val df = SpatialJoin.knnJoinDF(spark, pages, qDf, k = 3, tieBreakCol = "url")
-    val fromDf = df.select("query_id", "url").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(fromSeq === fromDf)
-    assert(fromDf.size === 8 * 3)
+    val df = SpatialJoin.knnJoin(spark, pages, qSeq, k = 3, tieBreakCol = "url")
+    assert(df.select("query_id", "url").collect().length === 8 * 3)
 
-    // Plan audit: the points parquet appears in at most 2 executed file
-    // scans (grid cache fill + brute pass); other consumers read cache.
+    // Plan audit: the output's executed plan scans the points parquet
+    // once (the histogram is its own, earlier action).
     import org.apache.spark.sql.execution._
     import org.apache.spark.sql.execution.adaptive._
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     var fileScans = 0
     def walk(p: SparkPlan): Unit = p match {
       case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
       case q: QueryStageExec => walk(q.plan)
       case _: FileSourceScanExec => fileScans += 1
-      case _: InMemoryTableScanExec => () // cache reads don't rescan files
       case other => other.children.foreach(walk)
     }
     walk(df.queryExecution.executedPlan)
-    assert(fileScans <= 2, s"points scanned $fileScans times")
+    assert(fileScans === 1, s"points scanned $fileScans times")
   }
 }
