@@ -1,10 +1,11 @@
 package graft.core
 
 /** Per-loop edge index: the Spark-side analogue of the reference's
-  * ShapeIndex (/root/reference/s2/shapeindex.go:789-1143) for large
+  * shape index (s2/shapeindex.go:789-1143) for large
   * loops. The reference switches Loop.ContainsPoint from brute force to
   * an index walk above 32 vertices (loop.go:615); this index restores
-  * that sublinear refine without the full PaddedCell/edge-clipping port:
+  * that sublinear refine with rect-bound edge assignment instead of the
+  * reference's padded-cell edge clipping:
   *
   *  - Recursive cell subdivision from the 6 faces, splitting while a cell
   *    holds more than maxEdgesPerCell candidate edges (the reference's

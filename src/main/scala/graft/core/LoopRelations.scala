@@ -57,7 +57,7 @@ object WedgeRelations {
 /** Loop-pair crossing machinery: tests all boundary edge pairs of two
   * loops for interior crossings, and dispatches shared vertices to a
   * relation's wedge test (/root/reference/s2/loop.go:1726-1791,
-  * 1483-1723). The reference drives this from two ShapeIndex range
+  * 1483-1723). The reference drives this from two shape-index range
   * iterators; here candidate pruning comes from each loop's cell-bucketed
   * edge index (LoopEdgeIndex), which serves the same role.
   */

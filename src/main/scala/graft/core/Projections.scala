@@ -1,70 +1,5 @@
 package graft.core
 
-/** Sphere <-> plane projections with x-wraparound
-  * (/root/reference/s2/projections.go:24-241) plus slippy-map (XYZ) tile
-  * arithmetic built on the Mercator projection.
-  */
-sealed trait Projection extends Serializable {
-  def xWrap: Double
-  /** (lat,lng) radians -> projected (x, y). */
-  def fromLatLng(latRad: Double, lngRad: Double): (Double, Double)
-  /** projected (x, y) -> (lat,lng) radians. */
-  def toLatLng(x: Double, y: Double): (Double, Double)
-
-  def project(p: Vec3): (Double, Double) =
-    fromLatLng(LatLng.latitude(p), LatLng.longitude(p))
-  def unproject(x: Double, y: Double): Vec3 = {
-    val (lat, lng) = toLatLng(x, y)
-    LatLng.toPoint(lat, lng)
-  }
-
-  def interpolate(f: Double, ax: Double, ay: Double, bx: Double, by: Double): (Double, Double) =
-    (ax * (1 - f) + bx * f, ay * (1 - f) + by * f)
-
-  /** Wrap b's x if needed so edge a->b takes the short way around
-    * (projections.go:228-241).
-    */
-  def wrapDestination(ax: Double, bx: Double): Double =
-    if (xWrap > 0 && math.abs(bx - ax) > 0.5 * xWrap)
-      ax + math.IEEEremainder(bx - ax, xWrap)
-    else bx
-}
-
-/** Linear lat/lng projection (projections.go:76-146). */
-final case class PlateCarreeProjection(maxLng: Double) extends Projection {
-  val xWrap: Double = 2 * maxLng
-  private val fromRad = maxLng / math.Pi
-  private val toRad = math.Pi / maxLng
-
-  def fromLatLng(latRad: Double, lngRad: Double): (Double, Double) =
-    (fromRad * lngRad, fromRad * latRad)
-
-  def toLatLng(x: Double, y: Double): (Double, Double) =
-    (toRad * y, toRad * math.IEEEremainder(x, xWrap))
-}
-
-/** Spherical (Web) Mercator (projections.go:148-226). */
-final case class MercatorProjection(maxLng: Double) extends Projection {
-  val xWrap: Double = 2 * maxLng
-  private val fromRad = maxLng / math.Pi
-  private val toRad = math.Pi / maxLng
-
-  def fromLatLng(latRad: Double, lngRad: Double): (Double, Double) = {
-    val sinPhi = math.sin(latRad)
-    val y = 0.5 * math.log((1 + sinPhi) / (1 - sinPhi))
-    (fromRad * lngRad, fromRad * y)
-  }
-
-  def toLatLng(x: Double, y: Double): (Double, Double) = {
-    val lng = toRad * math.IEEEremainder(x, xWrap)
-    val k = math.exp(2 * toRad * y)
-    val lat =
-      if (k.isInfinity) math.Pi / 2
-      else math.asin((k - 1) / (k + 1))
-    (lat, lng)
-  }
-}
-
 /** Web-Mercator XYZ ("slippy map") tiles at integer zoom levels; the
   * raster side of raster<->vector tiling. Tile (x, y, z) covers an exact
   * lat/lng rectangle, which ties tiles back to S2 cell coverings.
@@ -147,40 +82,5 @@ object WebMercator {
       x += 1
     }
     out.toArray
-  }
-}
-
-/** Geodesic <-> projected edge densification
-  * (/root/reference/s2/edge_tessellator.go:15-291). Splits edges
-  * recursively until the midpoint error is within tolerance.
-  */
-final class EdgeTessellator(proj: Projection, toleranceRad: Double) extends Serializable {
-  private val tol = math.max(toleranceRad, 1e-13)
-
-  /** Append the projected form of geodesic edge (a, b) to `out`
-    * (excluding the projection of a, matching AppendProjected semantics).
-    */
-  def appendProjected(a: Vec3, b: Vec3, out: scala.collection.mutable.ArrayBuffer[(Double, Double)]): Unit = {
-    val pa = proj.project(a)
-    if (out.isEmpty) out += pa
-    val pb0 = proj.project(b)
-    val pb = (proj.wrapDestination(pa._1, pb0._1), pb0._2)
-    split(a, pa, b, pb, out)
-  }
-
-  private def split(a: Vec3, pa: (Double, Double), b: Vec3, pb: (Double, Double),
-                    out: scala.collection.mutable.ArrayBuffer[(Double, Double)]): Unit = {
-    // midpoint of geodesic vs midpoint of projected segment
-    val mid = (a + b).normalize
-    val pmidProj = proj.project(mid)
-    val pmidSeg = proj.interpolate(0.5, pa._1, pa._2, pb._1, pb._2)
-    val testPoint = proj.unproject(pmidSeg._1, pmidSeg._2)
-    if (mid.angle(testPoint) <= tol) {
-      out += pb
-    } else {
-      val pm = (proj.wrapDestination(pa._1, pmidProj._1), pmidProj._2)
-      split(a, pa, mid, pm, out)
-      split(mid, pm, b, pb, out)
-    }
   }
 }

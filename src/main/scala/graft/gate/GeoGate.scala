@@ -3,9 +3,8 @@ package graft.gate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Local
-import graft.core.{CellId, ClosestEdgeQuery, Earth, FurthestEdgeQuery, LatLng, Loop,
-  Polygon, Polyline, PolylineAlignment, PolylineShape, RegionCoverer, ShapeIndex,
-  WebMercator}
+import graft.core.{CellId, Earth, LatLng, Loop, Polygon, Polyline, PolylineAlignment,
+  RegionCoverer, WebMercator}
 import graft.functions.S2
 import graft.ops.{CrossingJoin, OverlayJoin, ShuffleSpatialJoin, SpatialJoin}
 import graft.sources.PagesSource
@@ -101,9 +100,9 @@ object GeoGate {
     Earth.angleFromMeters(300000), 4096)
 
   /** Deterministic trajectory fixtures for the edge-kNN query: 12 chains
-    * of 5 vertices seeded from the city list.
+    * of 5 (lat, lng) degree vertices seeded from the city list.
     */
-  def trajectoryLines: Seq[(Long, Polyline)] =
+  private def trajectoryLatLngs: Seq[(Long, Seq[(Double, Double)])] =
     (0 until 12).map { i =>
       val (cLat, cLng) = PagesSource.cities(i % 8)
       val rng = new scala.util.Random(1000 + i)
@@ -114,8 +113,12 @@ object GeoGate {
         lng += (rng.nextDouble() - 0.5) * 0.8
         (lat, lng)
       }
-      (i.toLong, Polyline.fromLatLngsDegrees(pts))
+      (i.toLong, pts)
     }
+
+  /** The trajectory fixtures as polylines. */
+  def trajectoryLines: Seq[(Long, Polyline)] =
+    trajectoryLatLngs.map { case (id, pts) => (id, Polyline.fromLatLngsDegrees(pts)) }
 
   /** City-center rectangles for the rect join (3x2 degrees, no wrap). */
   def cityRects: Seq[(Long, Double, Double, Double, Double)] =
@@ -202,49 +205,27 @@ object GeoGate {
   def tileCoveringCellsPath(dir: String): String =
     s"${Local.workDir}/tile_cov_cells_n${PagesSource.rowsForScale(dir)}.parquet"
 
-  /** Polylines with their ShapeIndex (shape i is line i), broadcast as
-    * one value: each executor builds the index once per broadcast, on
-    * first use, and frees it with the broadcast.
+  /** Each city center's 3 closest trajectory segments, or, at the city's
+    * antipode, its 3 farthest: the farthest point of an arc from p is the
+    * closest to -p (edge_distances.go:60-72). One SpatialJoin.knnJoin over
+    * the segments (line_id, seg_id, a, b), ranked by (distance, line_id,
+    * seg_id).
     */
-  private final class IndexedLines(val lines: Seq[(Long, Polyline)]) extends Serializable {
-    @transient lazy val index: ShapeIndex = {
-      val idx = new ShapeIndex()
-      lines.foreach { case (_, pl) => idx.add(PolylineShape(pl)) }
-      idx.iterator() // force the one-time build
-      idx
-    }
-  }
-
-  /** Each city center's 3 closest (or farthest) trajectory segments via
-    * ClosestEdgeQuery (FurthestEdgeQuery) over a broadcast ShapeIndex of
-    * the chains — the executor-local best-first access path inside a
-    * Spark query.
-    */
-  private def edgeRank(s: SparkSession, farthest: Boolean): DataFrame = {
+  private def segmentRank(s: SparkSession, antipodes: Boolean): DataFrame = {
     import s.implicits._
-    val queries = PagesSource.cities.zipWithIndex
-      .map { case ((la, ln), i) => (i.toLong, la, ln) }
-      .toDF("query_id", "q_lat", "q_lng")
-    val bc = s.sparkContext.broadcast(new IndexedLines(trajectoryLines))
-    val rankUdf = udf((lat: Double, lng: Double) => {
-      val index = bc.value.index
-      val p = LatLng.toPointDegrees(lat, lng)
-      val hits =
-        if (farthest) new FurthestEdgeQuery(index, includeInteriors = false)
-          .findFurthestEdges(FurthestEdgeQuery.PointTarget(p), 3)
-          .map(r => (r.shapeId, r.edgeId))
-        else new ClosestEdgeQuery(index, includeInteriors = false)
-          .findClosestEdges(ClosestEdgeQuery.PointTarget(p), 3)
-          .map(r => (r.shapeId, r.edgeId))
-      hits.zipWithIndex.map { case ((shapeId, edgeId), rank) =>
-        (bc.value.lines(shapeId)._1, edgeId, rank + 1)
+    val segments = trajectoryLatLngs.flatMap { case (id, pts) =>
+      pts.zip(pts.tail).zipWithIndex.map { case (((aLat, aLng), (bLat, bLng)), k) =>
+        (id, k.toLong, aLat, aLng, bLat, bLng)
       }
-    })
-    queries
-      .withColumn("hit", explode(rankUdf(col("q_lat"), col("q_lng"))))
-      .select(col("query_id"), col("hit._1").as("line_id"),
-        col("hit._2").cast("long").as("seg_id"),
-        col("hit._3").cast("long").as("rank"))
+    }.toDF("line_id", "seg_id", "a_lat", "a_lng", "b_lat", "b_lng")
+    val queries = PagesSource.cities.zipWithIndex.map { case ((la, ln), i) =>
+      if (antipodes) (i.toLong, -la, if (ln > 0) ln - 180 else ln + 180)
+      else (i.toLong, la, ln)
+    }
+    SpatialJoin.knnJoin(s, segments, queries, k = 3, "a_lat", "a_lng",
+        tieBreakCols = Seq("line_id", "seg_id"), endLatCol = "b_lat", endLngCol = "b_lng")
+      .select(col("query_id"), col("line_id"), col("seg_id"),
+        col("knn_rank").cast("long").as("rank"))
   }
 
   /** VALUES rows "(poly, idx, x, y, z)" for single-loop polygon sets. */
@@ -570,7 +551,7 @@ object GeoGate {
       val qs = PagesSource.cities.zipWithIndex.map { case ((la, ln), i) =>
         (i.toLong, la, ln)
       }
-      SpatialJoin.knnJoin(s, pages(s, dir), qs, k = 5, tieBreakCol = "url")
+      SpatialJoin.knnJoin(s, pages(s, dir), qs, k = 5, tieBreakCols = Seq("url"))
         .select(col("query_id"), col("url"))
     }, oracleSql = {
       val qVals = PagesSource.cities.zipWithIndex.map { case ((la, ln), i) =>
@@ -879,12 +860,12 @@ object GeoGate {
     }, oracleSql = pipCoastSql),
 
     // Edge kNN: for each city center, the 3 closest trajectory segments.
-    GateQuery("q_edge_knn", (s, _) => edgeRank(s, farthest = false),
+    GateQuery("q_edge_knn", (s, _) => segmentRank(s, antipodes = false),
       edgeRankSql(negateQueries = false)),
 
     // Edge FARTHEST: the max-distance mirror of q_edge_knn (diameter/
     // spread analytics access path).
-    GateQuery("q_edge_far", (s, _) => edgeRank(s, farthest = true),
+    GateQuery("q_edge_far", (s, _) => segmentRank(s, antipodes = true),
       edgeRankSql(negateQueries = true)),
 
     // Trajectory similarity: pairwise dynamic-timewarp alignment cost

@@ -6,7 +6,7 @@ import graft.core._
 
 /** Polyline x polygon crossing join: which trajectories cross which
   * polygon boundaries — the distributed analogue of the reference's
-  * CrossingEdgeQuery (crossing_edge_query.go:15-60).
+  * crossing-edge query (crossing_edge_query.go:15-60).
   *
   * The polyline side is a DataFrame (a trajectory table at any scale);
   * polygons are broadcast with a SpatialJoin.CoveringIndex of their

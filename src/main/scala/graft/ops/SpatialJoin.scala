@@ -21,7 +21,7 @@ import graft.core._
   * that Codec.decodePolygon reads.
   *
   * Architecture (SURVEY.md §3.1, replacing the reference's in-memory
-  * ShapeIndex with Spark-native access paths):
+  * shape index with Spark-native access paths):
   *
   *  - Per region, precompute a RegionCoverer covering and interior
   *    covering once (driver side, embarrassingly parallel over regions).
@@ -239,17 +239,43 @@ object SpatialJoin {
       "rect_id", latCol, lngCol)
   }
 
+  /** Fails, naming the query, unless the query ids are distinct and
+    * every centre is finite.
+    */
+  private def requireQueries(queries: Seq[(Long, Double, Double)], join: String): Unit = {
+    val seen = new scala.collection.mutable.HashSet[Long]
+    queries.foreach { case (id, lat, lng) =>
+      require(seen.add(id), s"query id $id appears more than once; $join query ids must be distinct")
+      require(java.lang.Double.isFinite(lat) && java.lang.Double.isFinite(lng),
+        s"query id $id has a non-finite coordinate ($lat, $lng)")
+    }
+  }
+
+  /** The caps of radius-join discs (id, lat, lng, radiusMeters), after
+    * requireQueries and a check that each radius is finite and not
+    * negative. A radius past half the circumference is legal: its cap is
+    * the whole sphere.
+    */
+  private def discCaps(queries: Seq[(Long, Double, Double, Double)]): Seq[(Long, Cap)] = {
+    requireQueries(queries.map(q => (q._1, q._2, q._3)), "radius join")
+    queries.map { case (id, qlat, qlng, rm) =>
+      require(rm >= 0 && rm < Double.PositiveInfinity,
+        s"query id $id has radius $rm m; a radius must be finite and not negative")
+      id -> Cap.fromCenterRadians(
+        LatLng.toPointDegrees(qlat, qlng), Earth.angleFromMeters(rm))
+    }
+  }
+
   /** Radius join: adds `query_id` for each disc (id, lat, lng,
-    * radiusMeters) containing the point.
+    * radiusMeters) containing the point. Fails fast, before any Spark
+    * job, on a repeated query id, a non-finite centre, or a NaN, negative
+    * or infinite radius.
     */
   def radiusJoin(spark: SparkSession, points: DataFrame,
                  queries: Seq[(Long, Double, Double, Double)],
                  latCol: String = "lat", lngCol: String = "lng",
                  maxCells: Int = 16): DataFrame = {
-    val caps = queries.map { case (id, qlat, qlng, rm) =>
-      id -> Cap.fromCenterRadians(
-        LatLng.toPointDegrees(qlat, qlng), Earth.angleFromMeters(rm))
-    }
+    val caps = discCaps(queries)
     val qLat = queries.map(_._2 * LatLng.DegToRad).toArray
     val qLng = queries.map(_._3 * LatLng.DegToRad).toArray
     val angle = queries.map(q => Earth.angleFromMeters(q._4)).toArray
@@ -410,13 +436,16 @@ object SpatialJoin {
     }.sum
   }
 
-  /** The kNN join's histogram: one aggregate over the points that the
-    * covering probe can match, those with a finite lat and lng. (CellId
-    * encodes a non-finite point to a corner leaf; counted, it would let a
-    * query choose a radius holding fewer than k matchable points.)
+  /** The kNN join's histogram: one aggregate over the rows that the
+    * join can match, those whose lat, lng and `endCols` (a segment's end
+    * vertex) are all finite, counted at the level-KnnLevel cell of (latCol,
+    * lngCol). (CellId encodes a non-finite point to a corner leaf;
+    * counted, it would let a query choose a radius holding fewer than k
+    * matchable rows.)
     */
-  private[ops] def cellCounts(points: DataFrame, latCol: String, lngCol: String): CellCounts = {
-    val rows = points.filter(finite(latCol) && finite(lngCol))
+  private[ops] def cellCounts(points: DataFrame, latCol: String, lngCol: String,
+                              endCols: Seq[String] = Nil): CellCounts = {
+    val rows = points.filter((latCol +: lngCol +: endCols).map(finite).reduce(_ && _))
       .groupBy(graft.functions.S2.parent(
         graft.functions.S2.cellId(col(latCol), col(lngCol)), lit(KnnLevel)))
       .count().collect()
@@ -449,53 +478,104 @@ object SpatialJoin {
     Earth.metersFromAngle(radius * (1 + KnnMargin))
 
   /** kNN join: for each query (id, lat, lng) in degrees, its k nearest
-    * points, ranked by haversine distance and then by `tieBreakCol` (when
-    * given). Adds `query_id`, `q_lat`, `q_lng`, `dist_rad` (radians) and
-    * `knn_rank` (1..k); a query with fewer than k matchable points gets
-    * them all. Points with a non-finite coordinate never match.
+    * rows, ranked by distance and then by `tieBreakCols`. Adds `query_id`,
+    * `q_lat`, `q_lng`, `dist_rad` (radians) and `knn_rank` (1..k); a query
+    * with fewer than k matchable rows gets them all. A row with a
+    * non-finite coordinate never matches.
+    *
+    * A row is a point at (latCol, lngCol), ranked by haversine distance,
+    * or, when `endLatCol` and `endLngCol` are given, the geodesic segment
+    * from (latCol, lngCol) to (endLatCol, endLngCol), ranked by
+    * EdgeDistances.distanceFromSegment, the angle to its closest point.
     *
     * The plan is the paper's cell-ring expansion with the rings counted
-    * before the join; the output scans the points once:
+    * before the join; the output scans the rows once:
     *
-    *  1. One aggregate counts the finite points per level-KnnLevel cell
-    *     (cellCounts); it is the call's only Spark action.
+    *  1. One aggregate counts the finite rows per level-KnnLevel cell of
+    *     (latCol, lngCol), a segment's first vertex (cellCounts); it is the
+    *     call's only Spark action.
     *  2. In the calling JVM (queries are small by contract), each query takes
     *     knnRadius: the smallest rung of a doubling ladder whose interior
-    *     covering holds k points, or π.
-    *  3. One radiusJoin, the broadcast covering probe, with each radius
-    *     widened by KnnMargin. It emits every point whose computed
-    *     distance is within the radius, so every point that ranks at or
-    *     before the k-th, ties included.
+    *     covering holds k rows, or π. A counted row has a point in a cell
+    *     the rung's cap contains, so it lies within the rung.
+    *  3. One join with each radius widened by KnnMargin. It emits every row
+    *     whose computed distance is within the radius, so every row that
+    *     ranks at or before the k-th, ties included. Points take
+    *     radiusJoin, the broadcast covering probe. A segment covers itself
+    *     and probes CoveringIndex.intersecting with its covering over the
+    *     caps' coverings (segmentRadiusJoin): a segment within the radius
+    *     shares a point with the cap, and that point lies in a cell of
+    *     both coverings.
     *  4. A broadcast join attaches q_lat/q_lng; a window per query keeps
-    *     the first k by (dist_rad, tieBreakCol).
+    *     the first k by (dist_rad, tieBreakCols).
     *
-    * Fails fast unless k >= 1 and the query ids are distinct and their
-    * coordinates finite.
+    * Fails fast unless k >= 1, both end columns or neither are given, and
+    * the query ids are distinct and their coordinates finite.
     */
   def knnJoin(spark: SparkSession, points: DataFrame,
               queries: Seq[(Long, Double, Double)], k: Int,
               latCol: String = "lat", lngCol: String = "lng",
-              tieBreakCol: String = null): DataFrame = {
+              tieBreakCols: Seq[String] = Nil,
+              endLatCol: String = null, endLngCol: String = null): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     require(k >= 1, s"kNN join k must be at least 1, got $k")
-    val seen = new scala.collection.mutable.HashSet[Long]
-    queries.foreach { case (id, lat, lng) =>
-      require(seen.add(id), s"query id $id appears more than once; kNN query ids must be distinct")
-      require(java.lang.Double.isFinite(lat) && java.lang.Double.isFinite(lng),
-        s"query id $id has a non-finite coordinate ($lat, $lng)")
-    }
-    val counts = cellCounts(points, latCol, lngCol)
+    require((endLatCol == null) == (endLngCol == null),
+      s"kNN join needs both segment end columns or neither, got ($endLatCol, $endLngCol)")
+    requireQueries(queries, "kNN")
+    val endCols = Option(endLatCol).toSeq ++ Option(endLngCol)
+    val counts = cellCounts(points, latCol, lngCol, endCols)
     val discs = queries.map { case (id, lat, lng) =>
       (id, lat, lng, knnJoinMeters(knnRadius(counts, lat, lng, k)))
     }
-    val order = col("dist_rad").asc +: Option(tieBreakCol).map(col(_).asc).toSeq
-    radiusJoin(spark, points, discs, latCol, lngCol)
-      .join(broadcast(queries.toDF("query_id", "q_lat", "q_lng")), "query_id")
-      .withColumn("dist_rad",
-        graft.functions.S2.distance(col("q_lat"), col("q_lng"), col(latCol), col(lngCol)))
+    val order = col("dist_rad").asc +: tieBreakCols.map(col(_).asc)
+    val qs = broadcast(queries.toDF("query_id", "q_lat", "q_lng"))
+    val ranked =
+      if (endCols.nonEmpty)
+        segmentRadiusJoin(spark, points, discs, latCol +: lngCol +: endCols).join(qs, "query_id")
+      else
+        radiusJoin(spark, points, discs, latCol, lngCol).join(qs, "query_id")
+          .withColumn("dist_rad",
+            graft.functions.S2.distance(col("q_lat"), col("q_lng"), col(latCol), col(lngCol)))
+    ranked
       .withColumn("knn_rank",
         row_number().over(Window.partitionBy("query_id").orderBy(order: _*)))
       .filter(col("knn_rank") <= k)
+  }
+
+  /** knnJoin's join for segment rows: adds `query_id` and `dist_rad` for
+    * each disc within whose radius the segment from (coordCols(0),
+    * coordCols(1)) to (coordCols(2), coordCols(3)) passes. The discs'
+    * caps are broadcast in a CoveringIndex; each row covers its 2-vertex
+    * Polyline and refines the caps whose covering meets its own with
+    * EdgeDistances.distanceFromSegment.
+    */
+  private def segmentRadiusJoin(spark: SparkSession, segments: DataFrame,
+                                discs: Seq[(Long, Double, Double, Double)],
+                                coordCols: Seq[String]): DataFrame = {
+    val caps = discCaps(discs)
+    val bc = spark.sparkContext.broadcast((
+      indexByPosition(polygonCoverings(caps, maxCells = 16)),
+      caps.map(_._1).toArray,
+      caps.map(_._2.center).toArray,
+      discs.map(d => Earth.angleFromMeters(d._4)).toArray))
+    val hits = udf((lat: Double, lng: Double, endLat: Double, endLng: Double) => {
+      val (index, ids, centers, angles) = bc.value
+      if (!Seq(lat, lng, endLat, endLng).forall(java.lang.Double.isFinite)) Seq.empty[(Long, Double)]
+      else {
+        val a = LatLng.toPointDegrees(lat, lng)
+        val b = LatLng.toPointDegrees(endLat, endLng)
+        index.intersecting(RegionCoverer().covering(new Polyline(Array(a, b)))).toSeq.flatMap { r =>
+          val pos = r.toInt
+          val d = EdgeDistances.distanceFromSegment(centers(pos), a, b)
+          if (d <= angles(pos)) Some((ids(pos), d)) else None
+        }
+      }
+    })
+    segments
+      .withColumn("knn_hit", explode(hits(coordCols.map(col): _*)))
+      .withColumn("query_id", col("knn_hit._1"))
+      .withColumn("dist_rad", col("knn_hit._2"))
+      .drop("knn_hit")
   }
 }

@@ -2,69 +2,14 @@ package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Distance-target protocols from min/max_distance_targets_test.go over
-  * our target types: update-when-equal must fail (strict improvement
-  * semantics on both sides), the max goldens (point-to-point 1 degree,
-  * edge targets with far endpoints, antipodal cells/edges at Straight),
-  * and the containing-shapes protocol (only the shapes whose interior
-  * holds the (antipodal) target report).
+/** The point-rotation protocol from the distance-target suite
+  * (TestPointRotate): rotating a point about an axis keeps it unit length
+  * and keeps its angle to the axis, down to near-zero and near-pi
+  * distances and angles. It exercises Vec3.rotate and
+  * EdgeDistances.interpolateAtDistance, the kernels that survive the
+  * removal of the closest/furthest edge queries and their targets.
   */
 class DistanceTargetsProtocolSpec extends AnyFunSuite {
-
-  private def pt(lat: Double, lng: Double) = LatLng.toPointDegrees(lat, lng)
-  private def degOf(chord2: Double) = math.toDegrees(ChordAngle.toRadians(chord2))
-
-  test("min targets: updating with an equal distance fails") {
-    val t = ClosestEdgeQuery.PointTarget(pt(1, 0))
-    val (d1, ok1) = t.updateMinDistance(pt(0, -1), pt(0, 1), ChordAngle.Straight + 1)
-    assert(ok1)
-    val (_, ok2) = t.updateMinDistance(pt(0, -1), pt(0, 1), d1)
-    assert(!ok2, "equal distance must not update")
-    // same for edge and cell targets
-    val et = ClosestEdgeQuery.EdgeTarget(pt(1, 0), pt(1, 1))
-    val (de, oke1) = et.updateMinDistance(pt(0, -1), pt(0, 1), ChordAngle.Straight + 1)
-    assert(oke1)
-    assert(!et.updateMinDistance(pt(0, -1), pt(0, 1), de)._2)
-    val ct = ClosestEdgeQuery.CellTarget(
-      Cell.fromId(CellId.parent(CellId.fromLatLngDegrees(0, 1), 10)))
-    val (dc, okc1) = ct.updateMinDistance(pt(0, -1), pt(0, 1), ChordAngle.Straight + 1)
-    assert(okc1)
-    assert(!ct.updateMinDistance(pt(0, -1), pt(0, 1), dc)._2)
-  }
-
-  test("max point target goldens (UpdateDistance)") {
-    val t = FurthestEdgeQuery.PointTarget(pt(0, 0))
-    // to a point (degenerate edge): 1 degree
-    val (d1, ok1) = t.updateMaxDistance(pt(1, 0), pt(1, 0), 0.0)
-    assert(ok1 && math.abs(degOf(d1) - 1.0) < 1e-12)
-    // against a larger prior max, no update
-    val big = { val s = math.sin(math.toRadians(10) / 2); 4 * s * s }
-    assert(!t.updateMaxDistance(pt(1, 0), pt(1, 0), big)._2)
-    // to the edge 0:-1 .. 0:1: 1 degree (endpoints are the farthest)
-    val (d2, ok2) = t.updateMaxDistance(pt(0, -1), pt(0, 1), 0.0)
-    assert(ok2 && math.abs(degOf(d2) - 1.0) < 1e-12)
-    // equal update fails
-    assert(!t.updateMaxDistance(pt(0, -1), pt(0, 1), d2)._2)
-  }
-
-  test("max edge target goldens incl. antipodal edge at Straight") {
-    val t = FurthestEdgeQuery.EdgeTarget(pt(0, -1), pt(0, 1))
-    // to point 0:2 (degenerate edge): farthest endpoint is 0:-1 -> 3 deg
-    val (d1, ok1) = t.updateMaxDistance(pt(0, 2), pt(0, 2), 0.0)
-    assert(ok1 && math.abs(degOf(d1) - 3.0) < 1e-12)
-    // the antipodal-crossing case reaches exactly Straight
-    val ta = FurthestEdgeQuery.EdgeTarget(pt(0, 89), pt(0, 91))
-    val (d2, ok2) = ta.updateMaxDistance(pt(1, -90), pt(-1, -90), 0.0)
-    assert(ok2 && d2 === ChordAngle.Straight)
-  }
-
-  test("max cell target: antipodal cell at Straight") {
-    val cell = Cell.fromId(CellId.fromLatLngDegrees(0, 0))
-    val t = FurthestEdgeQuery.CellTarget(cell)
-    val anti = Cell.fromId(CellId.fromPoint(-cell.center.x, -cell.center.y,
-      -cell.center.z))
-    assert(t.maxDistanceToCell(anti) === ChordAngle.Straight)
-  }
 
   test("rotate preserves axis distance at extreme angles (TestPointRotate)") {
     val rng = new scala.util.Random(999)
@@ -87,26 +32,5 @@ class DistanceTargetsProtocolSpec extends AnyFunSuite {
       assert(math.abs(got.angle(axis) - p.angle(axis)) <= 1e-15,
         s"axis distance must be preserved (d=$distance a=$angle)")
     }
-  }
-
-  test("containing shapes: only interiors holding the target report") {
-    // shapes: 0 = point 1:1, 1 = polyline, 2 = triangle containing 1:1,
-    // 3 = far triangle, 4 = bigger triangle containing 1:1
-    val index = new ShapeIndex()
-    index.add(PointVectorShape(Array(pt(1, 1))))
-    index.add(PolylineShape(Polyline.fromLatLngsDegrees(Seq((1, 1), (2, 2)))))
-    index.add(LoopShape(Loop.parse("0:0, 0:3, 3:0")))
-    index.add(LoopShape(Loop.parse("6:6, 6:9, 9:6")))
-    index.add(LoopShape(Loop.parse("0:0, 0:4, 4:0")))
-    // min side: shapes containing the target point itself
-    val q = new ContainsPointQuery(index, VertexModel.SemiOpen)
-    assert(q.containingShapes(pt(1, 1)) === Seq(2, 4))
-    // max side: shapes containing the ANTIPODE of the target point get
-    // the interior hit at Straight (FurthestEdgeQuery semantics)
-    val far = new FurthestEdgeQuery(index, includeInteriors = true)
-    val rs = far.findFurthestEdges(
-      FurthestEdgeQuery.PointTarget(pt(1, 1) * -1), 10)
-    assert(rs.filter(_.edgeId == -1).map(_.shapeId) === Seq(2, 4))
-    assert(rs.filter(_.edgeId == -1).forall(_.distance == ChordAngle.Straight))
   }
 }

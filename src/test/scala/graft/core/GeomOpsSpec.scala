@@ -2,9 +2,7 @@ package graft.core
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Edge distances, polylines, polygons, hulls, snappers, and the wire
-  * codec.
-  */
+/** Edge distances, polylines, polygons, snappers, and the wire codec. */
 class GeomOpsSpec extends AnyFunSuite {
 
   private val paris = LatLng.toPointDegrees(48.8566, 2.3522)
@@ -59,60 +57,6 @@ class GeomOpsSpec extends AnyFunSuite {
     // area = shell - hole
     val expected = shell.area - hole.area
     assert(math.abs(poly.area - expected) < 1e-9)
-  }
-
-  test("convex hull contains all points") {
-    val rng = new scala.util.Random(42)
-    val pts = Seq.fill(100)(
-      LatLng.toPointDegrees(40 + rng.nextDouble() * 5, -74 + rng.nextDouble() * 5))
-    val hull = ConvexHull.hullLoop(pts)
-    assert(hull.numVertices >= 3)
-    for (p <- pts) {
-      // hull must contain every input point (boundary counts: use a tiny
-      // inward nudge via the centroid for strict tests)
-      val c = hull.centroidTimesArea.normalize
-      val nudged = ((p * 0.999999) + (c * 0.000001)).normalize
-      assert(hull.containsPoint(nudged))
-    }
-    // hull of the hull's vertices is the same hull
-    val again = ConvexHull.hull(hull.vertices.toSeq)
-    assert(again.length === hull.numVertices)
-  }
-
-  test("convex hull excludes interior points on wide spreads") {
-    // ADVICE r1 counterexample: under a raw lexicographic sort the chain
-    // invariant broke for 60-90 degree spreads and this interior point
-    // survived into the hull.
-    val a = Vec3(0.6, 0, 0.8).normalize
-    val b = Vec3(-0.3, 0.5, 0.81).normalize
-    val c = Vec3(-0.3, -0.5, 0.81).normalize
-    val inner = Vec3(-0.34, 0, 0.94).normalize
-    val hull = ConvexHull.hullLoop(Seq(a, b, c, inner))
-    assert(hull.numVertices === 3, s"interior point must not survive: " +
-      hull.vertices.mkString(","))
-    assert(hull.vertices.toSet === Set(a, b, c))
-    // CCW-convex: every consecutive turn is counterclockwise
-    for (i <- 0 until hull.numVertices) {
-      assert(Predicates.robustSign(hull.vertex(i), hull.vertex(i + 1),
-        hull.vertex(i + 2)) === Predicates.CounterClockwise)
-    }
-    assert(hull.containsPoint(inner))
-  }
-
-  test("convex hull on a wide random spread is convex and covering") {
-    val rng = new scala.util.Random(7)
-    val pts = Seq.fill(200)(
-      LatLng.toPointDegrees(-20 + rng.nextDouble() * 70, -120 + rng.nextDouble() * 80))
-    val hull = ConvexHull.hullLoop(pts)
-    for (i <- 0 until hull.numVertices) {
-      assert(Predicates.robustSign(hull.vertex(i), hull.vertex(i + 1),
-        hull.vertex(i + 2)) === Predicates.CounterClockwise)
-    }
-    val c = hull.centroidTimesArea.normalize
-    for (p <- pts) {
-      val nudged = ((p * 0.999999) + (c * 0.000001)).normalize
-      assert(hull.containsPoint(nudged))
-    }
   }
 
   test("snappers: determinism and radius bounds") {

@@ -3,31 +3,8 @@ package graft.core
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 
-/** Projection and tiling semantics (/root/reference/s2/projections.go,
-  * edge_tessellator.go).
-  */
+/** Web-Mercator tiling semantics. */
 class ProjectionSpec extends AnyFunSuite {
-
-  test("mercator round trip") {
-    val proj = MercatorProjection(180)
-    val rng = new Random(42)
-    for (_ <- 0 until 1000) {
-      val lat = (rng.nextDouble() * 170 - 85) * LatLng.DegToRad
-      val lng = (rng.nextDouble() * 360 - 180) * LatLng.DegToRad
-      val (x, y) = proj.fromLatLng(lat, lng)
-      val (lat2, lng2) = proj.toLatLng(x, y)
-      assert(math.abs(lat - lat2) < 1e-12)
-      assert(math.abs(lng - lng2) < 1e-12)
-    }
-  }
-
-  test("plate carree round trip and wrap") {
-    val proj = PlateCarreeProjection(180)
-    val (x, y) = proj.fromLatLng(0.5, 1.0)
-    val (lat2, lng2) = proj.toLatLng(x, y)
-    assert(math.abs(lat2 - 0.5) < 1e-12 && math.abs(lng2 - 1.0) < 1e-12)
-    assert(proj.wrapDestination(179.0, -179.0) === 181.0)
-  }
 
   test("tile indices: known anchors") {
     // zoom 0: everything in tile (0,0)
@@ -83,28 +60,6 @@ class ProjectionSpec extends AnyFunSuite {
       val a = (WebMercator.tileX(ln, 12), WebMercator.tileY(la, 12))
       val b = (WebMercator.tileX(ln, 12), WebMercator.tileY(la, 12))
       assert(a === b)
-    }
-  }
-
-  test("tessellator: projected mercator edge within tolerance") {
-    val proj = MercatorProjection(180)
-    val tol = Earth.angleFromMeters(10) // 10 m
-    val tess = new EdgeTessellator(proj, tol)
-    val a = LatLng.toPointDegrees(40, -70)
-    val b = LatLng.toPointDegrees(45, 10)
-    val out = scala.collection.mutable.ArrayBuffer[(Double, Double)]()
-    tess.appendProjected(a, b, out)
-    assert(out.length >= 3) // long edge must be subdivided
-    // every adjacent projected midpoint is close to the geodesic
-    for (i <- 0 until out.length - 1) {
-      val (x1, y1) = out(i)
-      val (x2, y2) = out(i + 1)
-      val mid = proj.unproject((x1 + x2) / 2, (y1 + y2) / 2)
-      // midpoint of chord should be within ~tolerance of the great circle
-      val c1 = proj.unproject(x1, y1)
-      val c2 = proj.unproject(x2, y2)
-      val n = c1.cross(c2).normalize
-      assert(math.abs(n.dot(mid)) < 10 * tol)
     }
   }
 }

@@ -295,19 +295,19 @@ class ShapeIndexIncrementalSpec extends AnyFunSuite {
       assert(incQ.containingShapes(p).map(map) === freshQ.containingShapes(p),
         s"containment mismatch at $p")
     }
-    // closest-edge results match too (forced best-first path)
-    val incC = new ClosestEdgeQuery(inc, includeInteriors = false,
-      maxBruteForceEdges = 8)
-    val freshC = new ClosestEdgeQuery(fresh, includeInteriors = false,
-      maxBruteForceEdges = 8)
+    // edge crossings match too (walks the updated index cells)
+    val incX = new CrossingEdgeQuery(inc)
+    val freshX = new CrossingEdgeQuery(fresh)
     for (_ <- 0 until 100) {
-      val t = ClosestEdgeQuery.PointTarget(LatLng.toPointDegrees(
-        38.5 + rng.nextDouble() * 4, -76.5 + rng.nextDouble() * 5))
-      val got = incC.findClosestEdges(t, 3)
-        .map(r => (map(r.shapeId), r.edgeId, r.distance))
-      val want = freshC.findClosestEdges(t, 3)
-        .map(r => (r.shapeId, r.edgeId, r.distance))
-      assert(got === want)
+      val a = LatLng.toPointDegrees(38.5 + rng.nextDouble() * 4,
+        -76.5 + rng.nextDouble() * 5)
+      val b = LatLng.toPointDegrees(38.5 + rng.nextDouble() * 4,
+        -76.5 + rng.nextDouble() * 5)
+      val got = incX.crossingsEdgeMap(a, b, CrossingType.All)
+        .map { case (id, es) => map(id) -> es.sorted }
+      val want = freshX.crossingsEdgeMap(a, b, CrossingType.All)
+        .map { case (id, es) => id -> es.sorted }
+      assert(got === want, s"crossing mismatch for $a-$b")
     }
   }
 }

@@ -78,7 +78,7 @@ class KnnRingSpec extends AnyFunSuite {
 
   test("ring results equal the brute-force reference") {
     for (k <- Seq(1, 3, 6)) {
-      val got = keyed(SpatialJoin.knnJoin(spark, points, queries, k, tieBreakCol = "url"))
+      val got = keyed(SpatialJoin.knnJoin(spark, points, queries, k, tieBreakCols = Seq("url")))
       assert(got == bruteTopK(pointRows, queries, k), s"k = $k")
       // every query got exactly k rows
       assert(got.groupBy(_._1).map { case (q, rows) => q -> rows.size } ==
@@ -115,7 +115,7 @@ class KnnRingSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       drain()
-      val df = SpatialJoin.knnJoin(spark, fromFile, queries, k = 3, tieBreakCol = "url")
+      val df = SpatialJoin.knnJoin(spark, fromFile, queries, k = 3, tieBreakCols = Seq("url"))
       assert(drain() == 1, "the call runs the histogram and nothing else")
       assert(keyed(df) == bruteTopK(pointRows, queries, 3))
       assert(drain() == 1, "the output runs as one action")
@@ -215,7 +215,7 @@ class KnnRingSpec extends AnyFunSuite {
       .zipWithIndex.map { case ((la, ln), i) => (100L - 7 * i, la, ln) }
     val finiteCount = clusters.size + ring.size
     for (k <- Seq(1, 4, finiteCount + 5))
-      assert(keyed(SpatialJoin.knnJoin(spark, pts, qs, k, tieBreakCol = "url")) ==
+      assert(keyed(SpatialJoin.knnJoin(spark, pts, qs, k, tieBreakCols = Seq("url"))) ==
         bruteTopK(rows, qs, k), s"k = $k")
 
     // a query whose only points lie near its antipode
@@ -223,6 +223,6 @@ class KnnRingSpec extends AnyFunSuite {
       (s"far_$i", 40.0 + rng.nextDouble() - 0.5, -100.0 + rng.nextDouble() - 0.5))
     val farQuery = Seq((1L, -40.0, 80.0))
     assert(keyed(SpatialJoin.knnJoin(spark, farRows.toDF("url", "lat", "lng"), farQuery, 3,
-      tieBreakCol = "url")) == bruteTopK(farRows, farQuery, 3))
+      tieBreakCols = Seq("url"))) == bruteTopK(farRows, farQuery, 3))
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.CheckpointedPipeline
 
-/** Skew-aware partitioning + checkpoint/resume behavior. */
+/** Checkpoint/resume behavior over a skewed pages fixture. */
 class PartitionPipelineSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSession.builder()
@@ -19,39 +19,7 @@ class PartitionPipelineSpec extends AnyFunSuite {
     val p = graft.sources.PagesSource.withLatLng(
       spark.read.parquet(
         graft.sources.PagesSource.pagesParquet(spark, "/root/testdata/sf0.001")))
-    p.withColumn("cell_id",
-      graft.functions.S2.cellId(col("lat"), col("lng")))
-      .withColumn("row_salt", xxhash64(col("url")))
-  }
-
-  test("adaptive plan splits hot cells and bounds bucket size") {
-    val df = skewedPages
-    val n = df.count()
-    val plan = CellPartitioner.plan(df, "cell_id", coarseLevel = 2,
-      maxLevel = 10, targetRows = n / 10)
-    assert(plan.cells.length > 8, "hot city cells should force refinement")
-    // buckets from the plan: no bucket exceeds ~2x target on the same data
-    val bc = spark.sparkContext.broadcast(plan)
-    val bucket = udf((c: Long, s: Long) => bc.value.bucketOf(c, s))
-    val counts = df.withColumn("b", bucket(col("cell_id"), col("row_salt")))
-      .groupBy("b").count().collect().map(_.getLong(1))
-    assert(counts.max <= 2 * math.max(1, n / 10),
-      s"max bucket ${counts.max} exceeds 2x target ${n / 10}")
-    // every row lands in a bucket
-    assert(counts.sum === n)
-  }
-
-  test("salted repartition balances partitions under skew") {
-    val df = skewedPages
-    val repart = CellPartitioner.repartitionSpatially(df, "cell_id", "row_salt",
-      coarseLevel = 2, maxLevel = 10)
-    val sizes = repart.groupBy(spark_partition_id().as("pid")).count()
-      .collect().map(_.getLong(1))
-    assert(sizes.length >= 2)
-    // the largest partition is within 8x of the mean (vs unbounded for
-    // plain hash-by-city-cell on 80/20 skew)
-    val mean = sizes.sum.toDouble / sizes.length
-    assert(sizes.max <= 8 * mean, s"max ${sizes.max} vs mean $mean")
+    p.withColumn("cell_id", graft.functions.S2.cellId(col("lat"), col("lng")))
   }
 
   test("checkpointed pipeline resumes: completed chunks skipped, results identical") {

@@ -76,18 +76,19 @@ class PolylineJoinSpec extends AnyFunSuite {
         graft.sources.PagesSource.pagesParquet(spark, "/root/testdata/sf0.001")))
     val total = pages.count()
     val all = SpatialJoin.knnJoin(spark, pages, Seq((0L, 48.8566, 2.3522)),
-      k = total.toInt + 10, tieBreakCol = "url")
+      k = total.toInt + 10, tieBreakCols = Seq("url"))
     assert(all.count() === total)
 
     // overlay join with an empty side
     val onePoly = graft.gate.GeoGate.overlayPolysA.take(1)
     assert(OverlayJoin.polygonOverlapJoin(spark, onePoly, Nil).count() === 0)
 
-    // ClosestEdgeQuery over an empty index
-    val emptyIndex = new graft.core.ShapeIndex()
-    val q = new graft.core.ClosestEdgeQuery(emptyIndex)
-    assert(q.findClosestEdges(graft.core.ClosestEdgeQuery.PointTarget(
-      LatLng.toPointDegrees(0, 0)), 3).isEmpty)
+    // segment kNN over an empty table
+    import spark.implicits._
+    val noSegments = Seq.empty[(Long, Double, Double, Double, Double)]
+      .toDF("seg_id", "a_lat", "a_lng", "b_lat", "b_lng")
+    assert(SpatialJoin.knnJoin(spark, noSegments, Seq((0L, 0.0, 0.0)), k = 3,
+      "a_lat", "a_lng", Seq("seg_id"), "b_lat", "b_lng").count() === 0)
   }
 
   test("kNN join matches exact ground truth across radii, k, and densities") {
@@ -104,7 +105,7 @@ class PolylineJoinSpec extends AnyFunSuite {
       val queries = ((0 until 6).map(i =>
         (i.toLong, 40.5 + rng.nextDouble(), -74.0 + rng.nextDouble())) ++
         Seq((6L, -10.0, 70.0), (7L, 89.0, 0.0))) // sparse + polar queries
-      val got = SpatialJoin.knnJoin(spark, pts, queries, k, tieBreakCol = "url")
+      val got = SpatialJoin.knnJoin(spark, pts, queries, k, tieBreakCols = Seq("url"))
         .select("query_id", "url").collect()
         .map(r => (r.getLong(0), r.getString(1))).toSet
       // exact ground truth via haversine in Scala
@@ -125,7 +126,7 @@ class PolylineJoinSpec extends AnyFunSuite {
     val qSeq = graft.sources.PagesSource.cities.zipWithIndex.map {
       case ((la, ln), i) => (i.toLong, la, ln)
     }
-    val df = SpatialJoin.knnJoin(spark, pages, qSeq, k = 3, tieBreakCol = "url")
+    val df = SpatialJoin.knnJoin(spark, pages, qSeq, k = 3, tieBreakCols = Seq("url"))
     assert(df.select("query_id", "url").collect().length === 8 * 3)
 
     // Plan audit: the output's executed plan scans the points parquet

@@ -53,35 +53,4 @@ class CellClusteredWriteSpec extends AnyFunSuite {
     assert(filesTouched <= 2,
       s"clustered range scan touched $filesTouched of ${ranges.length} files")
   }
-
-  test("region union: coverings and containment over disjoint members") {
-    import graft.core._
-    val capA = Cap.fromCenterRadians(
-      LatLng.toPointDegrees(40.7, -74.0), Earth.angleFromMeters(50000))
-    val capB = Cap.fromCenterRadians(
-      LatLng.toPointDegrees(48.86, 2.35), Earth.angleFromMeters(50000))
-    val u = RegionUnion(Seq(capA, capB))
-    assert(u.containsPoint(LatLng.toPointDegrees(40.7, -74.0)))
-    assert(u.containsPoint(LatLng.toPointDegrees(48.86, 2.35)))
-    assert(!u.containsPoint(LatLng.toPointDegrees(0.0, 0.0)))
-    val cov = RegionCoverer(maxCells = 16).covering(u)
-    // the covering must contain both members' centers
-    assert(cov.containsCellId(CellId.fromLatLngDegrees(40.7, -74.0)))
-    assert(cov.containsCellId(CellId.fromLatLngDegrees(48.86, 2.35)))
-  }
-
-  test("id-set lexicon: dedup, implicit singletons, round trips") {
-    import graft.core._
-    val lex = new IdSetLexicon
-    assert(lex.add(Seq.empty) === lex.EmptySetId)
-    assert(lex.add(Seq(7)) === 7)
-    val a = lex.add(Seq(3, 1, 2, 3))
-    assert(lex.idSet(a) === Seq(1, 2, 3))
-    assert(lex.add(Seq(1, 2, 3)) === a, "duplicate sets share an id")
-    val b = lex.add(Seq(4, 5))
-    assert(b !== a)
-    assert(lex.idSet(b) === Seq(4, 5))
-    assert(lex.idSet(lex.EmptySetId) === Seq.empty)
-    assert(lex.idSet(9) === Seq(9))
-  }
 }
